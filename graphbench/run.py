@@ -16,6 +16,7 @@ import os
 import resource
 import shutil
 import sys
+import tempfile
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -64,8 +65,11 @@ def _jobs_started(spark) -> int:
 def _session(work: str, trace: bool):
     for d in ("tmp", "spark-local", "eventlog"):
         os.makedirs(os.path.join(work, d), exist_ok=True)
-    os.environ["TMPDIR"] = os.path.join(work, "tmp")
+    # keep every file the run writes inside its work directory: Python and
+    # JVM temp files, Spark's scratch space, and no hsperfdata in /tmp
+    tempfile.tempdir = os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     # a fixed-size heap: the JVM's resident set then does not depend on
     # when G1 decides to grow the heap
     os.environ["SPARK_DRIVER_MEMORY"] = HEAP
@@ -73,7 +77,7 @@ def _session(work: str, trace: bool):
 
     conf = {
         "spark.ui.showConsoleProgress": "false",
-        "spark.driver.extraJavaOptions": f"-Xms{HEAP} -Djava.io.tmpdir={work}/tmp",
+        "spark.driver.extraJavaOptions": f"-Xms{HEAP} -XX:-UsePerfData -Djava.io.tmpdir={work}/tmp",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
     }
     if trace:
