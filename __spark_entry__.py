@@ -1,328 +1,30 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query registry and driver contract (PySpark target).
 
-Every ``queries()`` entry routes through the engine
-(``tundradb_spark.Database`` + ``Query``) over the graph mapping of the
-driver's TPC-H-ish tables (``tundradb_spark/graphs/tpch.py``), exercising
-the operator inventory of SURVEY.md §2; ``oracle_sql()`` holds the DuckDB
-equivalent with IDENTICAL output column names.
+Every registered query routes through the engine (``tundradb_spark.Database``
++ ``Query``, or the pipeline operators) over the driver's TPC-H-ish tables
+(``tundradb_spark/graphs/tpch.py``), exercising the operator inventory of
+SURVEY.md §2.  Its DuckDB oracle returns the same rows with IDENTICAL output
+column names.
+
+Registry: ``QUERIES`` maps every query name to its function and ``ORACLES``
+maps it to its oracle SQL; the pipeline rows come in from
+``pipeline.queries.PIPELINE_QUERIES`` / ``PIPELINE_ORACLES``.  The driver
+checks exactly 50 rows, the ``SEATED`` tuple in this module's driver-contract
+section, in the order ``queries()`` / ``oracle_sql()`` return them.  Every other
+registered query is parked (``parked_queries()`` / ``parked_oracle_sql()``)
+and re-checked against DuckDB by tests/test_parked_oracles.py, so parking
+costs a driver row, never verification.  Seating or parking a row means
+editing ``SEATED``; tests/test_contract.py and tests/test_seating_contract.py
+pin the registry's invariants.
+
+Merged rows: same-shaped operators share one row via a tag-union that keeps
+every original output column (e.g. ``q_outer_joins`` = left+right+full,
+``q_multimodal`` = meta+frames+decode), so the driver's order-insensitive
+value hash covers every branch.
 
 Float determinism: monetary SUMs go through ``cast decimal(18,2)`` on both
 sides so results are exact and partition-order independent, then cast back
 to double for a type-stable comparison.
-
-50-slot rotation policy (round-4 verdict items 1 & 7)
------------------------------------------------------
-The driver verifies only the FIRST 50 ``queries()`` entries, so the
-registry is curated to EXACTLY 50 oracle-bearing rows.  To free slots
-without losing verification surface:
-
-* **Merged rows** — same-shaped operators share one slot via a tag-union
-  that preserves every original output column (``q_outer_joins`` =
-  left+right+full, ``q_semi_anti``, ``q_set_ops``, ``q_text_profile`` =
-  tokens+lang+fingerprint+winnowing, ``q_text_scores`` =
-  repetition+lm+DSIR, ``q_multimodal`` = meta+frames+decode,
-  ``q_text_quality`` = blended score+Gopher rules, ``q_chunking`` =
-  chunks+sequence packing, ``q_sample_stratified`` = strat+token-budget
-  mixtures, ``q_dedup_exact`` = summary+segment strip, ``q_dedup_embed``
-  = pairs+diversity prune+JL projection, ``q_pii_scan`` =
-  counts+redaction, ``q_pagerank`` = ranks+triangle counts+personalized
-  PageRank, ``q_bfs_levels`` = levels+weighted SSSP, ``q_dup_clusters``
-  = connected components+label-propagation communities,
-  ``q_dedup_apply`` = min-id+best-quality canonicals, and
-  ``q_text_scores`` additionally carries the Gumbel-top-k resample
-  branch).  The driver's
-  order-insensitive value hash covers each branch's full row set, so
-  every merged operator stays exactly as verified as when it held its
-  own slot.
-* **Parked rows** (``PARKED_QUERIES`` / ``PARKED_ORACLES``) — still
-  oracle-bearing and re-checked against DuckDB every CI run by
-  tests/test_parked_oracles.py (parking costs a driver row, never
-  verification).
-
-**Round-6 rotation** (r5 verdict item 1): the 20 operators added in r5
-with exact oracles but no driver row ever (sketches, bigram LM,
-vocab/encode, weighted sample, time-series rollup/resample ×2, histogram
-quantiles, clustering coefficients, HITS, decontaminate, dup spans,
-TF-IDF, z-order, incremental dedup, ANN recall gauge) are SEATED this
-round — see the ``_SEAT_R6`` / ``_PARK_R6`` blocks here and in
-pipeline/queries.py.  Parked in exchange, all driver-green r3-r5 and
-frozen since: q_edge_props, q_branching, q_topk, q_map_access,
-q_edge_count, q_semi_anti, q_window_topk, q_set_ops, q_asof_join,
-q_range_join, q_temporal_asof, q_shared_alias, q_sessionize, q_show,
-q_ql_analytics, q_quantiles, q_dedup_simhash, q_dedup_ngram_capped,
-q_ann_topk, q_ann_ivf (the last two additionally stay driver-verified
-THROUGH the seated q_ann_recall, which unions both into its gauge).
-Previously-parked redundancies stay parked: q_bucketed_match
-(result-identical to q_inner_join), q_stream_join (≡ q_range_join),
-q_temporal_before (complement of q_temporal_asof), q_dedup_ngram
-(subsumed by q_dedup_ngram_capped), q_ql_match (same parser path as
-q_ql_analytics), and the single-operator halves of the merged rows.
-New r6 operators joined PARKED (window was full): q_corpus_report
-(composition oracle), q_domain_cap (per-key quota), q_moving_agg
-(trailing RANGE-window aggregates), q_time_twa (time-weighted average),
-q_lttb (LTTB downsampling), q_split (train/val/test corpus split),
-q_ann_pq_trained (Lloyd-trained codebooks, exact-degradation oracle),
-q_ann_batch / q_ann_lsh_batch (whole-query-set ANN, broadcast co-join
-plans) — every one oracle-bearing and CI-checked like the rest.
-
-**Round-7 rotation** (r6 verdict item 2): those 9 never-driver-checked
-r6 operators are SEATED this round (``_SEAT_R7`` / ``_PARK_R7`` at the
-bottom of this module — the rotation runs AFTER their definitions).
-Parked in exchange, all first-green in r6 and frozen since:
-q_hll_distinct, q_hll_intersect, q_cm_counts, q_bloom_semi, q_text_lm2,
-q_weighted_sample, q_vocab, q_zorder, q_tfidf.  q_encode stays seated —
-its r6 row was red on harness shape (raw array column) and needs its
-first green with the r7 ids_md5 digest.  New r7 operators join PARKED
-(window full; seatable next rotation): q_bpe / q_bpe_segment (BPE
-merge-rule induction + segmentation, unrolled-iteration oracles),
-q_cdc_chunks (content-defined chunking, rolling-hash boundaries),
-q_temperature (temperature-scaled domain mixture), q_ewma
-(truncated-FIR EWMA smoothing), q_semantic_dedup
-(SemDeDup-style within-cell cosine pruning), q_fuzzy_pairs (q-gram
-prefiltered Levenshtein entity resolution, brute-force oracle),
-q_typed_map (VARIANT
-property maps — the reference's map<utf8, dense_union> semantics
-realized natively; closes r6 verdict "missing" item 1), q_substr_spans
-(ExactSubstr-style maximal duplicated spans + surgical removal, Lee et
-al. 2022) and q_classify (in-engine multinomial Naive Bayes train +
-score — the fastText-style classifier slot, closed-form so both halves
-are exactly oracle-checked) — oracle-bearing and CI-checked like the
-rest.
-
-**Round-8 rotation** (r7 verdict item 3): the 11 operators that had
-never held a driver row — q_bpe, q_bpe_segment, q_cdc_chunks,
-q_temperature, q_ewma, q_semantic_dedup, q_fuzzy_pairs, q_typed_map,
-q_substr_spans, q_classify, q_soft_dedup — are SEATED (``_SEAT_R8`` /
-``_PARK_R8`` at the bottom of this module).  Parked in exchange: the 9
-rows first-green in r7, q_encode (first green r7), and
-q_resample_interp (green since r6; q_resample keeps the grid seated).
-New r8 operators join PARKED (window full; seatable next rotation):
-q_funnel (ordered min-chaining funnel), q_cohort_retention (first-period
-cohorts), q_link_prediction (common-neighbor + Adamic–Adar wedge join),
-q_bm25 (Okapi BM25 ranked retrieval, broadcast-pruned postings), q_pmi
-(PMI bigram collocations), q_outliers (per-group z-score anomalies,
-decimal moment sums), q_markov (first-order Markov transition matrix)
-and q_cusum (one-sided CUSUM drift alarms via the closed-form
-prefix-sum − running-min window) — oracle-bearing and CI-checked like
-the rest.
-
-**Round-9 rotation** (r8 verdict item 2): the 8 r8 analytics operators
-that had never held a driver row — q_funnel, q_cohort_retention,
-q_link_prediction, q_bm25, q_pmi, q_outliers, q_markov, q_cusum — are
-SEATED (``_SEAT_R9`` / ``_PARK_R9``).  Parked in exchange: 8 rows first
-driver-green in r8 (q_bpe, q_bpe_segment, q_cdc_chunks, q_temperature,
-q_ewma, q_typed_map, q_classify, q_soft_dedup).  q_substr_spans stays
-seated — its plan changed in r9 (the spans and strip branches now share
-ONE checkpointed span pipeline, r8 verdict item 3) and the new plan gets
-a fresh driver row.  New r9 operators join PARKED (window full):
-q_event_ngrams (sequential event-type patterns with distinct-user
-support) and q_node_similarity (neighborhood Jaccard over the wedge
-join) — oracle-bearing and CI-checked like the rest.
-
-**Round-10 rotation** (r9 verdict item 1): the 3 r9 operators that had
-never held a driver row — q_event_ngrams, q_node_similarity,
-q_calibration — are SEATED (``_SEAT_R10`` / ``_PARK_R10``).  Parked in
-exchange: the 3 seated rows with the longest green streaks (r5-r9) whose
-operators are untouched this round — q_dedup_minhash, q_ann_lsh,
-q_pii_scan.  q_outliers stays seated: its output contract changed in r10
-(metric-domain violations surface as ``flag='domain'`` rows instead of
-vanishing, r9 verdict item 4) and the new shape gets a fresh driver row.
-
-**New r10 operators join PARKED** (window full; seatable next
-rotation), every one oracle-exact and CI-checked: q_robust_outliers
-(median/MAD robust anomalies — explicit-rank medians, no engine
-interpolation), q_cooccurrence (event-type affinity: distinct-user pair
-support + lift), q_winsorize (per-group quantile clipping via
-rank-picked type-1 quantiles), q_benford (first-digit conformance,
-string-extracted digits, injected log10 literals), q_rrf
-(reciprocal-rank fusion of BM25 + a term-coverage ranker), q_audio_fp
-(windowed-energy audio fingerprints; the 'real' codec is stdlib wave,
-CI-tested on synthesized WAVs), q_dedup_recall (MinHash pair-mining
-precision/recall vs exact-dup ground truth with planted copies —
-recall pinned at 1.0) and q_phash_dedup (pre-session: banded
-perceptual-hash image pairs).  Streaming twins with exact batch parity:
-stream_outlier_moments (additive decimal moments),
-stream_cooccurrence_pairs (distinct-pair union-merge),
-stream_benford_counts (additive digit counts) — plus the pre-session
-stream_event_ngrams.  TundraQL grew OUTLIERS ROBUST, COOCCURRENCE,
-WINSORIZE and BENFORD statements (MARKOV/SIMILARITY pre-session).
-
-**Round-11 rotation** (r10 verdict item 1): ALL TEN operators that had
-never held a driver row — q_robust_outliers, q_cooccurrence,
-q_winsorize, q_benford, q_rrf, q_audio_fp, q_scene_cuts, q_dedup_recall,
-q_phash_dedup, q_vocab_coverage — are SEATED (``_SEAT_R11`` /
-``_PARK_R11`` at the bottom of this module).  Parked in exchange: the 10
-longest-green rows (streaks of 10/10/10/9/9/9/8/8/8/7 consecutive
-driver rounds) whose operators are untouched in r11 — q_dedup_embed,
-q_dedup_exact, q_dup_clusters, q_agg_pricing, q_pagerank,
-q_stream_window, q_sessionize_state, q_stream_dedup, q_stream_ingest,
-q_dedup_apply.  Deliberately NOT parked despite long streaks: the four
-baseline-anchor queries (q_scan_filter, q_inner_join, q_two_hop,
-q_outer_joins — BENCH_r11.json must keep the numbers the judge compares
-to BASELINE.md's join bounds) and the five heavy-tier-creep queries
-under r10-verdict-item-3 investigation (q_dml, q_snapshot, q_versioned,
-q_decontaminate, q_text_scores — their recovery must be visible IN the
-shipped artifact).
-
-**New in r11** (parked; window full): q_dedup_recall_sampled — the
-recall gauge's corpus-scale mode (r10 verdict item 5): the corpus is
-thinned FIRST by ``dedup.sample_coin`` (h32(id) % 1e6, the portable md5
-family, DuckDB-reproducible) so pair volume scales ~fraction²;
-unit-pinned equal to the full gauge on the pre-filtered subset AND
-oracle-exact.  TundraQL grew CALIBRATION and RRF statements (r10
-verdict item 6); rrf_fuse became lazily composable (the duplicate
-precondition moved inside the fused plan — zero jobs at call time, r10
-verdict item 4).  Streaming grew its last missing analytics twin:
-stream_calibration_bins / read_calibration (additive decimal per-bin
-partials, stream-merge == calibration_bins test-pinned).
-
-Also new in r11 (parked; window full): the two corpus-monitoring
-operators — q_drift (analytics.distribution_drift: per-group PSI /
-Jensen-Shannon / total-variation between snapshot halves on the shared
-histogram grid, per-bin decimal(28,18) terms so the sums are
-partition-order-proof) and q_corpus_diff (dedup.corpus_diff:
-added/removed/changed delta by portable md5 digest, one id join).
-Both carry dirty-input rows, plan pins, decade probes
-(SCALE_PROBE_r11), a streaming twin for drift (stream_drift_bins /
-read_drift), and TundraQL DRIFT / DIFF statements.  A third,
-q_token_drift (text.token_drift), measures corpus-COMPOSITION drift —
-token-level JSD / TV + new-token mass between snapshots on the shared
-house tokenization — with its live reader (read_token_drift) reusing
-the stream_token_counts sketch the vocab-coverage reader already
-maintains.  Two join-safety diagnostics complete the r11 additions:
-q_key_skew (relational.key_skew — top-N heaviest keys with exact
-share/cumulative share, the pre-shuffle report) and q_join_fanout
-(relational.join_fanout — EXACT inner-join output cardinality from
-per-key counts, never running the join; est_rows test-pinned equal to
-the real join count).  The time-axis complement closes the family:
-q_trend (analytics.value_trend — per-group closed-form OLS slope/
-intercept/r² from five additive decimal moments, with the
-stream_trend_moments / read_trend streaming twin and a TundraQL TREND
-statement).  q_row_diff generalizes the snapshot diff to any keyed
-table over an explicit column list (per-column NULL sentinels, string
-ids) — the CDC primitive for a pipeline's metadata tables.
-
-**Round-12 rotation** (r11 verdict item 1): ALL TEN rows that had never
-held a driver CORRECTNESS row — the eight r11 additions (q_drift,
-q_corpus_diff, q_row_diff, q_token_drift, q_key_skew, q_join_fanout,
-q_trend, q_dedup_recall_sampled) PLUS the two legacy rows every earlier
-seating note missed (q_text_lm and q_text_repetition, parked since ~r5;
-the r11 verdict verified them absent from every CORRECTNESS_r01-r11) —
-are SEATED (``_SEAT_R12`` / ``_PARK_R12`` at the bottom of this
-module).  Parked in exchange: q_dedup_recall (the FULL-mode gauge —
-6.65 s, the most expensive seated row, answer-size grows with corpus
-duplicate mass; its 100 TB path q_dedup_recall_sampled takes the seat,
-r11 verdict "what's wrong" item 2) and the 9 longest-green rows whose
-operators r12 doesn't touch — q_dml (streak 10), q_versioned,
-q_snapshot (9), q_text_scores, q_text_quality, q_text_profile,
-q_sample_stratified, q_pipeline_e2e (7), q_resample (6).  The four
-baseline anchors stay seated as always, and q_bfs_levels (streak 8)
-stays seated DESPITE outranking the parked 7s: it is the only seated
-GRAPH_ITER query, so parking it would leave the bench's
-fresh-JVM-per-graph-query path and spread-gate floor with no subject
-(the r11 tie-break rationale, carried forward).  The never-checked queue is now
-CONTRACT-TESTED (tests/test_seating_contract.py computes
-``set(parked) − set(ever-driver-checked)`` from the CORRECTNESS_r*.json
-history and pins it to the documented queue) so parked rows can never
-silently ride CI again.  r12 also fixed all four r11 ADVICE findings
-(drift one-sided presence flags + single-pass map-gather plan — corpus
-scanned ONCE per side; row_diff per-column md5 tokens + typed portable
-renders with raw-float rejection; key_skew is_null dimension; trend
-decimal-overflow guard that raises instead of NULLing the fit) and
-added q_row_diff_numeric (parked, next rotation's queue) proving the
-decimal/timestamp/bigint digest contract.
-
-**New in r12** (all parked — window full — and queued in
-``SEATING_QUEUE`` for r13, CI-checked from day one): the learned
-linear quality classifier (classify.lr_train — distributed IRLS over
-additive decimal moments with a bounded driver solve; lr_score — the
-frozen-weight scorer whose decimal-exact logit the DuckDB twin
-reproduces byte-for-byte; q_lr_quality + q_lr_calibration; the
-TundraQL QUALITY statement; lr_prob_col — the same scorer as ONE
-stateless column expression, pinned bit-equal to lr_score and wired
-into stream_gate_corpus as the streaming quality gate);
-q_salted_join (relational.salted_join — the skew MITIGATION the
-key_skew/join_fanout diagnostics recommend: hot keys scatter/replicate
-on (key, salt), result pinned to the PLAIN join, max reducer load
-measured 12.5× flatter in SCALE_PROBE_r12); q_leakage_split
-(sampling.leakage_safe_split — the train/val/test coin flips on the
-dup-CLUSTER key so near-duplicates never straddle splits; recursive-CTE
-component oracle); and q_lm_buckets (text.lm_buckets — CCNet-style
-per-language head/middle/tail LM-fluency terciles over exact
-percentile_cont thresholds, the classic perplexity-bucket filter).
-prepare_corpus and stream_gate_corpus both grew the OPTIONAL
-learned-quality gate (the same inline lr_prob_col predicate in batch
-and streaming, so both ingest paths admit identical documents).
-
-**Round-13 rotation** (r12 verdict item 4): the six SEATING_QUEUE rows
-seat (``_SEAT_R13`` at the bottom of this module, rationale inline);
-parked in exchange, longest-green-first: q_ann_ivf_trained, q_ann_pq,
-q_chunking (streak 8), q_decontaminate, q_dup_spans,
-q_dedup_incremental (7).  r13 first closed the r12 red row's hazard
-class: join_fanout renders its exact decimal counts as STRINGS (the
-decimal(38,0) schema was the round's only hash mismatch — correct
-values, type-sensitive driver hash), q_salted_join's sum_qty moved to
-the house floor-round-to-double BEFORE seating, and the
-canonicalizability contract (tests/test_contract.py) now bans
-DecimalType from every seated and parked schema alongside Array/Map.
-
-**New in r13** (all parked — window full — and queued in
-``SEATING_QUEUE`` for r14, CI-checked from day one): the calibrated
-quality-gate knob (classify.precision_thresholds — the measured
-keep-rule precision/recall curve at every bin edge, with its
-streaming reader over the existing calibration state table;
-classify.calibrated_threshold picks the max-recall edge meeting a
-precision target; prepare_corpus deploys it via
-quality_target_precision; QUALITY grew THRESHOLDS LABEL col [BINS n])
-— q_calibrated_gate; the gate-attrition funnel
-(recipe.gate_reasons/gate_funnel — per-doc first-failing-gate labels
-with the recipe's own inline predicates, gate=='pass' pinned equal to
-the pre-dedup survivor set; TundraQL GATES statement) — q_gate_funnel;
-and the split-contamination audit (sampling.split_leakage — duplicate
-pairs straddling splits, the measurable twin of leakage_safe_split's
-by-construction guarantee) — q_split_leakage.  r13 also rewrote
-key_skew/join_fanout's ranking from a key-universe single-partition
-window to a distributed TakeOrdered (A/B at sf1: 3.81x, tuple-equal),
-bounded build_vocab/vocab_coverage_curve's ranking windows by their
-caller caps, and fixed connected_components to pointer-jump
-(log-diameter rounds) and RAISE on non-convergence instead of
-silently returning a partially-merged labeling.
-
-**Round-14 rotation** (r13 verdict item 1): the five SEATING_QUEUE
-rows seat (``_SEAT_R14`` at the bottom of this module, rationale
-inline) after passing BOTH pre-seating gates (scripts/check_oracle.py
-value parity + scripts/check_dtypes.py pandas-dtype-kind parity);
-parked in exchange, longest-green-first: q_ann_recall, q_hits,
-q_clustering, q_hist_quantiles, q_time_rollup (streak 8).
-q_multimodal stays seated one more round as a characterized same-code
-control for the q_semantic_dedup bench isolation (r13 verdict item 3).
-
-**New in r14** (all parked — window full — and queued in
-``SEATING_QUEUE`` for r15, CI-checked from day one): the curation run
-report v2 (recipe.curation_report — funnel attrition at the MEASURED
-calibrated threshold, the picked operating point with achieved
-precision/recall, exact-dup cluster stats, corpus totals, and
-split-leakage channels in one flat frame; TWO corpus scans,
-plan-pinned; TundraQL ``REPORT`` statement; live reader
-streaming.read_curation_report composes the same sections from the
-state tables) — q_curation_report; the funnel's per-doc debugging
-face (gate_reasons, SQL twin via the shared ``_gate_sql_parts``
-CASE) — q_gate_reasons; and the raw operating-point curve as its own
-row — q_precision_curve.  r14 also closed the calibrated-gate loop in
-STREAMING (calibrated_gate_threshold reads the live
-stream_calibration_bins table and picks with the batch rule;
-stream_gate_corpus measures its knob at stream start,
-stream_gate_funnel re-picks per epoch and records
-``picked_min_quality`` — stream admits == batch
-prepare_corpus(quality_target_precision=…) on replay, test-pinned),
-tiered the CI (pytest.ini ``fulltier``; default run <20 min, full
-tier mandatory pre-rotation), and root-caused the q_semantic_dedup
-bench drift as environment (README).
-
-The per-round narrative above records WHY each rotation happened; the
-AUTHORITATIVE seated/parked lists at HEAD are runtime facts — read them
-from ``queries()`` / ``parked_queries()`` (or the ``_SEAT_R*`` /
-``_PARK_R*`` blocks), never from this docstring.
 """
 
 from __future__ import annotations
@@ -343,11 +45,10 @@ from tundradb_spark.operators.relational import (
     union_distinct,
 )
 from tundradb_spark.pipeline.queries import (
-    PARKED_PIPELINE_ORACLES,
-    PARKED_PIPELINE_QUERIES,
     PIPELINE_ORACLES,
     PIPELINE_QUERIES,
     Q_DOC_QUALITY_SQL as _DOC_QUALITY_SQL,
+    q_dedup_minhash,
 )
 from tundradb_spark.query import Query, where as W
 
@@ -800,9 +501,8 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sym_edges,
         connected_components,
     )
-    from tundradb_spark.pipeline.queries import PIPELINE_QUERIES
 
-    pairs = PIPELINE_QUERIES["q_dedup_minhash"](spark, sf_dir)
+    pairs = q_dedup_minhash(spark, sf_dir)
     # r7: symmetrize+dedup+checkpoint the pair graph ONCE — CC and LPA
     # both consume it (presymmetrized=True), saving a full
     # shuffle-distinct-materialize per algorithm
@@ -917,9 +617,8 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     summarized per language.  Third consumer of the memoized pair set —
     the signature/join cost is already paid by q_dedup_minhash."""
     from tundradb_spark.pipeline.dedup import apply_dedup
-    from tundradb_spark.pipeline.queries import PIPELINE_QUERIES
 
-    pairs = PIPELINE_QUERIES["q_dedup_minhash"](spark, sf_dir)
+    pairs = q_dedup_minhash(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     def _summary(kept, tag):
@@ -1869,46 +1568,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return u.unionByName(e)
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_scan_filter": q_scan_filter,
-    "q_inner_join": q_inner_join,
-    "q_two_hop": q_two_hop,
-    "q_outer_joins": q_outer_joins,  # left + right + full
-    "q_edge_props": q_edge_props,
-    "q_branching": q_branching,
-    "q_agg_pricing": q_agg_pricing,
-    "q_topk": q_topk,
-    "q_map_access": q_map_access,
-    "q_edge_count": q_edge_count,
-    "q_semi_anti": q_semi_anti,  # semi + anti
-    "q_window_topk": q_window_topk,
-    "q_set_ops": q_set_ops,  # union + except
-    "q_asof_join": q_asof_join,
-    "q_range_join": q_range_join,
-    "q_temporal_asof": q_temporal_asof,
-    "q_shared_alias": q_shared_alias,
-    "q_stream_window": q_stream_window,
-    "q_dup_clusters": q_dup_clusters,
-    "q_dedup_apply": q_dedup_apply,
-    "q_bfs_levels": q_bfs_levels,
-    "q_pagerank": q_pagerank,
-    "q_dml": q_dml,
-    "q_stream_dedup": q_stream_dedup,
-    "q_stream_ingest": q_stream_ingest,
-    "q_sessionize": q_sessionize,
-    "q_sessionize_state": q_sessionize_state,
-    "q_snapshot": q_snapshot,
-    "q_versioned": q_versioned,
-    "q_show": q_show,
-    "q_ql_analytics": q_ql_analytics,
-    "q_quantiles": q_quantiles,
-    # training-data pipeline operators (dedup / similarity / text / multimodal)
-    **PIPELINE_QUERIES,
-}
-
-#: queries parked out of the 50-slot driver window (module docstring has the
-#: rotation policy).  Still runnable, still oracle-bearing — checked every
-#: CI run by tests/test_parked_oracles.py instead of by the driver.
 def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities (graphs.algorithms.hits) over the
     customer→nation membership graph: nation authority ∝ member-hub mass,
@@ -2030,7 +1689,41 @@ def q_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARKED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+#: every registered query by name; ``SEATED`` (driver contract, below)
+#: picks the driver's rows, the rest are parked
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "q_scan_filter": q_scan_filter,
+    "q_inner_join": q_inner_join,
+    "q_two_hop": q_two_hop,
+    "q_outer_joins": q_outer_joins,  # left + right + full
+    "q_edge_props": q_edge_props,
+    "q_branching": q_branching,
+    "q_agg_pricing": q_agg_pricing,
+    "q_topk": q_topk,
+    "q_map_access": q_map_access,
+    "q_edge_count": q_edge_count,
+    "q_semi_anti": q_semi_anti,  # semi + anti
+    "q_window_topk": q_window_topk,
+    "q_set_ops": q_set_ops,  # union + except
+    "q_asof_join": q_asof_join,
+    "q_range_join": q_range_join,
+    "q_temporal_asof": q_temporal_asof,
+    "q_shared_alias": q_shared_alias,
+    "q_stream_window": q_stream_window,
+    "q_dup_clusters": q_dup_clusters,
+    "q_dedup_apply": q_dedup_apply,
+    "q_bfs_levels": q_bfs_levels,
+    "q_pagerank": q_pagerank,
+    "q_dml": q_dml,
+    "q_stream_dedup": q_stream_dedup,
+    "q_stream_ingest": q_stream_ingest,
+    "q_sessionize": q_sessionize,
+    "q_sessionize_state": q_sessionize_state,
+    "q_snapshot": q_snapshot,
+    "q_versioned": q_versioned,
+    "q_show": q_show,
+    "q_ql_analytics": q_ql_analytics,
+    "q_quantiles": q_quantiles,
     "q_clustering": q_clustering,
     "q_hist_quantiles": q_hist_quantiles,
     "q_time_rollup": q_time_rollup,
@@ -2048,8 +1741,10 @@ PARKED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_bucketed_match": q_bucketed_match,
     "q_ql_match": q_ql_match,
     "q_hits": q_hits,
-    **PARKED_PIPELINE_QUERIES,
+    # training-data pipeline operators (dedup / similarity / text / multimodal)
+    **PIPELINE_QUERIES,
 }
+
 
 def _pagerank_sql(iters: int = 3, damping: float = 0.85) -> str:
     """Unrolled power-iteration PageRank over customer→nation edges."""
@@ -2738,10 +2433,6 @@ ORACLES: dict[str, str] = {
         GROUP BY n.n_name
         ORDER BY n_custs DESC, n_name ASC LIMIT 5
     """,
-    **PIPELINE_ORACLES,
-}
-
-PARKED_ORACLES: dict[str, str] = {
     "q_hits": _hits_sql(),
     "q_left_join": _LEFT_JOIN_SQL,
     "q_right_join": _RIGHT_JOIN_SQL,
@@ -2985,65 +2676,8 @@ PARKED_ORACLES: dict[str, str] = {
                           ELSE 0.0 END, 6) AS DOUBLE) AS coeff
         FROM deg d LEFT JOIN tc ON d.vertex = tc.vertex
     """,
-    **PARKED_PIPELINE_ORACLES,
+    **PIPELINE_ORACLES,
 }
-
-
-# ---------------------------------------------------------------------------
-# Round-6 rotation, engine side (r5 verdict item 1): seat the sketch /
-# time-series / graph-coefficient operators that never held a driver row;
-# park MATCH/relational rows driver-green since r1-r3 and frozen since.
-# Every parked row keeps its exact oracle and stays CI-checked by
-# tests/test_parked_oracles.py.  The pipeline side of the same rotation
-# lives at the bottom of tundradb_spark/pipeline/queries.py.
-# ---------------------------------------------------------------------------
-
-_SEAT_R6_ENGINE = [
-    "q_hits",
-    "q_clustering",
-    "q_hist_quantiles",
-    "q_time_rollup",
-    "q_resample",
-    "q_resample_interp",
-]
-
-_PARK_R6_ENGINE = [
-    "q_edge_props",
-    "q_branching",
-    "q_topk",
-    "q_map_access",
-    "q_edge_count",
-    "q_semi_anti",
-    "q_window_topk",
-    "q_set_ops",
-    "q_asof_join",
-    "q_range_join",
-    "q_temporal_asof",
-    "q_shared_alias",
-    "q_sessionize",
-    "q_show",
-    "q_ql_analytics",
-    "q_quantiles",
-]
-
-for _n in _SEAT_R6_ENGINE:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R6_ENGINE:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-# explicit raises, not asserts — python -O would compile asserts out and
-# let a malformed rotation reach the driver silently
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
 
 
 MOVING_WINDOW_US = 3_600_000_000  # 1 hour trailing
@@ -3072,10 +2706,10 @@ def q_moving_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARKED_QUERIES["q_moving_agg"] = q_moving_agg
+QUERIES["q_moving_agg"] = q_moving_agg
 # RANGE frame over the µs epoch: order-free decimal sum, same rounded
 # mean arithmetic as the Spark side (sum decimal / count, cast, round 6)
-PARKED_ORACLES["q_moving_agg"] = f"""
+ORACLES["q_moving_agg"] = f"""
     SELECT CAST(user_id AS BIGINT) AS user_id,
            CAST(us AS BIGINT) AS ts_us,
            v AS value,
@@ -3103,6 +2737,75 @@ PARKED_ORACLES["q_moving_agg"] = f"""
 # driver contract
 # ---------------------------------------------------------------------------
 
+#: The driver's rows, in driver order.  Every other registered query is
+#: parked: still oracle-bearing, re-checked by tests/test_parked_oracles.py.
+#: Seating or parking a row means editing this tuple.
+SEATED = (
+    "q_scan_filter",
+    "q_inner_join",
+    "q_two_hop",
+    "q_outer_joins",
+    "q_bfs_levels",
+    "q_multimodal",
+    "q_semantic_dedup",
+    "q_fuzzy_pairs",
+    "q_substr_spans",
+    "q_funnel",
+    "q_cohort_retention",
+    "q_link_prediction",
+    "q_bm25",
+    "q_pmi",
+    "q_outliers",
+    "q_markov",
+    "q_cusum",
+    "q_event_ngrams",
+    "q_node_similarity",
+    "q_calibration",
+    "q_robust_outliers",
+    "q_cooccurrence",
+    "q_winsorize",
+    "q_benford",
+    "q_rrf",
+    "q_audio_fp",
+    "q_scene_cuts",
+    "q_phash_dedup",
+    "q_vocab_coverage",
+    "q_drift",
+    "q_corpus_diff",
+    "q_row_diff",
+    "q_token_drift",
+    "q_key_skew",
+    "q_join_fanout",
+    "q_trend",
+    "q_dedup_recall_sampled",
+    "q_text_lm",
+    "q_text_repetition",
+    "q_row_diff_numeric",
+    "q_lr_quality",
+    "q_lr_calibration",
+    "q_salted_join",
+    "q_leakage_split",
+    "q_lm_buckets",
+    "q_calibrated_gate",
+    "q_gate_funnel",
+    "q_split_leakage",
+    "q_resize",
+    "q_quality_drift",
+)
+
+#: Parked rows that have never held a driver CORRECTNESS row; they seat
+#: next.  tests/test_seating_contract.py recomputes this set from the
+#: CORRECTNESS_r*.json history and pins it equal.
+SEATING_QUEUE = frozenset(
+    {"q_curation_report", "q_gate_reasons", "q_precision_curve"}
+)
+
+#: rows that stay seated through every rotation — their bench slots carry
+#: the numbers compared to BASELINE.md
+BASELINE_ANCHORS = frozenset(
+    {"q_scan_filter", "q_inner_join", "q_two_hop", "q_outer_joins"}
+)
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -3110,21 +2813,21 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(QUERIES)
+    return {n: QUERIES[n] for n in SEATED}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(ORACLES)
+    return {n: ORACLES[n] for n in SEATED}
 
 
 def parked_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Operators parked out of the driver's 50-slot window (see module
-    docstring) — still oracle-checked by tests/test_parked_oracles.py."""
-    return dict(PARKED_QUERIES)
+    """Registered queries outside ``SEATED`` — still oracle-checked by
+    tests/test_parked_oracles.py."""
+    return {n: f for n, f in QUERIES.items() if n not in SEATED}
 
 
 def parked_oracle_sql() -> dict[str, str]:
-    return dict(PARKED_ORACLES)
+    return {n: q for n, q in ORACLES.items() if n not in SEATED}
 
 
 def q_time_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3145,10 +2848,10 @@ def q_time_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARKED_QUERIES["q_time_twa"] = q_time_twa
+QUERIES["q_time_twa"] = q_time_twa
 # same bucket floor, lead()-with-bucket-end segments, decimal(28,8)
 # weighted sum, double division, round 6 — every step mirrored
-PARKED_ORACLES["q_time_twa"] = f"""
+ORACLES["q_time_twa"] = f"""
     WITH base AS (
       SELECT user_id AS k, epoch_us(ts) AS us,
              epoch_us(ts) - (((epoch_us(ts) % {ROLLUP_BUCKET_US})
@@ -3196,11 +2899,11 @@ def q_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARKED_QUERIES["q_lttb"] = q_lttb
+QUERIES["q_lttb"] = q_lttb
 # same rank bucketing (explicit floor — DuckDB's double->int cast ROUNDS
 # where Spark's truncates), exact-sum/one-division anchor means, same
 # area formula, (area desc, rank asc) argmax
-PARKED_ORACLES["q_lttb"] = f"""
+ORACLES["q_lttb"] = f"""
     WITH base AS (
       SELECT user_id AS k, epoch_us(ts) AS us, value AS v, event_id AS tb
       FROM events WHERE abs(value) < 1000000000.0
@@ -3260,61 +2963,6 @@ PARKED_ORACLES["q_lttb"] = f"""
 """
 
 
-# ---------------------------------------------------------------------------
-# Round-7 rotation (r6 verdict item 2): seat the 9 r6 operators that have
-# exact oracles and CI-green parked checks but never held a driver
-# CORRECTNESS row; park 9 rows first-green in r6 and frozen since.  This
-# block must run LAST — the seated callables are defined above and in
-# pipeline/queries.py's tail.  Parking costs a driver slot, never
-# verification: tests/test_parked_oracles.py re-checks every parked oracle
-# each CI run.
-# ---------------------------------------------------------------------------
-
-_SEAT_R7 = [
-    "q_moving_agg",
-    "q_time_twa",
-    "q_lttb",
-    "q_domain_cap",
-    "q_corpus_report",
-    "q_ann_pq_trained",
-    "q_ann_batch",
-    "q_ann_lsh_batch",
-    "q_split",
-]
-
-#: driver-green in r6, frozen since; q_encode is deliberately NOT parked —
-#: its r6 row was red on harness shape and needs its first green with the
-#: ids_md5 digest
-_PARK_R7 = [
-    "q_hll_distinct",
-    "q_hll_intersect",
-    "q_cm_counts",
-    "q_bloom_semi",
-    "q_text_lm2",
-    "q_weighted_sample",
-    "q_vocab",
-    "q_zorder",
-    "q_tfidf",
-]
-
-for _n in _SEAT_R7:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R7:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r7 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
-
-
 def q_typed_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r7: VARIANT property map through the full engine path — the
     reference's map<utf8, dense_union> realization (P2/F6 deepened,
@@ -3342,8 +2990,8 @@ def q_typed_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return db.query(q)
 
 
-PARKED_QUERIES["q_typed_map"] = q_typed_map
-PARKED_ORACLES["q_typed_map"] = """
+QUERIES["q_typed_map"] = q_typed_map
+ORACLES["q_typed_map"] = """
     SELECT CAST(event_id AS BIGINT) AS event_id,
            json_extract_string(props, '$.k') AS k_val
     FROM events
@@ -3400,71 +3048,8 @@ def _ewma_oracle_sql() -> str:
 """
 
 
-PARKED_QUERIES["q_ewma"] = q_ewma
-PARKED_ORACLES["q_ewma"] = _ewma_oracle_sql()
-
-
-# ---------------------------------------------------------------------------
-# Round-8 rotation (r7 verdict item 3): seat the 11 operators that have
-# exact oracles and CI-green parked checks but have NEVER held a driver
-# CORRECTNESS row — both prior rotations surfaced a real defect CI could
-# not (r6: q_encode's uncanonicalizable shape), so every operator must
-# take its turn under the driver.  Parked in exchange: the 9 rows
-# first-green in r7 (seated by the r7 rotation) plus q_encode (first
-# green r7 with its ids_md5 digest) plus q_resample_interp (green since
-# r6; its sibling q_resample keeps the resample grid seated, and the
-# interpolation branch stays CI-checked like every parked row).  This
-# block must run LAST — q_typed_map / q_ewma are defined immediately
-# above.
-# ---------------------------------------------------------------------------
-
-_SEAT_R8 = [
-    "q_bpe",
-    "q_bpe_segment",
-    "q_cdc_chunks",
-    "q_temperature",
-    "q_ewma",
-    "q_semantic_dedup",
-    "q_fuzzy_pairs",
-    "q_typed_map",
-    "q_substr_spans",
-    "q_classify",
-    "q_soft_dedup",
-]
-
-#: first driver-green in r7 (or, for q_resample_interp, r6) and frozen
-#: since; every parked row keeps its oracle and is re-checked against
-#: DuckDB each CI run by tests/test_parked_oracles.py
-_PARK_R8 = [
-    "q_moving_agg",
-    "q_time_twa",
-    "q_lttb",
-    "q_domain_cap",
-    "q_corpus_report",
-    "q_ann_pq_trained",
-    "q_ann_batch",
-    "q_ann_lsh_batch",
-    "q_split",
-    "q_encode",
-    "q_resample_interp",
-]
-
-for _n in _SEAT_R8:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R8:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r8 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
+QUERIES["q_ewma"] = q_ewma
+ORACLES["q_ewma"] = _ewma_oracle_sql()
 
 
 FUNNEL_STEPS = ["view", "click", "purchase"]
@@ -3527,13 +3112,13 @@ def _retention_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_funnel"] = q_funnel
-PARKED_ORACLES["q_funnel"] = _funnel_oracle()
-PARKED_QUERIES["q_cohort_retention"] = q_cohort_retention
-PARKED_ORACLES["q_cohort_retention"] = _retention_oracle()
+QUERIES["q_funnel"] = q_funnel
+ORACLES["q_funnel"] = _funnel_oracle()
+QUERIES["q_cohort_retention"] = q_cohort_retention
+ORACLES["q_cohort_retention"] = _retention_oracle()
 
-PARKED_QUERIES["q_link_prediction"] = q_link_prediction
-PARKED_ORACLES["q_link_prediction"] = f"""
+QUERIES["q_link_prediction"] = q_link_prediction
+ORACLES["q_link_prediction"] = f"""
     WITH {_TRIANGLE_GRAPH_SQL.strip()},
     adj AS (SELECT a AS u, b AS v FROM te UNION ALL SELECT b, a FROM te),
     deg AS (SELECT u AS z, count(*) AS dz FROM adj GROUP BY u),
@@ -3671,12 +3256,12 @@ def _outliers_oracle() -> str:
     return value_outliers_sql("events", z_threshold=OUTLIER_Z)
 
 
-PARKED_QUERIES["q_bm25"] = q_bm25
-PARKED_ORACLES["q_bm25"] = _bm25_oracle()
-PARKED_QUERIES["q_pmi"] = q_pmi
-PARKED_ORACLES["q_pmi"] = _pmi_oracle()
-PARKED_QUERIES["q_outliers"] = q_outliers
-PARKED_ORACLES["q_outliers"] = _outliers_oracle()
+QUERIES["q_bm25"] = q_bm25
+ORACLES["q_bm25"] = _bm25_oracle()
+QUERIES["q_pmi"] = q_pmi
+ORACLES["q_pmi"] = _pmi_oracle()
+QUERIES["q_outliers"] = q_outliers
+ORACLES["q_outliers"] = _outliers_oracle()
 
 
 # --- r8 additions (2): Markov transitions, CUSUM change detection ---
@@ -3733,71 +3318,13 @@ def _cusum_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_markov"] = q_markov
-PARKED_ORACLES["q_markov"] = _markov_oracle()
-PARKED_QUERIES["q_cusum"] = q_cusum
-PARKED_ORACLES["q_cusum"] = _cusum_oracle()
+QUERIES["q_markov"] = q_markov
+ORACLES["q_markov"] = _markov_oracle()
+QUERIES["q_cusum"] = q_cusum
+ORACLES["q_cusum"] = _cusum_oracle()
 
 
-# ---------------------------------------------------------------------------
-# Round-9 rotation (r8 verdict item 2): seat the 8 r8 analytics operators
-# that have exact oracles and CI-green parked checks but have NEVER held a
-# driver CORRECTNESS row — the rotation discipline exists because the
-# driver finds shape bugs CI cannot (r6: q_encode).  Parked in exchange: 8
-# rows first driver-green in r8 and frozen since — EXCEPT q_substr_spans,
-# which stays seated because its plan changed this round (the spans+strip
-# branches now share one checkpointed span pipeline, r8 verdict item 3)
-# and the new plan deserves a fresh driver row; q_semantic_dedup and
-# q_fuzzy_pairs also stay seated.  This block must run LAST — the r8
-# analytics callables are registered into PARKED immediately above.
-# ---------------------------------------------------------------------------
-
-_SEAT_R9 = [
-    "q_funnel",
-    "q_cohort_retention",
-    "q_link_prediction",
-    "q_bm25",
-    "q_pmi",
-    "q_outliers",
-    "q_markov",
-    "q_cusum",
-]
-
-#: first driver-green in r8, frozen since; every parked row keeps its
-#: oracle and is re-checked against DuckDB each CI run by
-#: tests/test_parked_oracles.py
-_PARK_R9 = [
-    "q_bpe",
-    "q_bpe_segment",
-    "q_cdc_chunks",
-    "q_temperature",
-    "q_ewma",
-    "q_typed_map",
-    "q_classify",
-    "q_soft_dedup",
-]
-
-for _n in _SEAT_R9:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R9:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r9 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
-
-
-# --- r9 additions: neighborhood Jaccard, sequential event n-grams ---
-# New operators join PARKED (window full; seatable next rotation) with
-# exact oracles, CI-checked by tests/test_parked_oracles.py like the rest.
+# --- neighborhood Jaccard, sequential event n-grams ---
 
 NGRAM_N, NGRAM_MIN, NGRAM_TOP = 3, 2, 50
 
@@ -3847,11 +3374,11 @@ def q_node_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARKED_QUERIES["q_event_ngrams"] = q_event_ngrams
-PARKED_ORACLES["q_event_ngrams"] = _event_ngrams_oracle()
+QUERIES["q_event_ngrams"] = q_event_ngrams
+ORACLES["q_event_ngrams"] = _event_ngrams_oracle()
 
-PARKED_QUERIES["q_node_similarity"] = q_node_similarity
-PARKED_ORACLES["q_node_similarity"] = f"""
+QUERIES["q_node_similarity"] = q_node_similarity
+ORACLES["q_node_similarity"] = f"""
     WITH {_TRIANGLE_GRAPH_SQL.strip()},
     adj AS (SELECT a AS u, b AS v FROM te UNION ALL SELECT b, a FROM te),
     deg AS (SELECT u AS z, count(*) AS dz FROM adj GROUP BY u),
@@ -3904,56 +3431,11 @@ def _calibration_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_calibration"] = q_calibration
-PARKED_ORACLES["q_calibration"] = _calibration_oracle()
+QUERIES["q_calibration"] = q_calibration
+ORACLES["q_calibration"] = _calibration_oracle()
 
 
-# ---------------------------------------------------------------------------
-# Round-10 rotation (r9 verdict item 1): seat the 3 r9 operators that have
-# exact oracles and CI-green parked checks but have NEVER held a driver
-# CORRECTNESS row — q_event_ngrams, q_node_similarity, q_calibration.
-# Parked in exchange: 3 rows with the LONGEST driver-green streaks
-# (r5-r9, five consecutive rounds) whose operators are untouched in r10.
-# q_outliers stays seated: its output contract changed this round
-# (metric-domain violations now surface as flag='domain' rows, r9
-# verdict item 4) and the new shape gets a fresh driver row.
-# ---------------------------------------------------------------------------
-
-_SEAT_R10 = [
-    "q_event_ngrams",
-    "q_node_similarity",
-    "q_calibration",
-]
-
-#: first driver-green in r5, green every round since; every parked row
-#: keeps its oracle and is re-checked against DuckDB each CI run by
-#: tests/test_parked_oracles.py
-_PARK_R10 = [
-    "q_dedup_minhash",
-    "q_ann_lsh",
-    "q_pii_scan",
-]
-
-for _n in _SEAT_R10:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R10:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r10 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
-
-# --- r10 additions: robust MAD outliers + event-type co-occurrence ---
-# New operators join PARKED (window full; seatable next rotation) with
-# exact oracles, CI-checked by tests/test_parked_oracles.py like the rest.
+# --- robust MAD outliers + event-type co-occurrence ---
 
 ROBUST_K = 3.0
 COOC_MIN_USERS, COOC_TOP = 2, 50
@@ -3977,8 +3459,8 @@ def _robust_outliers_oracle() -> str:
     return robust_outliers_sql("events", k=ROBUST_K)
 
 
-PARKED_QUERIES["q_robust_outliers"] = q_robust_outliers
-PARKED_ORACLES["q_robust_outliers"] = _robust_outliers_oracle()
+QUERIES["q_robust_outliers"] = q_robust_outliers
+ORACLES["q_robust_outliers"] = _robust_outliers_oracle()
 
 
 def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4003,8 +3485,8 @@ def _cooccurrence_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_cooccurrence"] = q_cooccurrence
-PARKED_ORACLES["q_cooccurrence"] = _cooccurrence_oracle()
+QUERIES["q_cooccurrence"] = q_cooccurrence
+ORACLES["q_cooccurrence"] = _cooccurrence_oracle()
 
 
 # --- r10 addition (3): per-group winsorization ---
@@ -4030,8 +3512,8 @@ def _winsorize_oracle() -> str:
     return winsorize_sql("events", p_lo=WINSOR_P[0], p_hi=WINSOR_P[1])
 
 
-PARKED_QUERIES["q_winsorize"] = q_winsorize
-PARKED_ORACLES["q_winsorize"] = _winsorize_oracle()
+QUERIES["q_winsorize"] = q_winsorize
+ORACLES["q_winsorize"] = _winsorize_oracle()
 
 
 # --- r10 addition (4): Benford first-digit conformance scan ---
@@ -4057,8 +3539,8 @@ def _benford_oracle() -> str:
     return benford_deviation_sql("events", min_n=BENFORD_MIN_N)
 
 
-PARKED_QUERIES["q_benford"] = q_benford
-PARKED_ORACLES["q_benford"] = _benford_oracle()
+QUERIES["q_benford"] = q_benford
+ORACLES["q_benford"] = _benford_oracle()
 
 
 # --- r10 addition (5): hybrid-retrieval rank fusion ---
@@ -4182,85 +3664,13 @@ def _rrf_oracle() -> str:
     return rrf_fuse_sql(bm_sql, cover_sql, k=RRF_K, top_n=RRF_TOP)
 
 
-PARKED_QUERIES["q_rrf"] = q_rrf
-PARKED_ORACLES["q_rrf"] = _rrf_oracle()
+QUERIES["q_rrf"] = q_rrf
+ORACLES["q_rrf"] = _rrf_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Round-11 rotation (r10 verdict item 1): seat ALL TEN operators that have
-# exact oracles and CI-green parked checks but have NEVER held a driver
-# CORRECTNESS row — the eight r10 additions plus the two pre-session r10
-# rows (q_scene_cuts, q_vocab_coverage).  Parked in exchange: the 10 rows
-# with the LONGEST driver-green streaks whose operators are untouched in
-# r11, EXCLUDING two groups that must stay seated for the round's own
-# verification goals:
-#   * the four baseline-anchor queries (q_scan_filter, q_inner_join,
-#     q_two_hop, q_outer_joins) — BENCH_r11.json must keep carrying the
-#     numbers the judge compares against BASELINE.md's published join
-#     bounds, and
-#   * the five heavy-tier-creep queries under investigation (q_dml,
-#     q_snapshot, q_versioned, q_decontaminate, q_text_scores) — r10
-#     verdict item 3 requires their recovery to be visible IN the shipped
-#     artifact, which means they need both a driver row and a bench slot.
-# Streak ranking (consecutive green driver rounds ending r10, computed
-# from CORRECTNESS_r01..r10): q_dedup_embed/q_dedup_exact/q_dup_clusters
-# 10; q_agg_pricing/q_pagerank/q_stream_window 9; q_sessionize_state/
-# q_stream_dedup/q_stream_ingest 8; q_dedup_apply 7 (tie with
-# q_bfs_levels broken by keeping ONE GRAPH_ITER representative seated so
-# the tightened bench spread gate still has a subject).
-# ---------------------------------------------------------------------------
-
-_SEAT_R11 = [
-    "q_robust_outliers",
-    "q_cooccurrence",
-    "q_winsorize",
-    "q_benford",
-    "q_rrf",
-    "q_audio_fp",
-    "q_scene_cuts",
-    "q_dedup_recall",
-    "q_phash_dedup",
-    "q_vocab_coverage",
-]
-
-#: longest green streaks at r10 (10/10/10/9/9/9/8/8/8/7 consecutive
-#: rounds); every parked row keeps its oracle and is re-checked against
-#: DuckDB each CI run by tests/test_parked_oracles.py
-_PARK_R11 = [
-    "q_dedup_embed",
-    "q_dedup_exact",
-    "q_dup_clusters",
-    "q_agg_pricing",
-    "q_pagerank",
-    "q_stream_window",
-    "q_sessionize_state",
-    "q_stream_dedup",
-    "q_stream_ingest",
-    "q_dedup_apply",
-]
-
-for _n in _SEAT_R11:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R11:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r11 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
-
-
-# ---------------------------------------------------------------------------
-# r11 additions (post-rotation): the two corpus-monitoring operators land
-# in PARKED (window full; seatable next rotation), CI-checked by
-# tests/test_parked_oracles.py from day one — the r8/r10 precedent.
+# Corpus-monitoring operators: distribution drift, corpus diff, token
+# drift, join-safety diagnostics, trend and keyed row diffs.
 # ---------------------------------------------------------------------------
 
 DRIFT_BOUNDS = (0.0, 500.0)  # data fact: events.value spans [0.01, ~490]
@@ -4301,8 +3711,8 @@ def _drift_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_drift"] = q_drift
-PARKED_ORACLES["q_drift"] = _drift_oracle()
+QUERIES["q_drift"] = q_drift
+ORACLES["q_drift"] = _drift_oracle()
 
 
 def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4334,8 +3744,8 @@ def _corpus_diff_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_corpus_diff"] = q_corpus_diff
-PARKED_ORACLES["q_corpus_diff"] = _corpus_diff_oracle()
+QUERIES["q_corpus_diff"] = q_corpus_diff
+ORACLES["q_corpus_diff"] = _corpus_diff_oracle()
 
 
 def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4367,8 +3777,8 @@ def _token_drift_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_token_drift"] = q_token_drift
-PARKED_ORACLES["q_token_drift"] = _token_drift_oracle()
+QUERIES["q_token_drift"] = q_token_drift
+ORACLES["q_token_drift"] = _token_drift_oracle()
 
 
 def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4388,8 +3798,8 @@ def _key_skew_oracle() -> str:
     return key_skew_sql("lineitem", "l_suppkey", top_n=10)
 
 
-PARKED_QUERIES["q_key_skew"] = q_key_skew
-PARKED_ORACLES["q_key_skew"] = _key_skew_oracle()
+QUERIES["q_key_skew"] = q_key_skew
+ORACLES["q_key_skew"] = _key_skew_oracle()
 
 
 def q_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4412,8 +3822,8 @@ def _join_fanout_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_join_fanout"] = q_join_fanout
-PARKED_ORACLES["q_join_fanout"] = _join_fanout_oracle()
+QUERIES["q_join_fanout"] = q_join_fanout
+ORACLES["q_join_fanout"] = _join_fanout_oracle()
 
 
 TREND_EPOCH_US = 1_704_067_200_000_000  # 2024-01-01T00:00Z — data fact:
@@ -4437,8 +3847,8 @@ def _trend_oracle() -> str:
     return value_trend_sql("events", epoch_us=TREND_EPOCH_US, min_n=100)
 
 
-PARKED_QUERIES["q_trend"] = q_trend
-PARKED_ORACLES["q_trend"] = _trend_oracle()
+QUERIES["q_trend"] = q_trend
+ORACLES["q_trend"] = _trend_oracle()
 
 
 def q_row_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4476,8 +3886,8 @@ def _row_diff_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_row_diff"] = q_row_diff
-PARKED_ORACLES["q_row_diff"] = _row_diff_oracle()
+QUERIES["q_row_diff"] = q_row_diff
+ORACLES["q_row_diff"] = _row_diff_oracle()
 
 
 def q_row_diff_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4535,103 +3945,15 @@ def _row_diff_numeric_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_row_diff_numeric"] = q_row_diff_numeric
-PARKED_ORACLES["q_row_diff_numeric"] = _row_diff_numeric_oracle()
+QUERIES["q_row_diff_numeric"] = q_row_diff_numeric
+ORACLES["q_row_diff_numeric"] = _row_diff_numeric_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Round-12 rotation (r11 verdict item 1): seat ALL TEN rows that have never
-# held a driver CORRECTNESS row — the eight r11 additions plus the two
-# legacy text rows (q_text_lm, q_text_repetition) every earlier seating
-# note missed.  Parked in exchange: q_dedup_recall (full mode, the most
-# expensive seated row — its sampled 100 TB path takes the seat, r11
-# verdict "what's wrong" item 2) and the 9 longest-green rows untouched in
-# r12.  The four baseline anchors (q_scan_filter, q_inner_join, q_two_hop,
-# q_outer_joins) stay seated — BENCH_r12.json must keep carrying the
-# numbers the judge compares against BASELINE.md's join bounds.  The five
-# r11-verdict-item-4 re-measure subjects (q_time_rollup,
-# q_cohort_retention, q_link_prediction, q_clustering, q_hits) also stay
-# seated so the quiet-load re-measurement lands in the shipped artifact.
-# Streak ranking (consecutive green driver rounds ending r11, computed
-# from CORRECTNESS_r01..r11): q_dml 10; q_versioned/q_snapshot 9;
-# q_bfs_levels 8 — deliberately KEPT SEATED despite outranking the 7s:
-# it is the only seated GRAPH_ITER query, and parking it would leave the
-# bench's fresh-JVM-per-graph-query path and the tightened spread-gate
-# floor with no subject (the r11 tie-break rationale, carried forward);
-# q_text_scores/q_text_quality/q_text_profile/q_sample_stratified/
-# q_pipeline_e2e 7; q_resample 6 fills the tenth slot.
-# ---------------------------------------------------------------------------
-
-_SEAT_R12 = [
-    "q_drift",
-    "q_corpus_diff",
-    "q_row_diff",
-    "q_token_drift",
-    "q_key_skew",
-    "q_join_fanout",
-    "q_trend",
-    "q_dedup_recall_sampled",
-    "q_text_lm",
-    "q_text_repetition",
-]
-
-#: q_dedup_recall swaps out for its sampled mode; the rest are the
-#: longest green streaks at r11 — every parked row keeps its oracle and
-#: is re-checked against DuckDB each CI run by tests/test_parked_oracles.py
-_PARK_R12 = [
-    "q_dedup_recall",
-    "q_dml",
-    "q_versioned",
-    "q_snapshot",
-    "q_text_scores",
-    "q_text_quality",
-    "q_text_profile",
-    "q_sample_stratified",
-    "q_pipeline_e2e",
-    "q_resample",
-]
-
-for _n in _SEAT_R12:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R12:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r12 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
-
-
-#: The documented seating queue: parked rows that have NEVER held a
-#: driver CORRECTNESS row and therefore seat at the NEXT rotation.
-#: tests/test_seating_contract.py recomputes this set from the
-#: CORRECTNESS_r*.json history and pins it equal — a parked row can no
-#: longer silently ride CI without ever earning the driver signal (the
-#: r11 verdict found q_text_lm/q_text_repetition had done exactly that
-#: since ~r5 because the hand-maintained note undercounted).
-SEATING_QUEUE = frozenset()  # the six r12 rows seated at the r13
-# rotation (``_SEAT_R13`` at the bottom of this module); new r13 parked
-# additions join the queue here as they are registered.
-
-#: the four rows that must stay seated through every rotation — their
-#: bench slots carry the numbers the judge compares to BASELINE.md
-BASELINE_ANCHORS = frozenset(
-    {"q_scan_filter", "q_inner_join", "q_two_hop", "q_outer_joins"}
-)
-
-
-# ---------------------------------------------------------------------------
-# r12 additions (post-rotation, r11 verdict item 6): the learned linear
-# quality classifier.  Training (classify.lr_train — IRLS over additive
-# decimal moments, distributed gradient/Gram aggregation + bounded driver
-# solve) is NOT SQL-expressible, so the DRIVER rows follow the DSIR
+# The learned linear quality classifier.  Training (classify.lr_train —
+# IRLS over additive decimal moments, distributed gradient/Gram
+# aggregation + bounded driver solve) is NOT SQL-expressible, so the
+# DRIVER rows follow the DSIR
 # precedent: the deployment shape of a learned filter is scoring with a
 # FROZEN weight table, and that is exactly checkable.  The literal table
 # below was produced by lr_train on the sf0.01 documents with label
@@ -4639,8 +3961,7 @@ BASELINE_ANCHORS = frozenset(
 # deterministic: beta_0 = 0, fixed iteration count, decimal-exact moment
 # sums; regenerate with scripts/train_lr_weights.py) and rendered through
 # classify.lr_weight_literals so Spark's double->decimal(20,10) cast and
-# the SQL literals are byte-identical.  Both rows land in PARKED (window
-# full; queued for the r13 rotation) and are CI-checked from day one.
+# the SQL literals are byte-identical.
 # ---------------------------------------------------------------------------
 
 LR_WEIGHTS = [
@@ -4947,8 +4268,8 @@ def _lr_quality_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_lr_quality"] = q_lr_quality
-PARKED_ORACLES["q_lr_quality"] = _lr_quality_oracle()
+QUERIES["q_lr_quality"] = q_lr_quality
+ORACLES["q_lr_quality"] = _lr_quality_oracle()
 
 
 def q_lr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5004,8 +4325,8 @@ def _lr_calibration_oracle() -> str:
     return calibration_bins_sql(joined, "prob", "label", n_bins=10)
 
 
-PARKED_QUERIES["q_lr_calibration"] = q_lr_calibration
-PARKED_ORACLES["q_lr_calibration"] = _lr_calibration_oracle()
+QUERIES["q_lr_calibration"] = q_lr_calibration
+ORACLES["q_lr_calibration"] = _lr_calibration_oracle()
 
 
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5065,8 +4386,8 @@ def _salted_join_oracle() -> str:
     """
 
 
-PARKED_QUERIES["q_salted_join"] = q_salted_join
-PARKED_ORACLES["q_salted_join"] = _salted_join_oracle()
+QUERIES["q_salted_join"] = q_salted_join
+ORACLES["q_salted_join"] = _salted_join_oracle()
 
 
 def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5076,13 +4397,11 @@ def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     so near-duplicates can never straddle splits — the contamination
     channel decontamination can't see.  Singletons key on themselves,
     i.e. they keep exactly the q_split assignment."""
-    from tundradb_spark.pipeline.queries import (
-        PIPELINE_QUERIES, SPLIT_BP,
-    )
+    from tundradb_spark.pipeline.queries import SPLIT_BP
     from tundradb_spark.pipeline.sampling import leakage_safe_split
 
     docs = _spread(spark, sf_dir, "documents", "doc_id")
-    pairs = PIPELINE_QUERIES["q_dedup_minhash"](spark, sf_dir)
+    pairs = q_dedup_minhash(spark, sf_dir)
     return leakage_safe_split(docs, pairs, SPLIT_BP).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "split_key",
@@ -5132,8 +4451,8 @@ def _leakage_split_oracle() -> str:
     """
 
 
-PARKED_QUERIES["q_leakage_split"] = q_leakage_split
-PARKED_ORACLES["q_leakage_split"] = _leakage_split_oracle()
+QUERIES["q_leakage_split"] = q_leakage_split
+ORACLES["q_leakage_split"] = _leakage_split_oracle()
 
 
 def q_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5161,71 +4480,12 @@ def _lm_buckets_oracle() -> str:
     return lm_buckets_sql("documents")
 
 
-PARKED_QUERIES["q_lm_buckets"] = q_lm_buckets
-PARKED_ORACLES["q_lm_buckets"] = _lm_buckets_oracle()
+QUERIES["q_lm_buckets"] = q_lm_buckets
+ORACLES["q_lm_buckets"] = _lm_buckets_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Round-13 rotation (r12 verdict item 4): seat the six SEATING_QUEUE rows
-# (q_row_diff_numeric, q_lr_quality, q_lr_calibration, q_salted_join,
-# q_leakage_split, q_lm_buckets) — every parked row that had never held a
-# driver CORRECTNESS row, all CI-green against their DuckDB oracles since
-# they were added.  q_salted_join seats with its r13 schema fix (sum_qty
-# rendered via the house floor-round-to-double — DecimalType is now
-# contract-banned from registry schemas after r12's q_join_fanout hash
-# mismatch).  Parked in exchange, longest-green-first among non-anchors:
-# q_ann_ivf_trained, q_ann_pq, q_chunking (streak 8) and q_decontaminate,
-# q_dup_spans, q_dedup_incremental (streak 7).  Tie-breaks at streak 7/8,
-# recorded: q_multimodal (streak 8) stays seated because its 3.07× r12
-# bench jump is under investigation (r12 verdict item 5) and parking it
-# would remove the r13 data point that confirms or refutes the
-# worker-warmup hypothesis; q_bfs_levels stays as the only GRAPH_ITER
-# bench subject (standing rationale); q_ann_recall (7) stays so the ANN
-# family keeps one seated row while its two siblings park; q_hits,
-# q_clustering, q_hist_quantiles, q_time_rollup (7) lose the tie to the
-# three dedup-family rows because dedup keeps FOUR other seated rows
-# (q_dedup_recall_sampled, q_semantic_dedup, q_row_diff + the seating
-# q_row_diff_numeric) — parking there costs no family coverage.
-# ---------------------------------------------------------------------------
-
-_SEAT_R13 = [
-    "q_row_diff_numeric",
-    "q_lr_quality",
-    "q_lr_calibration",
-    "q_salted_join",
-    "q_leakage_split",
-    "q_lm_buckets",
-]
-
-_PARK_R13 = [
-    "q_ann_ivf_trained",
-    "q_ann_pq",
-    "q_chunking",
-    "q_decontaminate",
-    "q_dup_spans",
-    "q_dedup_incremental",
-]
-
-for _n in _SEAT_R13:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R13:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r13 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
-
-
-# ---------------------------------------------------------------------------
-# r13 additions (post-rotation, r12 verdict item 7): calibrate-then-gate.
+# Calibrate-then-gate.
 # The quality gate's knob stops being a hand-set number: the measured
 # operating-point curve (classify.precision_thresholds — cumulative
 # precision/recall at every calibration-bin edge) picks the max-recall
@@ -5331,9 +4591,8 @@ def _calibrated_gate_oracle() -> str:
     """
 
 
-PARKED_QUERIES["q_calibrated_gate"] = q_calibrated_gate
-PARKED_ORACLES["q_calibrated_gate"] = _calibrated_gate_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_calibrated_gate"}
+QUERIES["q_calibrated_gate"] = q_calibrated_gate
+ORACLES["q_calibrated_gate"] = _calibrated_gate_oracle()
 
 
 def q_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5365,9 +4624,8 @@ def _gate_funnel_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_gate_funnel"] = q_gate_funnel
-PARKED_ORACLES["q_gate_funnel"] = _gate_funnel_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_gate_funnel"}
+QUERIES["q_gate_funnel"] = q_gate_funnel
+ORACLES["q_gate_funnel"] = _gate_funnel_oracle()
 
 
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5378,16 +4636,14 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; the zero-leak property of the safe split is
     unit-pinned).  Two pair-graph-sized hash joins against the (id,
     split) projection, counts per ordered (split_a, split_b) channel."""
-    from tundradb_spark.pipeline.queries import (
-        PIPELINE_QUERIES, SPLIT_BP,
-    )
+    from tundradb_spark.pipeline.queries import SPLIT_BP
     from tundradb_spark.pipeline.sampling import (
         split_corpus, split_leakage_summary,
     )
 
     docs = _spread(spark, sf_dir, "documents", "doc_id")
     assigned = split_corpus(docs, SPLIT_BP)
-    pairs = PIPELINE_QUERIES["q_dedup_minhash"](spark, sf_dir)
+    pairs = q_dedup_minhash(spark, sf_dir)
     return split_leakage_summary(assigned, pairs)
 
 
@@ -5424,9 +4680,8 @@ def _split_leakage_oracle() -> str:
     """
 
 
-PARKED_QUERIES["q_split_leakage"] = q_split_leakage
-PARKED_ORACLES["q_split_leakage"] = _split_leakage_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_split_leakage"}
+QUERIES["q_split_leakage"] = q_split_leakage
+ORACLES["q_split_leakage"] = _split_leakage_oracle()
 
 
 def q_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5472,9 +4727,8 @@ def _resize_oracle() -> str:
     """
 
 
-PARKED_QUERIES["q_resize"] = q_resize
-PARKED_ORACLES["q_resize"] = _resize_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_resize"}
+QUERIES["q_resize"] = q_resize
+ORACLES["q_resize"] = _resize_oracle()
 
 
 def q_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5531,74 +4785,13 @@ def _quality_drift_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_quality_drift"] = q_quality_drift
-PARKED_ORACLES["q_quality_drift"] = _quality_drift_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_quality_drift"}
+QUERIES["q_quality_drift"] = q_quality_drift
+ORACLES["q_quality_drift"] = _quality_drift_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Round-14 rotation (r13 verdict item 1): seat the five SEATING_QUEUE rows
-# (q_calibrated_gate, q_gate_funnel, q_split_leakage, q_resize,
-# q_quality_drift) — the r13 operator additions, each CI-green against its
-# DuckDB oracle since registration and passed through scripts/
-# check_oracle.py AND scripts/check_dtypes.py this session before seating
-# (the r12 decimal-hash lesson).  Parked in exchange, longest-green-first
-# among non-anchors, exactly the five the verdict names: q_ann_recall,
-# q_hits, q_clustering, q_hist_quantiles, q_time_rollup (streak 8 each).
-# Tie-breaks recorded: q_multimodal (streak 8, anomaly closed in r13)
-# COULD park but stays seated one more round so the r14 bench carries an
-# untouched same-code control row for the q_semantic_dedup isolation run
-# (r13 verdict item 3 — the control class needs a member whose history is
-# already characterized); q_bfs_levels stays as the only GRAPH_ITER bench
-# subject (standing rationale); the four BASELINE_ANCHORS never rotate.
-# Parking q_ann_recall leaves the ANN family with parked-CI coverage only
-# this round — accepted because all five ANN siblings are parked-green
-# with streaks >= 7 and the family's scale story is probe-documented
-# (SCALE_PROBE_r08/r10).
-# ---------------------------------------------------------------------------
-
-_SEAT_R14 = [
-    "q_calibrated_gate",
-    "q_gate_funnel",
-    "q_split_leakage",
-    "q_resize",
-    "q_quality_drift",
-]
-
-_PARK_R14 = [
-    "q_ann_recall",
-    "q_hits",
-    "q_clustering",
-    "q_hist_quantiles",
-    "q_time_rollup",
-]
-
-for _n in _SEAT_R14:
-    QUERIES[_n] = PARKED_QUERIES.pop(_n)
-    ORACLES[_n] = PARKED_ORACLES.pop(_n)
-for _n in _PARK_R14:
-    PARKED_QUERIES[_n] = QUERIES.pop(_n)
-    PARKED_ORACLES[_n] = ORACLES.pop(_n)
-SEATING_QUEUE = SEATING_QUEUE - frozenset(_SEAT_R14)
-
-if len(QUERIES) != 50 or set(QUERIES) != set(ORACLES):
-    raise RuntimeError(
-        f"r14 rotation broke the 50-slot window: {len(QUERIES)} seated, "
-        f"query/oracle diff {set(QUERIES) ^ set(ORACLES)}"
-    )
-if set(PARKED_QUERIES) != set(PARKED_ORACLES):
-    raise RuntimeError(
-        f"parked query/oracle diff: {set(PARKED_QUERIES) ^ set(PARKED_ORACLES)}"
-    )
-if SEATING_QUEUE & set(QUERIES):
-    raise RuntimeError(
-        f"seated rows still queued: {SEATING_QUEUE & set(QUERIES)}"
-    )
-
-
-# ---------------------------------------------------------------------------
-# r14 addition (post-rotation, r13 verdict item 6): curation run report
-# v2 — the one-call artifact a 100 TB curation run reads, composing the
+# Curation run report v2 — the one-call artifact a 100 TB curation run
+# reads, composing the
 # r13 observability operators (gate funnel at the MEASURED calibrated
 # threshold + achieved precision/recall at the pick, exact-dup cluster
 # stats, split-leakage channel counts) into a single flat
@@ -5607,8 +4800,7 @@ if SEATING_QUEUE & set(QUERIES):
 # in the operator docstring; the oracle is a
 # composition of the proven fragment oracles (gate_funnel_sql with the
 # pick CTE inlined, precision_thresholds_sql, the normalized-hash dedup
-# stats, the channel roll-up).  Parked (window full) and queued for the
-# r15 rotation.
+# stats, the channel roll-up).
 # ---------------------------------------------------------------------------
 
 _REPORT_SPLIT_EXPR = (
@@ -5685,18 +4877,16 @@ def _curation_report_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_curation_report"] = q_curation_report
-PARKED_ORACLES["q_curation_report"] = _curation_report_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_curation_report"}
+QUERIES["q_curation_report"] = q_curation_report
+ORACLES["q_curation_report"] = _curation_report_oracle()
 
 
 # ---------------------------------------------------------------------------
-# r14 additions #2: two more observability rows for the r15 queue.
-# q_gate_reasons is the funnel's per-doc debugging face (the label a
-# curation engineer greps for one document); q_precision_curve is the
-# raw operating-point curve the calibrated gate picks from — both reuse
-# the proven shared fragments (_gate_sql_parts / precision_thresholds)
-# so their oracles are compositions, not new SQL.
+# Two more observability rows.  q_gate_reasons is the funnel's per-doc
+# debugging face (the label a curation engineer greps for one document);
+# q_precision_curve is the raw operating-point curve the calibrated gate
+# picks from — both reuse the proven shared fragments (_gate_sql_parts /
+# precision_thresholds) so their oracles are compositions, not new SQL.
 # ---------------------------------------------------------------------------
 
 
@@ -5726,9 +4916,8 @@ def _gate_reasons_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_gate_reasons"] = q_gate_reasons
-PARKED_ORACLES["q_gate_reasons"] = _gate_reasons_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_gate_reasons"}
+QUERIES["q_gate_reasons"] = q_gate_reasons
+ORACLES["q_gate_reasons"] = _gate_reasons_oracle()
 
 
 def q_precision_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5771,6 +4960,5 @@ def _precision_curve_oracle() -> str:
     )
 
 
-PARKED_QUERIES["q_precision_curve"] = q_precision_curve
-PARKED_ORACLES["q_precision_curve"] = _precision_curve_oracle()
-SEATING_QUEUE = SEATING_QUEUE | {"q_precision_curve"}
+QUERIES["q_precision_curve"] = q_precision_curve
+ORACLES["q_precision_curve"] = _precision_curve_oracle()

@@ -11,8 +11,19 @@ def spark():
     # local[8] (r14): the suite is wall-clock-bound on task latency, not
     # correctness — 8 threads cut the heavy shuffle/iteration tests'
     # turnaround on a 32-core box; shuffle_partitions stays 4 so the
-    # plan-pin tests see the same exchanges
-    extra = json.loads(os.environ.get("TEST_SPARK_EXTRA", "{}"))
+    # plan-pin tests see the same exchanges.
+    # TEST_SPARK_EXTRA (a JSON object of extra Spark conf) applies only to
+    # the FIRST session created in this pytest process: get_spark ends in
+    # getOrCreate(), so once a session exists its conf is not rebuilt.
+    raw = os.environ.get("TEST_SPARK_EXTRA", "{}")
+    try:
+        extra = json.loads(raw)
+    except json.JSONDecodeError:
+        extra = None
+    if not isinstance(extra, dict):
+        raise ValueError(
+            f"TEST_SPARK_EXTRA must be a JSON object of Spark conf, got {raw!r}"
+        )
     s = get_spark(
         "tundradb-spark-tests", cpus=8, shuffle_partitions=4,
         extra_conf=extra,

@@ -1,27 +1,80 @@
 """Driver-contract invariants: the registry shape the CORRECTNESS gate
-depends on, pinned so a rotation edit cannot silently break it."""
+depends on, pinned so an edit to ``SEATED`` or the registry cannot
+silently break it."""
+
+import ast
+import pathlib
+from collections import Counter
 
 import pytest
 
 import __spark_entry__ as entry
+from tundradb_spark.pipeline import queries as pipeline_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_window_is_exactly_50_oracle_bearing_rows():
-    qs, os_ = entry.queries(), entry.oracle_sql()
-    assert len(qs) == 50, len(qs)
-    assert set(qs) == set(os_), set(qs) ^ set(os_)
-    assert all(callable(f) for f in qs.values())
-    assert all(isinstance(s, str) and s.strip() for s in os_.values())
+    seated = entry.SEATED
+    assert len(seated) == 50, len(seated)
+    dups = [n for n, k in Counter(seated).items() if k > 1]
+    assert not dups, f"SEATED names repeated: {dups}"
+    assert set(seated) <= set(entry.QUERIES), set(seated) - set(entry.QUERIES)
+    # the driver reads rows in SEATED order, query and oracle alike
+    assert list(entry.queries()) == list(seated)
+    assert list(entry.oracle_sql()) == list(seated)
 
 
 def test_parked_registry_is_oracle_consistent():
     pq, po = entry.parked_queries(), entry.parked_oracle_sql()
     assert set(pq) == set(po), set(pq) ^ set(po)
-    assert not set(pq) & set(entry.queries()), (
+    assert not set(pq) & set(entry.SEATED), (
         "a query may not be seated AND parked"
     )
+
+
+def test_every_registered_query_has_callable_and_oracle():
+    qs, os_ = entry.QUERIES, entry.ORACLES
+    assert set(qs) == set(os_), set(qs) ^ set(os_)
+    assert all(callable(f) for f in qs.values())
+    assert all(isinstance(s, str) and s.strip() for s in os_.values())
+
+
+def _registered_names(module, registry: str) -> list[str]:
+    """Every name a module registers into ``registry``: the keys of its
+    dict literal plus each ``registry["name"] = ...`` statement."""
+    names = []
+    for node in ast.parse(pathlib.Path(module.__file__).read_text()).body:
+        if (
+            isinstance(node, ast.AnnAssign)
+            and node.target.id == registry
+            and isinstance(node.value, ast.Dict)
+        ):
+            names += [k.value for k in node.value.keys if k is not None]
+        elif isinstance(node, ast.Assign):
+            t = node.targets[0]
+            if (
+                isinstance(t, ast.Subscript)
+                and isinstance(t.value, ast.Name)
+                and t.value.id == registry
+            ):
+                names.append(t.slice.value)
+    return names
+
+
+@pytest.mark.parametrize(
+    "registry, pipeline_registry",
+    [("QUERIES", "PIPELINE_QUERIES"), ("ORACLES", "PIPELINE_ORACLES")],
+)
+def test_each_query_is_registered_once(registry, pipeline_registry):
+    """A second registration of a name would silently replace the first;
+    every name must appear at exactly one registration site."""
+    names = _registered_names(entry, registry) + _registered_names(
+        pipeline_queries, pipeline_registry
+    )
+    dups = [n for n, k in Counter(names).items() if k > 1]
+    assert not dups, f"{registry}: registered more than once: {dups}"
+    assert set(names) == set(getattr(entry, registry))
 
 
 def _flat_types(dt):

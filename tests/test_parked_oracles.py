@@ -1,9 +1,10 @@
 """Oracle checks for the queries parked out of the driver's 50-slot window.
 
-The driver verifies only the first 50 ``queries()`` entries
-(``__spark_entry__`` module docstring has the rotation policy); everything
-in ``parked_queries()`` keeps its DuckDB oracle and is re-checked HERE,
-so parking costs a driver row but never verification.
+The driver verifies only the 50 ``queries()`` rows named by
+``__spark_entry__.SEATED``; seating or parking a row means editing that
+tuple.  Every other registered query is in ``parked_queries()``, keeps its
+DuckDB oracle and is re-checked HERE, so parking costs a driver row but
+never verification.
 
 Same comparison the driver runs: row count, column names, and
 order-insensitive values (scripts/check_oracle.py is the manual twin).

@@ -9,7 +9,7 @@ impossible: the set of parked-but-never-driver-checked rows is
 recomputed from the repo's own CORRECTNESS_r*.json history every CI run
 and pinned to the documented queue (``__spark_entry__.SEATING_QUEUE``).
 Adding a new parked operator REQUIRES adding it to the queue; seating it
-REQUIRES removing it.
+(adding its name to ``SEATED``) REQUIRES removing it.
 """
 
 from __future__ import annotations
@@ -49,14 +49,14 @@ def test_never_checked_parked_rows_match_documented_queue():
 
 def test_seated_rows_not_in_queue():
     # a seated row is being checked THIS round — it can't be queued
-    assert not set(entry.SEATING_QUEUE) & set(entry.queries())
+    assert not set(entry.SEATING_QUEUE) & set(entry.SEATED)
 
 
 def test_window_and_anchors():
-    seated = set(entry.queries())
-    assert len(seated) == 50
+    seated = set(entry.SEATED)
+    assert len(seated) == len(entry.SEATED) == 50
     assert entry.BASELINE_ANCHORS <= seated
-    # seat/park registries never overlap and oracles track queries
+    # seated and parked never overlap, and oracles track queries
     assert not seated & set(entry.parked_queries())
     assert set(entry.oracle_sql()) == seated
     assert set(entry.parked_oracle_sql()) == set(entry.parked_queries())

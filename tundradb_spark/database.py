@@ -927,13 +927,15 @@ def _checkpoint(df: DataFrame) -> DataFrame:
         # recomputes the frame a second time to write the checkpoint
         # files unless it was cached first — the eager form avoids that
         return df.checkpoint(eager=True)
-    # LAZY local checkpoint (r15, the r14 graph-loop discipline applied
+    # local checkpoint with eager=False (the graph-loop discipline applied
     # to DML): every mutation path follows its compaction with a count
     # action (hit/changed detection), which materializes the blocks as a
     # side effect — the eager form paid one extra scheduling round-trip
-    # per mutation for the same materialization.  Callers with no
-    # immediate action (explicit compact(), unversioned delete) simply
-    # defer the same one-time materialization to the table's next read.
+    # per mutation for the same materialization.  "Lazy" is partial: under
+    # AQE the call itself runs the shuffle map stages of a frame that has
+    # shuffles as jobs, and only the final stage waits for the next
+    # action.  Callers with no immediate action (explicit compact(),
+    # unversioned delete) defer that final stage to the table's next read.
     return df.localCheckpoint(eager=False)
 
 

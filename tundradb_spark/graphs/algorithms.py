@@ -8,12 +8,13 @@ container dependency) with the standard scale disciplines:
 - each iteration is one shuffle on the vertex/edge key;
 - iteration state is ``localCheckpoint``-ed every round to cut the growing
   lineage (without it, round k re-executes rounds 1..k-1 — quadratic work
-  and an eventual stack overflow in the planner); checkpoints are LAZY
-  (r14 optimization round): loops with a per-round action (convergence
-  count) materialize them as a side effect of that action, and
-  fixed-iteration loops chain every round into the single final job —
-  either way the eager variant's one extra scheduling round-trip per
-  frame per round is gone, and the blocks still materialize exactly once;
+  and an eventual stack overflow in the planner); checkpoints are called
+  with ``eager=False``, but that does NOT defer all work: under AQE,
+  ``localCheckpoint`` on a plan with shuffles runs the shuffle map stages
+  as jobs at call time (measured: 1 job for a one-shuffle frame, 4 for a
+  multi-shuffle one; a scan-only frame runs none).  What the lazy form
+  saves is the final result stage, which the next action (a convergence
+  count, or the single final job of a fixed-iteration loop) runs instead;
 - convergence checks are single scalar aggregations, not collects of data.
 
 ``connected_components`` composes with the dedup operators: the duplicate

@@ -972,31 +972,6 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return meta.unionByName(frames).unionByName(decode)
 
 
-PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_dedup_exact": q_dedup_exact,
-    "q_dedup_minhash": q_dedup_minhash,
-    "q_dedup_simhash": q_dedup_simhash,
-    "q_dedup_ngram_capped": q_dedup_ngram_capped,
-    "q_dedup_embed": q_dedup_embed,
-    "q_ann_topk": q_ann_topk,
-    "q_ann_lsh": q_ann_lsh,
-    "q_ann_ivf": q_ann_ivf,
-    "q_ann_ivf_trained": q_ann_ivf_trained,  # exact via n_probe=n_cells
-    "q_ann_pq": q_ann_pq,
-    "q_text_profile": q_text_profile,  # tokens + lang + fingerprint
-    "q_text_quality": q_text_quality,
-    "q_text_scores": q_text_scores,  # repetition + lm
-    "q_pii_scan": q_pii_scan,
-    "q_chunking": q_chunking,
-    "q_sample_stratified": q_sample_stratified,
-    "q_pipeline_e2e": q_pipeline_e2e,
-    "q_multimodal": q_multimodal,  # meta + frames + decode
-}
-
-#: operators that lost their driver slot to the 50-row check window — the
-#: un-capped n-gram pairs are value-subsumed by the capped variant, and the
-#: single-operator text/multimodal rows now ride the merged tag-union rows
-#: above.  Oracles retained; tests/test_parked_oracles.py still checks them.
 INC_NEW_MOD = 7
 
 
@@ -1246,21 +1221,41 @@ def q_text_lm2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARKED_PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_hll_distinct": q_hll_distinct,  # new in r5: no free driver slot
-    "q_bloom_semi": q_bloom_semi,  # new in r5: no free driver slot
-    "q_text_lm2": q_text_lm2,  # new in r5: no free driver slot
-    "q_cm_counts": q_cm_counts,  # new in r5: no free driver slot
-    "q_weighted_sample": q_weighted_sample,  # new in r5
-    "q_hll_intersect": q_hll_intersect,  # new in r5
-    "q_vocab": q_vocab,  # new in r5
-    "q_encode": q_encode,  # new in r5
-    "q_ann_recall": q_ann_recall,  # new in r5
-    "q_decontaminate": q_decontaminate,  # new in r5: no free driver slot
-    "q_dup_spans": q_dup_spans,  # new in r5: no free driver slot
-    "q_tfidf": q_tfidf,  # new in r5: no free driver slot
-    "q_zorder": q_zorder,  # new in r5: no free driver slot
-    "q_dedup_incremental": q_dedup_incremental,  # new in r5
+#: every pipeline query by name; ``__spark_entry__`` registers these and
+#: decides which rows the driver seats
+PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "q_dedup_exact": q_dedup_exact,
+    "q_dedup_minhash": q_dedup_minhash,
+    "q_dedup_simhash": q_dedup_simhash,
+    "q_dedup_ngram_capped": q_dedup_ngram_capped,
+    "q_dedup_embed": q_dedup_embed,
+    "q_ann_topk": q_ann_topk,
+    "q_ann_lsh": q_ann_lsh,
+    "q_ann_ivf": q_ann_ivf,
+    "q_ann_ivf_trained": q_ann_ivf_trained,  # exact via n_probe=n_cells
+    "q_ann_pq": q_ann_pq,
+    "q_text_profile": q_text_profile,  # tokens + lang + fingerprint
+    "q_text_quality": q_text_quality,
+    "q_text_scores": q_text_scores,  # repetition + lm
+    "q_pii_scan": q_pii_scan,
+    "q_chunking": q_chunking,
+    "q_sample_stratified": q_sample_stratified,
+    "q_pipeline_e2e": q_pipeline_e2e,
+    "q_multimodal": q_multimodal,  # meta + frames + decode
+    "q_hll_distinct": q_hll_distinct,
+    "q_bloom_semi": q_bloom_semi,
+    "q_text_lm2": q_text_lm2,
+    "q_cm_counts": q_cm_counts,
+    "q_weighted_sample": q_weighted_sample,
+    "q_hll_intersect": q_hll_intersect,
+    "q_vocab": q_vocab,
+    "q_encode": q_encode,
+    "q_ann_recall": q_ann_recall,
+    "q_decontaminate": q_decontaminate,
+    "q_dup_spans": q_dup_spans,
+    "q_tfidf": q_tfidf,
+    "q_zorder": q_zorder,
+    "q_dedup_incremental": q_dedup_incremental,
     "q_dedup_ngram": q_dedup_ngram,
     "q_text_tokens": q_text_tokens,
     "q_text_lang": q_text_lang,
@@ -2363,28 +2358,6 @@ UNION ALL
 SELECT * FROM strip
 """
 
-PIPELINE_ORACLES: dict[str, str] = {
-    "q_dedup_exact": Q_DEDUP_EXACT_SQL,
-    "q_dedup_minhash": Q_DEDUP_MINHASH_SQL,
-    "q_dedup_simhash": Q_DEDUP_SIMHASH_SQL,
-    "q_dedup_ngram_capped": Q_DEDUP_NGRAM_CAPPED_SQL,
-    "q_dedup_embed": Q_DEDUP_EMBED_UNION_SQL,
-    "q_ann_topk": Q_ANN_TOPK_SQL,
-    "q_ann_lsh": Q_ANN_LSH_SQL,
-    "q_ann_ivf": Q_ANN_IVF_SQL,
-    # trained IVF probes every cell -> exactly the brute-force top-k
-    "q_ann_ivf_trained": Q_ANN_TOPK_SQL,
-    "q_ann_pq": Q_ANN_PQ_SQL,
-    "q_text_profile": Q_TEXT_PROFILE_SQL,
-    "q_text_quality": Q_TEXT_QUALITY_SQL,
-    "q_text_scores": Q_TEXT_SCORES_SQL,
-    "q_pipeline_e2e": Q_PIPELINE_E2E_SQL,
-    "q_chunking": Q_CHUNKING_SQL,
-    "q_sample_stratified": Q_SAMPLE_STRAT_SQL,
-    "q_pii_scan": Q_PII_SCAN_SQL,
-    "q_multimodal": Q_MULTIMODAL_SQL,
-}
-
 # decontamination: same tokenization + distinct-5-gram construction as the
 # n-gram dedup oracle; benchmark universe = distinct grams of the held-out
 # slice; contamination = per-doc hit fraction
@@ -2681,7 +2654,26 @@ FROM ({sql}) a WHERE a.vec_id IN (SELECT vec_id FROM exact)"""
     )
 
 
-PARKED_PIPELINE_ORACLES: dict[str, str] = {
+PIPELINE_ORACLES: dict[str, str] = {
+    "q_dedup_exact": Q_DEDUP_EXACT_SQL,
+    "q_dedup_minhash": Q_DEDUP_MINHASH_SQL,
+    "q_dedup_simhash": Q_DEDUP_SIMHASH_SQL,
+    "q_dedup_ngram_capped": Q_DEDUP_NGRAM_CAPPED_SQL,
+    "q_dedup_embed": Q_DEDUP_EMBED_UNION_SQL,
+    "q_ann_topk": Q_ANN_TOPK_SQL,
+    "q_ann_lsh": Q_ANN_LSH_SQL,
+    "q_ann_ivf": Q_ANN_IVF_SQL,
+    # trained IVF probes every cell -> exactly the brute-force top-k
+    "q_ann_ivf_trained": Q_ANN_TOPK_SQL,
+    "q_ann_pq": Q_ANN_PQ_SQL,
+    "q_text_profile": Q_TEXT_PROFILE_SQL,
+    "q_text_quality": Q_TEXT_QUALITY_SQL,
+    "q_text_scores": Q_TEXT_SCORES_SQL,
+    "q_pipeline_e2e": Q_PIPELINE_E2E_SQL,
+    "q_chunking": Q_CHUNKING_SQL,
+    "q_sample_stratified": Q_SAMPLE_STRAT_SQL,
+    "q_pii_scan": Q_PII_SCAN_SQL,
+    "q_multimodal": Q_MULTIMODAL_SQL,
     "q_ann_recall": _ann_recall_oracle_sql(),
     "q_hll_distinct": _hll_oracle_sql(),
     "q_cm_counts": _cm_oracle_sql(),
@@ -2706,51 +2698,6 @@ PARKED_PIPELINE_ORACLES: dict[str, str] = {
     "q_multimodal_frames": Q_MM_FRAMES_SQL,
     "q_multimodal_decode": Q_MM_DECODE_SQL,
 }
-
-
-# ---------------------------------------------------------------------------
-# Round-6 rotation (r5 verdict item 1): the driver verifies only the first
-# 50 queries() entries, and 20 operators added in r5 had exact oracles and
-# CI-green parked checks but had NEVER held a driver CORRECTNESS row.  Seat
-# them; park long-frozen rows in exchange.  Parking costs a driver slot,
-# never verification — tests/test_parked_oracles.py re-checks every parked
-# oracle on each CI run, exactly as it did for the rows now being seated.
-# ---------------------------------------------------------------------------
-
-#: parked -> driver window: first-ever driver rows for the r5 additions
-_SEAT_R6 = [
-    "q_hll_distinct",
-    "q_hll_intersect",
-    "q_cm_counts",
-    "q_bloom_semi",
-    "q_text_lm2",
-    "q_weighted_sample",
-    "q_vocab",
-    "q_encode",
-    "q_decontaminate",
-    "q_dup_spans",
-    "q_tfidf",
-    "q_zorder",
-    "q_dedup_incremental",
-    "q_ann_recall",
-]
-
-#: driver window -> parked: driver-green in r3-r5 and frozen since.
-#: q_ann_topk and q_ann_ivf additionally stay driver-verified THROUGH the
-#: seated q_ann_recall, which unions both into its gauge plan.
-_PARK_R6 = [
-    "q_dedup_simhash",
-    "q_dedup_ngram_capped",
-    "q_ann_topk",
-    "q_ann_ivf",
-]
-
-for _n in _SEAT_R6:
-    PIPELINE_QUERIES[_n] = PARKED_PIPELINE_QUERIES.pop(_n)
-    PIPELINE_ORACLES[_n] = PARKED_PIPELINE_ORACLES.pop(_n)
-for _n in _PARK_R6:
-    PARKED_PIPELINE_QUERIES[_n] = PIPELINE_QUERIES.pop(_n)
-    PARKED_PIPELINE_ORACLES[_n] = PIPELINE_ORACLES.pop(_n)
 
 
 def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2821,8 +2768,8 @@ UNION ALL SELECT 'mean_quality',
     round(CAST(qsum / n_long AS DOUBLE), 6) FROM agg
 """
 
-PARKED_PIPELINE_QUERIES["q_corpus_report"] = q_corpus_report
-PARKED_PIPELINE_ORACLES["q_corpus_report"] = Q_CORPUS_REPORT_SQL
+PIPELINE_QUERIES["q_corpus_report"] = q_corpus_report
+PIPELINE_ORACLES["q_corpus_report"] = Q_CORPUS_REPORT_SQL
 
 
 DOMAIN_CAP_N = 3
@@ -2858,8 +2805,8 @@ FROM (
 ) WHERE rn <= {DOMAIN_CAP_N}
 """
 
-PARKED_PIPELINE_QUERIES["q_domain_cap"] = q_domain_cap
-PARKED_PIPELINE_ORACLES["q_domain_cap"] = Q_DOMAIN_CAP_SQL
+PIPELINE_QUERIES["q_domain_cap"] = q_domain_cap
+PIPELINE_ORACLES["q_domain_cap"] = Q_DOMAIN_CAP_SQL
 
 
 def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2889,11 +2836,11 @@ def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARKED_PIPELINE_QUERIES["q_ann_pq_trained"] = q_ann_pq_trained
+PIPELINE_QUERIES["q_ann_pq_trained"] = q_ann_pq_trained
 # refine >= corpus: the ADC pool is the whole corpus, so the exact
 # re-rank's result IS exact cosine top-k — the oracle is the proven
 # exact-top-k SQL, independent of the trained codebooks
-PARKED_PIPELINE_ORACLES["q_ann_pq_trained"] = Q_ANN_TOPK_SQL
+PIPELINE_ORACLES["q_ann_pq_trained"] = Q_ANN_TOPK_SQL
 
 
 ANN_BATCH_NQ, ANN_BATCH_CORPUS_MIN, ANN_BATCH_K = 5, 20, 5
@@ -2956,8 +2903,8 @@ QUALIFY row_number() OVER (PARTITION BY query_id
                            ORDER BY cosine DESC, vec_id) <= {ANN_BATCH_K}
 """
 
-PARKED_PIPELINE_QUERIES["q_ann_batch"] = q_ann_batch
-PARKED_PIPELINE_ORACLES["q_ann_batch"] = Q_ANN_BATCH_SQL
+PIPELINE_QUERIES["q_ann_batch"] = q_ann_batch
+PIPELINE_ORACLES["q_ann_batch"] = Q_ANN_BATCH_SQL
 
 
 LSH_BATCH_NQ = 4
@@ -3028,8 +2975,8 @@ QUALIFY row_number() OVER (PARTITION BY query_id
 """
 
 
-PARKED_PIPELINE_QUERIES["q_ann_lsh_batch"] = q_ann_lsh_batch
-PARKED_PIPELINE_ORACLES["q_ann_lsh_batch"] = _lsh_batch_sql()
+PIPELINE_QUERIES["q_ann_lsh_batch"] = q_ann_lsh_batch
+PIPELINE_ORACLES["q_ann_lsh_batch"] = _lsh_batch_sql()
 
 
 SPLIT_BP = {"train": 8000, "val": 1000, "test": 1000}
@@ -3064,8 +3011,8 @@ def _split_oracle_sql() -> str:
     """
 
 
-PARKED_PIPELINE_QUERIES["q_split"] = q_split
-PARKED_PIPELINE_ORACLES["q_split"] = _split_oracle_sql()
+PIPELINE_QUERIES["q_split"] = q_split
+PIPELINE_ORACLES["q_split"] = _split_oracle_sql()
 
 
 BPE_MERGES, BPE_WORD_TYPES = 6, 300
@@ -3155,8 +3102,8 @@ def _bpe_oracle_sql() -> str:
     )
 
 
-PARKED_PIPELINE_QUERIES["q_bpe"] = q_bpe
-PARKED_PIPELINE_ORACLES["q_bpe"] = _bpe_oracle_sql()
+PIPELINE_QUERIES["q_bpe"] = q_bpe
+PIPELINE_ORACLES["q_bpe"] = _bpe_oracle_sql()
 
 
 def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3190,8 +3137,8 @@ FROM s{BPE_MERGES}
     )
 
 
-PARKED_PIPELINE_QUERIES["q_bpe_segment"] = q_bpe_segment
-PARKED_PIPELINE_ORACLES["q_bpe_segment"] = _bpe_segment_oracle_sql()
+PIPELINE_QUERIES["q_bpe_segment"] = q_bpe_segment
+PIPELINE_ORACLES["q_bpe_segment"] = _bpe_segment_oracle_sql()
 
 
 CDC_K, CDC_BITS = 8, 5
@@ -3240,8 +3187,8 @@ FROM (
 """
 
 
-PARKED_PIPELINE_QUERIES["q_cdc_chunks"] = q_cdc_chunks
-PARKED_PIPELINE_ORACLES["q_cdc_chunks"] = _cdc_oracle_sql()
+PIPELINE_QUERIES["q_cdc_chunks"] = q_cdc_chunks
+PIPELINE_ORACLES["q_cdc_chunks"] = _cdc_oracle_sql()
 
 
 TEMP_ALPHA, TEMP_TOKENS = 0.5, 20_000
@@ -3297,8 +3244,8 @@ WHERE {coin} < p.kept_bp
 """
 
 
-PARKED_PIPELINE_QUERIES["q_temperature"] = q_temperature
-PARKED_PIPELINE_ORACLES["q_temperature"] = _temperature_oracle_sql()
+PIPELINE_QUERIES["q_temperature"] = q_temperature
+PIPELINE_ORACLES["q_temperature"] = _temperature_oracle_sql()
 
 
 SEM_THRESHOLD = 0.30
@@ -3348,8 +3295,8 @@ FROM withn w LEFT JOIN dropped d ON w.vec_id = d.vec_id
 """
 
 
-PARKED_PIPELINE_QUERIES["q_semantic_dedup"] = q_semantic_dedup
-PARKED_PIPELINE_ORACLES["q_semantic_dedup"] = _semantic_oracle_sql()
+PIPELINE_QUERIES["q_semantic_dedup"] = q_semantic_dedup
+PIPELINE_ORACLES["q_semantic_dedup"] = _semantic_oracle_sql()
 
 
 FUZZY_MAX_DIST, FUZZY_KEYS = 1, 500
@@ -3381,8 +3328,8 @@ FROM p a JOIN p b ON a.id < b.id
 WHERE levenshtein(a.s, b.s) <= {FUZZY_MAX_DIST}
 """
 
-PARKED_PIPELINE_QUERIES["q_fuzzy_pairs"] = q_fuzzy_pairs
-PARKED_PIPELINE_ORACLES["q_fuzzy_pairs"] = Q_FUZZY_SQL
+PIPELINE_QUERIES["q_fuzzy_pairs"] = q_fuzzy_pairs
+PIPELINE_ORACLES["q_fuzzy_pairs"] = Q_FUZZY_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -3505,8 +3452,8 @@ SELECT 'strip' AS grp, CAST(doc_id AS BIGINT) AS k1,
 FROM strip
 """
 
-PARKED_PIPELINE_QUERIES["q_substr_spans"] = q_substr_spans
-PARKED_PIPELINE_ORACLES["q_substr_spans"] = Q_SUBSTR_SPANS_SQL
+PIPELINE_QUERIES["q_substr_spans"] = q_substr_spans
+PIPELINE_ORACLES["q_substr_spans"] = Q_SUBSTR_SPANS_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -3630,8 +3577,8 @@ FROM pred p JOIN documents d ON p.doc_id = d.doc_id
 GROUP BY p.pred_label, d.lang
 """
 
-PARKED_PIPELINE_QUERIES["q_classify"] = q_classify
-PARKED_PIPELINE_ORACLES["q_classify"] = Q_CLASSIFY_SQL
+PIPELINE_QUERIES["q_classify"] = q_classify
+PIPELINE_ORACLES["q_classify"] = Q_CLASSIFY_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -3711,8 +3658,8 @@ FROM toks t JOIN groups g ON t.dup_hash = g.dup_hash
 LEFT JOIN cov v ON g.rep_id = v.rep_id
 """
 
-PARKED_PIPELINE_QUERIES["q_soft_dedup"] = q_soft_dedup
-PARKED_PIPELINE_ORACLES["q_soft_dedup"] = Q_SOFT_DEDUP_SQL
+PIPELINE_QUERIES["q_soft_dedup"] = q_soft_dedup
+PIPELINE_ORACLES["q_soft_dedup"] = Q_SOFT_DEDUP_SQL
 
 
 # --- r10 addition: perceptual-hash (dHash) image dedup ---
@@ -3761,8 +3708,8 @@ def _phash_dedup_sql() -> str:
     return dhash_pairs_sql(corpus, max_hamming=PHASH_MAX_HAMMING)
 
 
-PARKED_PIPELINE_QUERIES["q_phash_dedup"] = q_phash_dedup
-PARKED_PIPELINE_ORACLES["q_phash_dedup"] = _phash_dedup_sql()
+PIPELINE_QUERIES["q_phash_dedup"] = q_phash_dedup
+PIPELINE_ORACLES["q_phash_dedup"] = _phash_dedup_sql()
 
 
 # --- r10 addition: audio windowed-energy fingerprints ---
@@ -3796,8 +3743,8 @@ def _audio_fp_sql() -> str:
     return audio_fingerprint_sql("documents")
 
 
-PARKED_PIPELINE_QUERIES["q_audio_fp"] = q_audio_fp
-PARKED_PIPELINE_ORACLES["q_audio_fp"] = _audio_fp_sql()
+PIPELINE_QUERIES["q_audio_fp"] = q_audio_fp
+PIPELINE_ORACLES["q_audio_fp"] = _audio_fp_sql()
 
 
 # --- r10 addition: dedup precision/recall gauge ---
@@ -3884,8 +3831,8 @@ SELECT n_true, n_pred, n_hit,
 FROM c
 """
 
-PARKED_PIPELINE_QUERIES["q_dedup_recall"] = q_dedup_recall
-PARKED_PIPELINE_ORACLES["q_dedup_recall"] = Q_DEDUP_RECALL_SQL
+PIPELINE_QUERIES["q_dedup_recall"] = q_dedup_recall
+PIPELINE_ORACLES["q_dedup_recall"] = Q_DEDUP_RECALL_SQL
 
 
 # --- r11 addition (r10 verdict item 5): the gauge's corpus-scale mode ---
@@ -3933,8 +3880,8 @@ def _recall_sampled_sql() -> str:
     return Q_DEDUP_RECALL_SQL.replace(_RECALL_CORPUS, sampled_corpus)
 
 
-PARKED_PIPELINE_QUERIES["q_dedup_recall_sampled"] = q_dedup_recall_sampled
-PARKED_PIPELINE_ORACLES["q_dedup_recall_sampled"] = _recall_sampled_sql()
+PIPELINE_QUERIES["q_dedup_recall_sampled"] = q_dedup_recall_sampled
+PIPELINE_ORACLES["q_dedup_recall_sampled"] = _recall_sampled_sql()
 
 
 # --- r10 addition: video scene-change detection ---
@@ -3970,8 +3917,8 @@ def _scene_cuts_sql() -> str:
     )
 
 
-PARKED_PIPELINE_QUERIES["q_scene_cuts"] = q_scene_cuts
-PARKED_PIPELINE_ORACLES["q_scene_cuts"] = _scene_cuts_sql()
+PIPELINE_QUERIES["q_scene_cuts"] = q_scene_cuts
+PIPELINE_ORACLES["q_scene_cuts"] = _scene_cuts_sql()
 
 
 # --- r10 addition: vocabulary coverage curve ---
@@ -3995,5 +3942,5 @@ def _vocab_coverage_sql() -> str:
     return vocab_coverage_sql("documents", sizes=COVERAGE_SIZES)
 
 
-PARKED_PIPELINE_QUERIES["q_vocab_coverage"] = q_vocab_coverage
-PARKED_PIPELINE_ORACLES["q_vocab_coverage"] = _vocab_coverage_sql()
+PIPELINE_QUERIES["q_vocab_coverage"] = q_vocab_coverage
+PIPELINE_ORACLES["q_vocab_coverage"] = _vocab_coverage_sql()
