@@ -495,18 +495,19 @@ def q_shared_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6 graph analytics composed with dedup: MinHash-LSH pairs →
     connected components → duplicate clusters (doc_id, keep_id=min of
-    cluster). Min-label propagation, one join+groupBy per round,
-    localCheckpoint between rounds."""
+    cluster). Min-label propagation with pointer jumping, one
+    materialization per round."""
     from tundradb_spark.graphs.algorithms import (
         _sym_edges,
         connected_components,
     )
+    from tundradb_spark.session import materialize
 
     pairs = q_dedup_minhash(spark, sf_dir)
     # r7: symmetrize+dedup+checkpoint the pair graph ONCE — CC and LPA
     # both consume it (presymmetrized=True), saving a full
     # shuffle-distinct-materialize per algorithm
-    edges = _sym_edges(pairs, "id_a", "id_b").localCheckpoint()
+    edges = materialize(_sym_edges(pairs, "id_a", "id_b"))
     cc = connected_components(edges, "u", "v", presymmetrized=True).select(
         F.lit("cc").alias("grp"),
         F.col("vertex").cast("long").alias("doc_id"),

@@ -264,3 +264,24 @@ def test_show_edge_types_single_lazy_plan(jdb):
         ("LIKES", 1),
         ("WORKS_AT", 2),
     }
+
+
+def test_pending_id_probe_duplicate_id_multiplicity(db, spark):
+    # resume_counter=False leaves the id counter at 0, so create_node hands
+    # out an id the registered frame already holds.  While the new row is
+    # pending, the driver-side id probe resolves the selector to that id
+    # ONCE; after a flush the distributed path returns one entry per
+    # matching row.  Pins both multiplicities and that the pending-id set
+    # is emptied with the buffer.
+    db.register_node_table(
+        "p", spark.createDataFrame([(0, "old")], "id long, name string"),
+        resume_counter=False,
+    )
+    assert db.create_node("p", name="new") == 0
+    assert db._resolve_selector(("p", 0)) == [0]
+    assert len(db.connect("knows", ("p", 0), ("p", 0), unique=True)) == 1
+    assert db.get_table("p").filter("id = 0").count() == 2  # flushes pending
+    assert db._resolve_selector(("p", 0)) == [0, 0]
+    with pytest.raises(QueryError):
+        db.connect("knows", ("p", 0), ("p", 0), unique=True)
+    assert len(db.connect("knows", ("p", 0), ("p", 0))) == 4

@@ -499,3 +499,150 @@ class TestKCoreFixpoint:
         )
         with pytest.raises(RuntimeError, match="fixpoint"):
             k_core(df, 2, max_iters=2)
+
+
+def _jobs_in(spark, group, fn):
+    """Spark jobs ``fn()`` submits, counted with a job group (any job
+    submitted while the group is active lands in it)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestJobsPerRound:
+    """Each round of an iterative operator is one materialization, and its
+    convergence value comes from that job: the per-round job count is the
+    round plan's exchanges + 1, with no separate action."""
+
+    def test_pagerank_round_costs_at_most_three_jobs(self, spark):
+        from pyspark.sql import functions as F
+
+        from tundradb_spark.graphs.algorithms import pagerank
+
+        # a 30-cycle plus edges from every third vertex into the sink 30.
+        # Built from range scans so the planner knows its size (as for a
+        # parquet scan) and broadcasts a join side; an input of unknown
+        # size plans a sort-merge join, one more exchange per round.
+        ring = spark.range(30).select(
+            F.col("id").alias("source_id"), ((F.col("id") + 1) % 30).alias("target_id")
+        )
+        sink = spark.range(0, 30, 3).select(
+            F.col("id").alias("source_id"), F.lit(30).cast("long").alias("target_id")
+        )
+        e = ring.union(sink)
+        pagerank(e, iters=2).collect()  # warm-up: codegen
+        two = _jobs_in(spark, "pr-iters-2", lambda: pagerank(e, iters=2).collect())
+        three = _jobs_in(spark, "pr-iters-3", lambda: pagerank(e, iters=3).collect())
+        # one broadcast of the smaller join side, one shuffle map stage for
+        # the destination groupBy, one final stage that also observes Σrecv
+        assert three - two <= 3, (two, three)
+
+    def test_cc_round_fires_no_separate_convergence_job(self, spark, monkeypatch):
+        from tundradb_spark.graphs import algorithms
+
+        sc = spark.sparkContext
+        call_group = "cc-call"
+        materialize = algorithms.materialize
+
+        def grouped(*args, **kwargs):
+            sc.setJobGroup("cc-materialize", "cc-materialize")
+            try:
+                return materialize(*args, **kwargs)
+            finally:
+                sc.setJobGroup(call_group, call_group)
+
+        monkeypatch.setattr(algorithms, "materialize", grouped)
+        # a 16-vertex path with shuffled ids needs several rounds
+        ids = [7, 3, 12, 0, 15, 9, 4, 11, 1, 14, 6, 10, 2, 13, 5, 8]
+        df = spark.createDataFrame(
+            list(zip(ids, ids[1:])), "id_a long, id_b long"
+        )
+        labels = {}
+        outside = _jobs_in(
+            spark, call_group,
+            lambda: labels.update(algorithms.connected_components(df).collect()),
+        )
+        assert labels == {v: 0 for v in ids}
+        # the only job outside a materialization is the final collect
+        assert outside == 1, outside
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from tundradb_spark.graphs import algorithms as A
+from tundradb_spark.session import get_spark
+
+marks = sys.argv[1]
+spark = get_spark("retry-probe", cpus=2, extra_conf={"spark.master": "local[2,2]"})
+spark.sparkContext.setLogLevel("ERROR")
+rows = (
+    [(i, i + 1) for i in range(0, 20)]                # a path
+    + [(i, (i * 7) % 15 + 30) for i in range(30, 45)]  # a tangle
+    + [(50 + i, 50 + (i * 3 + 1) % 11) for i in range(11)]
+)
+
+
+def fail_first_attempt(x):
+    tc = TaskContext.get()
+    if tc.partitionId() == 0 and tc.attemptNumber() == 0:
+        open(os.path.join(marks, f"stage-{tc.stageId()}"), "w").close()
+        raise RuntimeError("injected failure of a first task attempt")
+    return x
+
+
+def run(edges):
+    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    srcs = spark.createDataFrame([(0,), (33,)], "vertex long")
+    return {
+        "labels": sorted(map(tuple, A.connected_components(edges, "src", "dst").collect())),
+        "levels": sorted(map(tuple, A.bfs_levels(sym, srcs, "src", "dst", max_hops=30).collect())),
+        "ranks": sorted(map(tuple, A.pagerank(edges, "src", "dst", iters=4).collect())),
+    }
+
+
+plain = run(spark.createDataFrame(rows, "src long, dst long").repartition(3))
+spark.sparkContext.setCheckpointDir(os.path.join(marks, "ckpt"))
+flaky = F.udf(fail_first_attempt, "long")
+retried = run(
+    spark.createDataFrame(rows, "src long, dst long").repartition(3)
+    .select(flaky("src").alias("src"), "dst")
+)
+print("RESULT " + json.dumps({"plain": plain, "retried": retried}))
+spark.stop()
+"""
+
+
+def test_reliable_checkpoint_dir_and_task_retry_keep_results(tmp_path):
+    """CC, BFS and PageRank under a reliable checkpoint dir on local[2,2],
+    with the input passed through a UDF that fails the first attempt of
+    partition 0: results equal a plain run, so observed convergence values
+    are neither lost nor double-counted.  A subprocess keeps the
+    checkpoint dir and the master out of the shared test session."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo + os.pathsep + os.environ.get("PYTHONPATH", "")}
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    line = next(x for x in proc.stdout.splitlines() if x.startswith("RESULT "))
+    got = json.loads(line[len("RESULT "):])
+    plain, retried = got["plain"], got["retried"]
+    assert any(p.startswith("stage-") for p in os.listdir(tmp_path))  # retried
+    assert os.listdir(tmp_path / "ckpt")  # reliable checkpoints were written
+    assert retried["labels"] == plain["labels"]
+    assert retried["levels"] == plain["levels"]
+    assert [v for v, _ in retried["ranks"]] == [v for v, _ in plain["ranks"]]
+    for (_, a), (_, b) in zip(retried["ranks"], plain["ranks"]):
+        assert abs(a - b) <= 1e-12

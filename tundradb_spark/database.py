@@ -32,6 +32,7 @@ from tundradb_spark.catalog import (
 )
 from tundradb_spark.errors import QueryError, SchemaError
 from tundradb_spark.query import Query
+from tundradb_spark.session import materialize
 from tundradb_spark.temporal import now_ms, resolve_as_of, stamp_initial_version
 
 
@@ -47,6 +48,9 @@ class _Table:
     struct: T.StructType  # logical struct (no version cols)
     frame: DataFrame | None = None  # physical rows (version cols if versioned)
     pending: list[dict] = field(default_factory=list)
+    #: the ``id`` of every ``pending`` row, kept in step with it: the O(1)
+    #: probe behind the point-selector fast path
+    pending_ids: set[int] = field(default_factory=set)
     versioned: bool = False  # node tables only; edges stay unversioned
     #: mutated since the last COMMIT/restore — the reference's dirty-shard
     #: tracking (src/storage/snapshot_manager.cpp: only dirty shards are
@@ -145,6 +149,7 @@ class Database:
             fresh = self.spark.createDataFrame(rows, struct)
             t.frame = fresh if t.frame is None else t.frame.unionByName(fresh)
             t.pending = []
+            t.pending_ids.clear()
         return t.frame if t.frame is not None else self._empty(t)
 
     def _node(self, name: str) -> _Table:
@@ -215,6 +220,7 @@ class Database:
                 valid_from=ts, valid_to=MAX_TS, tx_from=ts, tx_to=MAX_TS, version_id=0
             )
         t.pending.append(row)
+        t.pending_ids.add(nid)
         t.dirty = True
         return nid
 
@@ -408,6 +414,7 @@ class Database:
                     **{p: props.get(p) for p in prop_fields},
                 }
                 t.pending.append(row)
+                t.pending_ids.add(eid)
                 ids.append(eid)
         if ids:  # zero appended edges must not mark the table dirty (a
             # no-op would needlessly re-serialize it at the next COMMIT)
@@ -437,16 +444,21 @@ class Database:
         # a distributed job for a point lookup it can answer itself): a
         # node still in the PENDING buffer was just created and is alive
         # by construction (updates/deletes flush pending into the frame
-        # first), so the id probe is a driver-side list scan.  When the
+        # first), so the id probe is a driver-side set lookup.  When the
         # table has no physical frame at all, pending IS the table.  Any
         # other case falls through to the distributed path unchanged.
+        # A pending hit resolves to the id ONCE, even if the frame holds
+        # another row with that id (possible after
+        # register_node_table(resume_counter=False)); the distributed path
+        # returns one entry per matching row (both pinned by
+        # test_pending_id_probe_duplicate_id_multiplicity).
         # Interactive edge wiring (connect after create_node, the
         # reference shell's shape) previously paid two Spark jobs per
         # edge just to re-find ids it had assigned moments before.
         schema, key = sel
         if isinstance(key, int) and not isinstance(key, bool):
             t = self._node(schema)
-            if any(r.get(ID_COL) == key for r in t.pending):
+            if key in t.pending_ids:
                 return [key]
             if t.frame is None:
                 return []
@@ -847,7 +859,7 @@ class Database:
     def compact(
         self, node: str | None = None, edge: str | None = None
     ) -> None:
-        """Truncate COW lineage by localCheckpoint-ing table frames.
+        """Truncate COW lineage by checkpointing table frames (``_checkpoint``).
 
         Every mutation layers another plan node (union / when-otherwise) on
         the frame; a long-running ingest stream would grow planning time and
@@ -888,13 +900,15 @@ class Database:
 
 
 def _checkpoint(df: DataFrame) -> DataFrame:
-    """Materialize a frame and cut its lineage.
+    """Materialize a table frame and cut its lineage through
+    :func:`~tundradb_spark.session.materialize`: reliable and eager when
+    a checkpoint dir is set (cluster deployments: blocks survive executor
+    loss), otherwise local and lazy.
 
-    Uses the RELIABLE checkpoint dir when one is configured
-    (``sc.setCheckpointDir`` — cluster deployments: blocks survive executor
-    loss); otherwise ``localCheckpoint`` (single-node fast path — blocks live
-    only on executors, so an executor loss makes the frame unrecoverable;
-    acceptable in local mode, round-2 ADVICE).
+    Lazy because every mutation path follows its compaction with a count
+    action (hit/changed detection), which runs the final stage; callers
+    with no immediate action (explicit compact(), unversioned delete)
+    defer it to the table's next read.
 
     Reliable checkpoint files are NOT auto-deleted by default — a
     k-mutation session would leak k full table copies to durable storage.
@@ -921,22 +935,7 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     # unconditionally is a no-op below the cap — and skips the physical
     # planning round-trip an rdd.getNumPartitions() probe would pay on
     # every mutation
-    df = df.coalesce(cap)
-    if sc.getCheckpointDir() is not None:
-        # reliable checkpoints stay EAGER: a lazy Dataset.checkpoint
-        # recomputes the frame a second time to write the checkpoint
-        # files unless it was cached first — the eager form avoids that
-        return df.checkpoint(eager=True)
-    # local checkpoint with eager=False (the graph-loop discipline applied
-    # to DML): every mutation path follows its compaction with a count
-    # action (hit/changed detection), which materializes the blocks as a
-    # side effect — the eager form paid one extra scheduling round-trip
-    # per mutation for the same materialization.  "Lazy" is partial: under
-    # AQE the call itself runs the shuffle map stages of a frame that has
-    # shuffles as jobs, and only the final stage waits for the next
-    # action.  Callers with no immediate action (explicit compact(),
-    # unversioned delete) defer that final stage to the table's next read.
-    return df.localCheckpoint(eager=False)
+    return materialize(df.coalesce(cap), eager=False)
 
 
 #: monotonically_increasing_id layout: partition id in the high bits, the

@@ -5,17 +5,18 @@ algorithms at all, only pattern-match traversal).
 Implemented directly as iterative DataFrame programs (GraphFrames is not a
 container dependency) with the standard scale disciplines:
 
-- each iteration is one shuffle on the vertex/edge key;
-- iteration state is ``localCheckpoint``-ed every round to cut the growing
-  lineage (without it, round k re-executes rounds 1..k-1 — quadratic work
-  and an eventual stack overflow in the planner); checkpoints are called
-  with ``eager=False``, but that does NOT defer all work: under AQE,
-  ``localCheckpoint`` on a plan with shuffles runs the shuffle map stages
-  as jobs at call time (measured: 1 job for a one-shuffle frame, 4 for a
-  multi-shuffle one; a scan-only frame runs none).  What the lazy form
-  saves is the final result stage, which the next action (a convergence
-  count, or the single final job of a fixed-iteration loop) runs instead;
-- convergence checks are single scalar aggregations, not collects of data.
+- each round is a Pregel superstep (GraphX, OSDI 2014): the edge list is
+  materialized once and stays put, and only vertex state moves;
+- each round materializes ONCE, through ``session.materialize``, which
+  cuts the lineage (without it round k re-executes rounds 1..k-1) and
+  honors a reliable checkpoint dir.  Under AQE every shuffle or broadcast
+  stage of that plan runs as its own job, so a round costs (its exchanges
+  + 1) jobs, and a round plan is kept to the fewest exchanges that
+  compute it;
+- a round's convergence value (changed labels, frontier size, dangling
+  mass, improved distances, surviving edges) is an aggregate OBSERVED by
+  that same job, never a second action.  Label propagation's optional
+  stability check is the one exception: it still joins and counts.
 
 ``connected_components`` composes with the dedup operators: the duplicate
 PAIRS from minhash/simhash/embedding LSH become duplicate CLUSTERS (pick
@@ -24,7 +25,9 @@ PAIRS from minhash/simhash/embedding LSH become duplicate CLUSTERS (pick
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
+
+from tundradb_spark.session import materialize
 
 
 def _sym_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -65,17 +68,11 @@ def connected_components(
     ``presymmetrized=True`` declares ``pairs`` an ALREADY symmetrized,
     deduped, materialized (u, v) edge list — callers running several
     algorithms over the same pair graph (q_dup_clusters: CC + LPA) build
-    ``_sym_edges(...).localCheckpoint(eager=False)`` once instead of paying the
+    ``materialize(_sym_edges(...))`` once instead of paying the
     symmetrize-distinct shuffle and its checkpoint per algorithm.
 
     Returns ``(vertex, component)`` — component = min id of the cluster.
     """
-    # checkpoints are LAZY (r14 optimization round): every round already
-    # ends in a driver action (the `changed` count), which materializes
-    # the marked frame as a side effect — eager checkpoints paid one
-    # extra scheduling round-trip per frame per round for the same
-    # materialization (A/B at sf0.1 over the MinHash pair graph:
-    # best 3.56 -> 2.65 s, outputs identical)
     if presymmetrized:
         edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     else:
@@ -87,26 +84,26 @@ def connected_components(
         # repeated pairs).  degrees()/label_propagation keep _sym_edges'
         # distinct — their COUNT aggregates are not duplicate-invariant.
         e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        edges = (
+        edges = materialize(
             e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .localCheckpoint(eager=False)
+            .filter(F.col("u") != F.col("v")),
+            eager=False,
         )
     # seed each vertex with its 1-hop neighborhood minimum instead of the
     # identity label (r14 optimization round): the groupBy costs the same
     # one shuffle the old `distinct` init paid, but starts the loop in
     # exactly the state round 1's neighbor-min step would have produced —
-    # one fewer full round (2 joins + checkpoint + count action) on every
-    # graph (A/B at sf0.1 over the MinHash pair graph: best 2.46 -> 1.93 s;
-    # labelings identical, including on a 300-vertex path)
-    labels = (
+    # one fewer full round on every graph (A/B at sf0.1 over the MinHash
+    # pair graph: best 2.46 -> 1.93 s; labelings identical, including on a
+    # 300-vertex path)
+    labels = materialize(
         edges.groupBy(F.col("u").alias("vertex"))
         .agg(F.min("v").alias("__nb"))
         .select(
             "vertex",
             F.least(F.col("vertex"), F.col("__nb")).alias("component"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     # frontier-restricted propagation (r15, r14 verdict item 7 / guide
     # §2.3 "shuffle fewer bytes"): only labels that DECREASED last round
@@ -121,29 +118,36 @@ def connected_components(
     frontier = labels
     changed = 1
     for _ in range(max_iters):
-        # neighbor labels: min label among CHANGED neighbors (identical
-        # to the min over all neighbors — see frontier note above)
-        nbr = (
-            edges.join(frontier, edges["v"] == frontier["vertex"], "inner")
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(F.min("component").alias("nbr_min"))
+        # own label and the labels of CHANGED neighbors (the min over
+        # them equals the min over all neighbors — see frontier note
+        # above) as one tagged union under ONE groupBy: a left join of
+        # labels against the per-vertex neighbor minimum would shuffle
+        # both sides again.  Every vertex has a label row (edges are
+        # symmetric), so the group's own-label maximum is its old label.
+        nbr = edges.join(frontier, edges["v"] == frontier["vertex"]).select(
+            F.col("u").alias("vertex"), "component", F.lit(False).alias("__own")
         )
-        stepped = labels.join(nbr, "vertex", "left").select(
-            "vertex",
-            F.col("component").alias("__old"),
-            F.least(
-                F.col("component"), F.coalesce("nbr_min", F.col("component"))
-            ).alias("__c1"),
+        stepped = (
+            labels.withColumn("__own", F.lit(True))
+            .unionByName(nbr)
+            .groupBy("vertex")
+            .agg(
+                F.max(F.when(F.col("__own"), F.col("component"))).alias("__old"),
+                F.min("component").alias("__c1"),
+            )
         )
         # pointer jump: follow my label's label (labels are always vertex
         # ids, so __c1 resolves against the same table) — halves label
-        # distance to the component minimum every round
+        # distance to the component minimum every round.  __pc reads
+        # __old too (least(__old, __c1) IS __c1: the own label is among
+        # the minimized values), so column pruning leaves both sides of
+        # this self-join the same plan and they share its exchanges
         par = stepped.select(
-            F.col("vertex").alias("__pv"), F.col("__c1").alias("__pc")
+            F.col("vertex").alias("__pv"),
+            F.least("__old", "__c1").alias("__pc"),
         )
-        new_labels = (
-            stepped.join(par, stepped["__c1"] == par["__pv"], "left")
-            .select(
+        new_labels, stats = materialize(
+            stepped.join(par, stepped["__c1"] == par["__pv"], "left").select(
                 "vertex",
                 F.least(
                     F.col("__c1"), F.coalesce("__pc", F.col("__c1"))
@@ -154,13 +158,13 @@ def connected_components(
                     )
                     < F.col("__old")
                 ).alias("changed"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            F.count_if("changed").alias("changed"),
         )
-        changed = new_labels.filter("changed").limit(1).count()
+        changed = stats["changed"]
         labels = new_labels.drop("changed")
         # next round's frontier: the rows whose component just decreased
-        # (a lazy filter over the round's already-materialized checkpoint)
+        # (a lazy filter over the round's materialized labels)
         frontier = new_labels.filter("changed").select("vertex", "component")
         if changed == 0:
             break
@@ -197,17 +201,100 @@ def degrees(pairs: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame
     )
 
 
-def _l1_delta(cur: DataFrame, prev: DataFrame, val: str) -> float:
-    """Σ|cur − prev| over the shared vertex set — one join + a 1-row
-    aggregate (bounded collect)."""
-    row = (
-        cur.join(
-            prev.withColumnRenamed(val, "__prev"), "vertex", "inner"
-        )
-        .agg(F.sum(F.abs(F.col(val) - F.col("__prev"))).alias("d"))
-        .first()
+def _out_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The deduped directed edge list ``(u, v, outdeg)``, out-degree
+    attached once, materialized lazily: the loop-invariant side of every
+    power-iteration round."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
+    return materialize(
+        e.withColumn("outdeg", F.count(F.lit(1)).over(Window.partitionBy("u"))),
+        eager=False,
     )
-    return float(row["d"] or 0.0)
+
+
+def _power_iteration(
+    eo: DataFrame,
+    pv: DataFrame,
+    n: int,
+    damping: float,
+    iters: int,
+    tol: float | None,
+) -> DataFrame:
+    """The power-iteration loop :func:`pagerank` and
+    :func:`personalized_pagerank` share.  ``eo`` is :func:`_out_edges`,
+    ``pv`` the ``(vertex, p)`` reset vector over all ``n`` vertices (1.0
+    everywhere for PageRank); ranks start at ``p``.
+
+    One round is one materialization of
+    ``groupBy(vertex).sum`` over the union of a zero contribution per
+    vertex (which also carries ``p``) and the real contributions
+    ``rank / outdeg`` along each edge, so every vertex gets a row without
+    a join (``x + 0.0 == x``, the sums are unchanged).  The same job
+    observes ``Σrecv``; the dangling mass ``n − Σrecv`` (rank not passed
+    along any edge) then enters the next rank as a literal:
+    ``(1 − d)·p + d·(recv + dangling·p / n)``, so ranks sum to ``n`` every
+    round.
+
+    ``tol``: each round's zero rows also carry ``|rank − previous rank|``,
+    so round k+1's job observes the L1 delta of round k; once it is below
+    ``tol`` the loop returns round k's ranks.  Same result as checking
+    after round k, for the price of one speculative round instead of an
+    extra join and action every round.
+    """
+    track = tol is not None
+    carry = ["prev", "dl"] if track else []
+    ranks = pv.select(
+        "vertex", "p", F.col("p").alias("rank"),
+        *([F.col("p").alias("prev")] if track else []),
+    )
+    for i in range(iters):
+        zeros = ranks.select(
+            "vertex",
+            F.lit(0.0).alias("c"),
+            "p",
+            *(
+                [
+                    F.col("rank").alias("prev"),
+                    F.abs(F.col("rank") - F.col("prev")).alias("dl"),
+                ]
+                if track
+                else []
+            ),
+        )
+        contribs = eo.join(
+            ranks.select(F.col("vertex").alias("u"), "rank"), "u"
+        ).select(
+            F.col("v").alias("vertex"),
+            (F.col("rank") / F.col("outdeg")).alias("c"),
+            *[F.lit(0.0).alias(c) for c in ("p", *carry)],
+        )
+        summed, stats = materialize(
+            zeros.unionByName(contribs)
+            .groupBy("vertex")
+            .agg(
+                F.sum("c").alias("recv"),
+                *[F.sum(c).alias(c) for c in ("p", *carry)],
+            ),
+            F.sum("recv").alias("recv"),
+            *([F.sum("dl").alias("delta")] if track else []),
+        )
+        if track and i > 0 and (stats["delta"] or 0.0) < tol:
+            break  # the previous round's ranks are within tol of their own
+        dangling = float(n) - (stats["recv"] or 0.0)
+        ranks = summed.select(
+            "vertex",
+            "p",
+            (
+                F.lit(1.0 - damping) * F.col("p")
+                + F.lit(damping)
+                * (
+                    F.col("recv")
+                    + F.lit(dangling) * F.col("p") / F.lit(float(n))
+                )
+            ).alias("rank"),
+            *(["prev"] if track else []),
+        )
+    return ranks.select("vertex", "rank")
 
 
 def pagerank(
@@ -220,77 +307,29 @@ def pagerank(
 ) -> DataFrame:
     """Standard power-iteration PageRank over a directed edge DataFrame.
 
-    Each iteration: one join (rank × out-degree) + one groupBy on the
-    destination (contributions), checkpointed. Dangling-node mass is
-    redistributed uniformly so ranks sum to |V| every round (the convention
-    GraphX uses with ``resetProb = 1 - damping``).
+    Each round is one materialization: the rank × edge join (the
+    out-degree rides on the edge list) and one groupBy on the destination
+    (see :func:`_power_iteration`).  Dangling-node mass is redistributed
+    uniformly so ranks sum to |V| every round (the convention GraphX uses
+    with ``resetProb = 1 - damping``).
 
     ``tol``: convergence-based early exit — stop as soon as the L1 rank
     delta of a round falls below ``tol`` (``iters`` becomes the CAP, not
-    the fixed cost; the check is one extra join + 1-row aggregate per
-    round, only when requested).  ``tol=None`` (default) runs exactly
-    ``iters`` rounds — the mode the unrolled SQL oracles pin.
+    the fixed cost; the delta is observed by the next round's job).
+    ``tol=None`` (default) runs exactly ``iters`` rounds — the mode the
+    unrolled SQL oracles pin.
 
     Returns ``(vertex, rank)``.
     """
-    # the edge list and out-degrees are loop-invariant: checkpoint them
-    # ONCE so each power-iteration round reads materialized blocks —
-    # without the barrier every round's plan re-runs the source scan,
-    # the distinct shuffle, and the degree groupBy (r14 optimization
-    # round, the same discipline connected_components already applies)
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    eo = _out_edges(edges, src, dst)
+    verts, stats = materialize(
+        eo.select(F.col("u").alias("vertex"))
+        .union(eo.select(F.col("v").alias("vertex")))
+        .distinct(),
+        F.count(F.lit(1)).alias("n"),
     )
-    verts = (
-        e.select(F.col("u").alias("vertex"))
-        .union(e.select(F.col("v").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
-    outdeg = e.groupBy(F.col("u").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
-    ranks = verts.withColumn("rank", F.lit(1.0)).localCheckpoint(eager=False)
-    for _ in range(iters):
-        contribs = (
-            e.join(ranks, e["u"] == ranks["vertex"], "inner")
-            .join(outdeg, "vertex", "inner")
-            .select(F.col("v").alias("vertex"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("vertex")
-            .agg(F.sum("c").alias("recv"))
-        )
-        # dangling mass (rank not passed along any edge): carried as a lazy
-        # 1-row aggregate crossJoined in, NOT collected to the driver — the
-        # whole iteration stays one distributed plan, materialized once by
-        # the checkpoint. Ranks sum to n each round.
-        dang = contribs.agg(
-            (F.lit(float(n)) - F.coalesce(F.sum("recv"), F.lit(0.0))).alias(
-                "dangling"
-            )
-        )
-        prev = ranks
-        ranks = (
-            verts.join(contribs, "vertex", "left")
-            .crossJoin(dang)
-            .select(
-                "vertex",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("recv", F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        if tol is not None and _l1_delta(ranks, prev, "rank") < tol:
-            break
-    return ranks
+    pv = verts.withColumn("p", F.lit(1.0))
+    return _power_iteration(eo, pv, stats["n"], damping, iters, tol)
 
 
 def bfs_levels(
@@ -308,42 +347,38 @@ def bfs_levels(
     The scale-standard iterative frontier program: per level, ONE join
     (frontier → out-neighbors) plus one LEFT ANTI against the visited set;
     both are equi-joins Catalyst plans freely (a small frontier
-    broadcasts).  Visited/frontier are ``localCheckpoint``-ed per round so
-    round k never re-executes rounds 1..k-1.  Terminates on an empty
-    frontier (one scalar count per round) or ``max_hops``.
+    broadcasts).  Each hop's new frontier is materialized once, so round
+    k never re-executes rounds 1..k-1, and that job also observes the
+    frontier's size.  Terminates on an empty frontier or ``max_hops``.
 
     Returns ``(vertex, level)`` with level 0 for the sources — the
     reachability/radius primitive the reference's join-only traversal
     cannot express (its MATCH is fixed-length).
     """
-    # checkpoints are LAZY and the visited set is NEVER re-checkpointed
-    # (r14 optimization round): each hop's `isEmpty` check materializes
-    # that hop's frontier checkpoint as a side effect (one driver
-    # round-trip per hop instead of three), and the visited/result
-    # frames are flat unions of the per-hop checkpointed frontiers —
-    # plan depth stays bounded by max_hops with nothing re-executed
-    # (A/B at sf0.1 on the region graph: best 1.69 -> 1.16 s,
-    # outputs identical).
-    frontier = sources.select(
-        F.col(vertex_col).alias("vertex")
-    ).distinct().localCheckpoint(eager=False)
+    # the visited set is NEVER re-materialized: it and the result are flat
+    # unions of the per-hop frontiers, so plan depth stays bounded by
+    # max_hops with nothing re-executed
+    frontier = materialize(
+        sources.select(F.col(vertex_col).alias("vertex")).distinct(),
+        eager=False,
+    )
     levels = [frontier.withColumn("level", F.lit(0))]
     visited = frontier
     # loop-invariant edge list materialized once: otherwise every hop's
     # plan replays the caller's edge construction (scans, unions,
-    # projections) from scratch (r14 optimization round)
-    out = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=False)
+    # projections) from scratch
+    out = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), eager=False
+    )
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt, stats = materialize(
             out.join(frontier.withColumnRenamed("vertex", "u"), "u")
             .select(F.col("v").alias("vertex"))
             .distinct()
-            .join(visited, "vertex", "left_anti")
-            .localCheckpoint(eager=False)
+            .join(visited, "vertex", "left_anti"),
+            F.count(F.lit(1)).alias("n"),
         )
-        if nxt.isEmpty():
+        if stats["n"] == 0:
             break
         levels.append(nxt.withColumn("level", F.lit(hop)))
         visited = visited.unionByName(nxt)
@@ -459,9 +494,9 @@ def k_core(
     valve: if given and exhausted before the fixpoint, this RAISES
     instead of returning a set that violates the core invariant (r5
     advice: a silent cap could hand back vertices with in-set degree
-    < k).  Per round: one groupBy + one semi-join pair,
-    ``localCheckpoint``-ed so round i never replays rounds 1..i-1 — the
-    same scale discipline as :func:`connected_components`.
+    < k).  Per round: one groupBy + one semi-join pair, materialized so
+    round i never replays rounds 1..i-1; the surviving edge count that
+    decides the fixpoint is observed by that materialization.
 
     Returns ``(vertex, core_degree)`` — the surviving vertices and their
     degree inside the core (≥ k by construction; empty if no k-core).
@@ -469,11 +504,11 @@ def k_core(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     a, b = F.col(src).cast("long"), F.col(dst).cast("long")
-    edges = (
+    edges, stats = materialize(
         pairs.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        F.count(F.lit(1)).alias("m"),
     )
     rounds = 0
     while True:
@@ -483,15 +518,17 @@ def k_core(
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        keep = deg.filter(F.col("d") >= k).select("u").localCheckpoint(eager=False)
-        pruned = (
+        keep = materialize(
+            deg.filter(F.col("d") >= k).select("u"), eager=False
+        )
+        m = stats["m"]
+        edges, stats = materialize(
             edges.join(keep.withColumnRenamed("u", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("u", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=False)
+            .select("a", "b"),
+            F.count(F.lit(1)).alias("m"),
         )
-        converged = pruned.count() == edges.count()
-        edges = pruned
+        converged = stats["m"] == m
         rounds += 1
         if converged:
             break
@@ -522,10 +559,11 @@ def sssp(
     edges — Bellman-Ford as the standard iterative frontier program
     (:func:`bfs_levels` is the unit-weight special case).
 
-    Per round: one equi-join (current distances → out-edges), a
-    ``groupBy(vertex).min`` merge with the previous distances, and a
-    scalar improvement count for termination; frames are
-    ``localCheckpoint``-ed so round k never replays rounds 1..k-1.
+    Per round: one equi-join (current distances → out-edges) and a
+    ``groupBy(vertex).min`` merge with the previous distances, which
+    carry along as ``old``; the round is materialized once, so round k
+    never replays rounds 1..k-1, and that job observes the improvement
+    count that ends the loop.
     Converges in ≤ diameter rounds on non-negative weights; ``max_iters``
     bounds adversarial inputs (negative-cycle graphs are out of scope).
 
@@ -533,19 +571,17 @@ def sssp(
     Integer-valued weights keep the fp path sums exact, so a SQL oracle
     (recursive CTE on a DAG) matches bit-for-bit.
     """
-    # checkpoints are LAZY (r14 optimization round): the per-round
-    # `improved` count materializes `merged` as a side effect, so the
-    # eager checkpoint's extra scheduling round-trip per round was pure
-    # overhead (A/B at sf0.1: best 2.46 -> 1.87 s, outputs identical)
     # loop-invariant edge list materialized once (see bfs_levels)
-    out = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
-    ).localCheckpoint(eager=False)
+    out = materialize(
+        edges.select(
+            F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
+        ),
+        eager=False,
+    )
     # seed with the 1-hop relaxation (r14, the connected_components seed
     # discipline): the init pays one join + min-merge — exactly what
-    # round 1 would compute — so the loop starts one round ahead and
-    # skips that round's convergence-count action (A/B at sf0.1:
-    # best 1.07 -> 0.85 s, distances identical)
+    # round 1 would compute — so the loop starts one round ahead (A/B at
+    # sf0.1: best 1.07 -> 0.85 s, distances identical)
     src0 = (
         sources.select(F.col(vertex_col).alias("vertex"))
         .distinct()
@@ -556,32 +592,31 @@ def sssp(
         .join(out, "u")
         .select(F.col("v").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
     )
-    dist = (
-        src0.unionByName(hop1)
-        .groupBy("vertex")
-        .agg(F.min("dist").alias("dist"))
-        .localCheckpoint(eager=False)
+    dist = materialize(
+        src0.unionByName(hop1).groupBy("vertex").agg(F.min("dist").alias("dist")),
+        eager=False,
     )
     for _ in range(max_iters):
         relaxed = (
             dist.withColumnRenamed("vertex", "u")
             .join(out, "u")
-            .select(F.col("v").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
+            .select(
+                F.col("v").alias("vertex"),
+                (F.col("dist") + F.col("w")).alias("dist"),
+                F.lit(None).cast("double").alias("old"),
+            )
         )
-        merged = (
-            dist.unionByName(relaxed)
+        merged, stats = materialize(
+            dist.withColumn("old", F.col("dist"))
+            .unionByName(relaxed)
             .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("dist").alias("dist"), F.max("old").alias("old")),
+            F.count_if(
+                F.col("old").isNull() | (F.col("dist") < F.col("old"))
+            ).alias("improved"),
         )
-        improved = (
-            merged.join(dist.withColumnRenamed("dist", "old"), "vertex", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .limit(1)
-            .count()
-        )
-        dist = merged
-        if improved == 0:
+        dist = merged.select("vertex", "dist")
+        if stats["improved"] == 0:
             break
     return dist
 
@@ -600,9 +635,9 @@ def personalized_pagerank(
     instead of a uniform jump — the graph-proximity relevance measure
     (recommendations, seed-expansion, related-entity queries).
 
-    Same power-iteration plan as :func:`pagerank` (one join + one
-    destination groupBy per round, checkpointed, dangling mass carried as
-    a lazy 1-row aggregate) with the reset/dangling mass directed to the
+    Same power-iteration loop as :func:`pagerank` (one materialization
+    per round, dangling mass observed by that job) with the
+    reset/dangling mass directed to the
     personalization vector ``p`` (``n/|S|`` on sources, 0 elsewhere;
     ranks sum to |V| every round, so the two variants share the same
     normalization and the uniform ``p`` recovers standard PageRank).
@@ -621,74 +656,26 @@ def personalized_pagerank(
     stop when a round's L1 rank delta < ``tol``; ``None`` (default) runs
     exactly ``iters`` rounds (the oracle-pinned mode).
     """
-    # loop-invariant frames checkpointed once per fit (see pagerank)
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    eo = _out_edges(edges, src, dst)
+    verts, stats = materialize(
+        eo.select(F.col("u").alias("vertex"), F.lit(False).alias("__s"))
+        .union(eo.select(F.col("v").alias("vertex"), F.lit(False)))
+        .union(sources.select(F.col(vertex_col).alias("vertex"), F.lit(True)))
+        .groupBy("vertex")
+        .agg(F.max("__s").alias("__s")),
+        F.count(F.lit(1)).alias("n"),
+        F.count_if("__s").alias("n_src"),
     )
-    s = sources.select(F.col(vertex_col).alias("vertex")).distinct()
-    n_src = s.count()
+    n, n_src = stats["n"], stats["n_src"]
     if n_src == 0:
         raise ValueError("personalized_pagerank needs a non-empty source set")
-    verts = (
-        e.select(F.col("u").alias("vertex"))
-        .union(e.select(F.col("v").alias("vertex")))
-        .union(s)
-        .distinct()
-        .localCheckpoint(eager=False)
+    pv = verts.select(
+        "vertex",
+        F.when(F.col("__s"), F.lit(float(n) / n_src))
+        .otherwise(F.lit(0.0))
+        .alias("p"),
     )
-    n = verts.count()
-    pv = (
-        verts.join(s.withColumn("__s", F.lit(True)), "vertex", "left")
-        .select(
-            "vertex",
-            F.when(F.col("__s"), F.lit(float(n) / n_src))
-            .otherwise(F.lit(0.0))
-            .alias("p"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    outdeg = e.groupBy(F.col("u").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
-    ranks = pv.select("vertex", F.col("p").alias("rank")).localCheckpoint(eager=False)
-    for _ in range(iters):
-        contribs = (
-            e.join(ranks, e["u"] == ranks["vertex"], "inner")
-            .join(outdeg, "vertex", "inner")
-            .select(
-                F.col("v").alias("vertex"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("vertex")
-            .agg(F.sum("c").alias("recv"))
-        )
-        dang = contribs.agg(
-            (F.lit(float(n)) - F.coalesce(F.sum("recv"), F.lit(0.0))).alias(
-                "dangling"
-            )
-        )
-        prev = ranks
-        ranks = (
-            pv.join(contribs, "vertex", "left")
-            .crossJoin(dang)
-            .select(
-                "vertex",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("recv", F.lit(0.0))
-                        + F.col("dangling") * F.col("p") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        if tol is not None and _l1_delta(ranks, prev, "rank") < tol:
-            break
-    return ranks
+    return _power_iteration(eo, pv, n, damping, iters, tol)
 
 
 def label_propagation(
@@ -741,9 +728,11 @@ def label_propagation(
     e = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         if presymmetrized
-        else _sym_edges(pairs, src, dst).localCheckpoint(eager=False)
+        else materialize(_sym_edges(pairs, src, dst), eager=False)
     )
-    verts = e.select(F.col("u").alias("vertex")).distinct().localCheckpoint(eager=False)
+    verts = materialize(
+        e.select(F.col("u").alias("vertex")).distinct(), eager=False
+    )
     labels = verts.withColumn("label", F.col("vertex"))
     for it in range(iters):
         counts = (
@@ -755,11 +744,11 @@ def label_propagation(
             F.desc("cnt"), F.asc("label")
         )
         prev = labels
-        labels = (
+        labels = materialize(
             counts.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .select("vertex", "label")
-            .localCheckpoint(eager=False)
+            .select("vertex", "label"),
+            eager=False,
         )
         if stop_when_stable and 0 < it < iters - 1:
             changed = (
@@ -787,25 +776,24 @@ def hits(
     Normalization: each half-step rescales its vector to SUM to |V|
     (instead of the classic L2) — same fixed point direction, but the
     rescale is a single distributed sum carried as a lazy 1-row aggregate
-    (the PageRank dangling-mass discipline), and the linear scale keeps a
+    crossJoined into the half-step's plan, and the linear scale keeps a
     SQL oracle exact after rounding.  Per iteration: two equi-joins + two
     destination groupBys, checkpointed.  Returns
     ``(vertex, hub, authority)``; sinks hold hub 0, sources authority 0.
     """
-    # loop-invariant edge list checkpointed once per fit (see pagerank)
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    # loop-invariant edge list materialized once per fit (see pagerank)
+    e = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct(),
+        eager=False,
     )
-    verts = (
+    verts, stats = materialize(
         e.select(F.col("u").alias("vertex"))
         .union(e.select(F.col("v").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        F.count(F.lit(1)).alias("n"),
     )
-    n = verts.count()
-    hubs = verts.withColumn("hub", F.lit(1.0)).localCheckpoint(eager=False)
+    n = stats["n"]
+    hubs = verts.withColumn("hub", F.lit(1.0))
     auths = verts.withColumn("authority", F.lit(1.0))
     for _ in range(iters):
         a_raw = (
@@ -814,7 +802,7 @@ def hits(
             .agg(F.sum("hub").alias("raw"))
         )
         a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        auths = (
+        auths = materialize(
             verts.join(a_raw, "vertex", "left")
             .crossJoin(a_tot)
             .select(
@@ -822,8 +810,8 @@ def hits(
                 (
                     F.coalesce("raw", F.lit(0.0)) * F.lit(float(n)) / F.col("tot")
                 ).alias("authority"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         h_raw = (
             e.join(auths.withColumnRenamed("vertex", "v"), "v")
@@ -831,7 +819,7 @@ def hits(
             .agg(F.sum("authority").alias("raw"))
         )
         h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        hubs = (
+        hubs = materialize(
             verts.join(h_raw, "vertex", "left")
             .crossJoin(h_tot)
             .select(
@@ -839,8 +827,8 @@ def hits(
                 (
                     F.coalesce("raw", F.lit(0.0)) * F.lit(float(n)) / F.col("tot")
                 ).alias("hub"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return hubs.join(auths, "vertex")
 

@@ -12,7 +12,7 @@ import os
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -29,6 +29,42 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def materialize(
+    df: DataFrame, *observed: Column, eager: bool = True
+) -> DataFrame | tuple[DataFrame, dict]:
+    """Materialize ``df`` and cut its lineage: the one checkpoint path.
+
+    A session with a checkpoint dir (``sc.setCheckpointDir``, the cluster
+    setting) gets a RELIABLE checkpoint, whose blocks survive executor
+    loss; it is always eager, because a lazy ``Dataset.checkpoint``
+    computes the frame a second time to write the files.  Otherwise the
+    checkpoint is local, eager unless ``eager=False``.  A lazy local
+    checkpoint is only partly lazy: under AQE the call runs the frame's
+    shuffle and broadcast stages as jobs, and the final stage runs inside
+    whichever later job first reads the frame.
+
+    ``observed`` aggregate columns (e.g. ``F.sum(...).alias("changed")``)
+    are computed by the materializing job itself through an
+    ``Observation`` and returned with the frame as
+    ``(frame, {name: value})``, so a loop's convergence value costs no
+    second action.  They are evaluated at the top of the plan, in the
+    final stage, whose per-task contributions Spark merges once per
+    partition even when a task is retried.  Observing forces the
+    checkpoint eager.
+    """
+    obs = None
+    if observed:
+        obs = Observation()
+        df = df.observe(obs, *observed)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        out = df.checkpoint(eager=True)
+    else:
+        out = df.localCheckpoint(eager=eager or obs is not None)
+    if obs is None:
+        return out
+    return out, obs.get
 
 
 def spread_scan(df, key: str, parts: int | None = None):
