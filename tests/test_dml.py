@@ -2,11 +2,15 @@
 updates), DELETE variants, SHOW — reference tests/update_query_test.cpp,
 update_query_join_test.cpp, delete_test.sql, array_query_test.cpp."""
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
+from tundradb_spark.database import Database
 from tundradb_spark.errors import QueryError
 from tundradb_spark.query import Query
+from tundradb_spark.temporal import MockClock
 from tests.conftest import rows_set, setup_join_fixture
 
 
@@ -285,3 +289,191 @@ def test_pending_id_probe_duplicate_id_multiplicity(db, spark):
     with pytest.raises(QueryError):
         db.connect("knows", ("p", 0), ("p", 0), unique=True)
     assert len(db.connect("knows", ("p", 0), ("p", 0))) == 4
+
+
+def _vdb(spark, clock=None):
+    return Database(spark, versioning=True, clock=clock or MockClock(1000))
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` inside a fresh job group; return its result and the
+    number of Spark jobs it fired (the pattern of test_text's rrf_fuse
+    probe)."""
+    sc = spark.sparkContext
+    group = f"dml-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "count the jobs one DML call fires")
+    try:
+        out = fn()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(jobs)
+
+
+def _committed_people(db, n=6):
+    """A schema whose rows are flushed into the frame (none pending), so
+    point selectors take the frame path, not the pending-id probe."""
+    db.create_schema("P", {"name": "string", "age": "long"})
+    for i in range(n):
+        db.create_node("P", name=f"p{i}", age=20 + i)
+    db.get_table_versions("P")  # flushes pending; fires no job
+    assert not db._node("P").pending
+    return db
+
+
+@pytest.mark.parametrize("versioning", [False, True])
+def test_delete_nodes_duplicate_ids_counted_once(spark, versioning):
+    # a duplicated id must neither double the count nor (versioned) write a
+    # second closed copy of the head through the marker join
+    db = _vdb(spark) if versioning else Database(spark)
+    _committed_people(db, n=3)
+    dup = spark.createDataFrame([(1,), (1,)], "id long")
+    assert db.delete_nodes("P", dup) == 1
+    # versioned: the head is closed in place; plain: the row is dropped
+    assert db.get_table_versions("P").count() == (3 if versioning else 2)
+    assert rows_set(db.get_table("P"), "id") == {(0,), (2,)}
+
+
+@pytest.mark.parametrize("versioning", [False, True])
+def test_point_update_and_delete_are_one_job(spark, versioning):
+    db = _committed_people(_vdb(spark) if versioning else Database(spark))
+    n, jobs = _jobs(spark, lambda: db.update_by_id("P", 2, {"age": 99}))
+    assert n == 1 and jobs <= 1, (n, jobs)
+    n, jobs = _jobs(spark, lambda: db.delete_node("P", 3))
+    assert n == 1 and jobs <= 1, (n, jobs)
+    assert rows_set(db.get_table("P"), "id", "age") == {
+        (0, 20), (1, 21), (2, 99), (4, 24), (5, 25)
+    }
+
+
+def test_connect_committed_ids_is_two_jobs(spark):
+    db = _committed_people(_vdb(spark))
+    db.delete_node("P", 5)
+    ids, jobs = _jobs(spark, lambda: db.connect("K", ("P", 0), ("P", 4)))
+    assert len(ids) == 1 and jobs <= 2, jobs
+    with pytest.raises(QueryError):  # a deleted node is no endpoint
+        db.connect("K", ("P", 0), ("P", 5))
+    assert rows_set(db.get_edge_table("K"), "source_id", "target_id") == {(0, 4)}
+
+
+def test_compact_is_eager(spark):
+    db = Database(spark)
+    db.register_node_table("R", spark.range(0, 200).withColumn("v", F.col("id") * 2))
+    _, jobs = _jobs(spark, db.compact)
+    assert jobs >= 1
+    _, read_jobs = _jobs(spark, lambda: db.get_table("R").count())
+    fresh = Database(spark)
+    fresh.register_node_table("R", spark.createDataFrame(
+        [(i, 2 * i) for i in range(200)], "id long, v long"
+    ))
+    _, fresh_jobs = _jobs(spark, lambda: fresh.get_table("R").count())
+    assert read_jobs <= fresh_jobs, (read_jobs, fresh_jobs)
+
+
+def test_versioned_update_of_missing_id_has_no_side_effects(spark):
+    clock = MockClock(1000)
+    db = _committed_people(_vdb(spark, clock))
+    db.delete_node("P", 1)  # a closed head is not found either
+    t = db._node("P")
+    t.dirty = False
+    frame, before = t.frame, clock.advance(0)
+    for missing in (1, 99):
+        with pytest.raises(QueryError, match="not found"):
+            db.update_by_id("P", missing, {"age": 1})
+    assert clock.advance(0) == before  # no tick consumed
+    assert t.frame is frame and t.dirty is False
+
+
+def test_versioned_noop_update_writes_no_version(spark):
+    db = _committed_people(_vdb(spark))
+    t = db._node("P")
+    t.dirty = False
+    assert db.update_by_id("P", 2, {"age": 22}) == 0  # already 22
+    assert db.get_table_versions("P").count() == 6
+    assert t.dirty is False
+
+
+_DML_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from tundradb_spark.database import Database
+from tundradb_spark.session import get_spark
+from tundradb_spark.temporal import MockClock
+
+marks = sys.argv[1]
+spark = get_spark("dml-retry-probe", cpus=2, extra_conf={"spark.master": "local[2,2]"})
+spark.sparkContext.setLogLevel("ERROR")
+
+
+def fail_first_attempt(x):
+    tc = TaskContext.get()
+    if tc.partitionId() == 0 and tc.attemptNumber() == 0:
+        open(os.path.join(marks, f"stage-{tc.stageId()}"), "w").close()
+        raise RuntimeError("injected failure of a first task attempt")
+    return x
+
+
+def run(people):
+    db = Database(spark, versioning=True, clock=MockClock(1000))
+    db.register_node_table("P", people)
+    ids = lambda *v: spark.createDataFrame([(i,) for i in v], "id long")
+    counts = [
+        db.update_by_id("P", 3, {"age": 99}),
+        db.update_by_id("P", 3, {"age": 99}),
+        db.update_nodes("P", ids(1, 1, 2, 999), {"age": 7}),
+        db.delete_node("P", 4),
+        db.delete_nodes("P", ids(5, 5, 6)),
+        len(db.connect("K", ("P", 0), ("P", 3))),
+        len(db.connect("K", ("P", 1), ("P", 2))),
+        db.delete_edges("K", ("P", 0)),
+    ]
+    versions = db.get_table_versions("P").collect()
+    edges = db.get_edge_table("K").select("source_id", "target_id").collect()
+    return {"counts": counts, "versions": sorted(map(list, versions)),
+            "edges": sorted(map(list, edges))}
+
+
+def people():
+    return spark.range(0, 40, numPartitions=3).select(
+        "id", (F.col("id") % 9 + 20).alias("age"))
+
+
+plain = run(people())
+spark.sparkContext.setCheckpointDir(os.path.join(marks, "ckpt"))
+flaky = F.udf(fail_first_attempt, "long")
+retried = run(people().select(flaky("id").alias("id"), "age"))
+print("RESULT " + json.dumps({"plain": plain, "retried": retried}))
+spark.stop()
+"""
+
+
+def test_dml_counts_under_reliable_checkpoint_dir_and_task_retry(tmp_path):
+    """Point and bulk DML under a reliable checkpoint dir on local[2,2],
+    with the table passed through a UDF that fails the first attempt of
+    partition 0: the returned counts and the final version rows equal a
+    plain run, so counts observed by the materializing job are neither
+    lost nor double-counted.  A subprocess keeps the checkpoint dir and
+    the master out of the shared test session."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo + os.pathsep + os.environ.get("PYTHONPATH", "")}
+    proc = subprocess.run(
+        [sys.executable, "-c", _DML_RETRY_SCRIPT, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    line = next(x for x in proc.stdout.splitlines() if x.startswith("RESULT "))
+    got = json.loads(line[len("RESULT "):])
+    plain, retried = got["plain"], got["retried"]
+    assert any(p.startswith("stage-") for p in os.listdir(tmp_path))  # retried
+    assert os.listdir(tmp_path / "ckpt")  # reliable checkpoints were written
+    assert plain["counts"] == [1, 0, 2, 1, 2, 1, 1, 1]
+    assert retried == plain

@@ -20,13 +20,19 @@ import itertools
 import threading
 import time
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from tundradb_spark.catalog import MAX_TS, VERSION_COLS
 
 
 def now_ms() -> int:
     return time.time_ns() // 1_000_000
+
+
+def is_current() -> Column:
+    """A version row whose valid and tx intervals are both open: the only
+    rows a fully-current read (no AS OF) can see."""
+    return (F.col("valid_to") == F.lit(MAX_TS)) & (F.col("tx_to") == F.lit(MAX_TS))
 
 
 class MockClock:
@@ -79,9 +85,7 @@ def resolve_as_of(
     if tt is not None:
         cond = cond & (F.col("tx_from") <= tt) & (tt < F.col("tx_to"))
     if vt is None and tt is None:
-        cond = (F.col("valid_to") == F.lit(MAX_TS)) & (
-            F.col("tx_to") == F.lit(MAX_TS)
-        )
+        cond = is_current()
 
     visible = df.filter(cond)
     w = Window.partitionBy(id_col).orderBy(F.col("version_id").desc())
