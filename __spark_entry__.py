@@ -1421,8 +1421,9 @@ def q_ql_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # WeakKeyDictionary keyed on the live session (same pattern as
-# _IVF_INDEX_CACHE): id()-keyed entries could outlive a garbage-collected
-# SparkSession and leak a stale warehouse path into a new session
+# pipeline.queries._INDEX_DIR_CACHE): id()-keyed entries could outlive a
+# garbage-collected SparkSession and leak a stale warehouse path into a
+# new session
 _BUCKETED_CACHE: (
     "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]"
 ) = weakref.WeakKeyDictionary()

@@ -197,6 +197,37 @@ def test_multi_level_left_join(jdb):
     assert (0, 2, None, 0) in rows  # alex->jeff->likes ibm
 
 
+def test_outer_hop_with_descendants_checkpoints_through_materialize(
+    jdb, monkeypatch
+):
+    # the shared live-edge frame of a non-INNER hop whose child has
+    # descendants goes through the one checkpoint path, so a session's
+    # reliable checkpoint dir applies to it
+    from tundradb_spark.operators import match
+
+    calls = []
+    materialize = match.materialize
+
+    def recorded(df, *observed, **kwargs):
+        calls.append(kwargs)
+        return materialize(df, *observed, **kwargs)
+
+    monkeypatch.setattr(match, "materialize", recorded)
+    jdb.connect("friend", ("users", 0), ("users", 1))
+    jdb.connect("friend", ("users", 0), ("users", 2))
+    jdb.connect("friend", ("users", 0), ("users", 3))
+    jdb.connect("works-at", ("users", 1), ("companies", 1))
+    jdb.connect("likes", ("users", 2), ("companies", 0))
+    q = (
+        Query.from_("u:users")
+        .traverse("u", "friend", "f:users", "left")
+        .traverse("f", "works-at", "c:companies", "left")
+        .traverse("f", "likes", "l:companies", "left")
+    )
+    assert jdb.query(q).count() == 7  # as in test_multi_level_left_join
+    assert calls and all(c == {"eager": False} for c in calls), calls
+
+
 def test_self_join_with_left_join(jdb):
     # join_test.cpp:1010 SelfJoinWithLeftJoin — management chains
     jdb.connect("manages", ("users", 0), ("users", 1))

@@ -1467,3 +1467,366 @@ class TestQLReport:
 
         assert "LABELED" in hint_for("REPORT ")
         assert "REPORT" in COMPLETION_KEYWORDS
+
+
+# Two statements per extension: the bare form and one giving every clause
+# (DIFF adds its SUMMARY form, which excludes COLS).  The expected ASTs
+# were produced by the per-statement hand-written parser this grammar
+# replaced; they pin every clause keyword, value type and default.
+CLAUSE_CORPUS = [
+    (
+        "FUNNEL ON ev STEPS 'view', click;",
+        ast.Funnel(
+            table="ev", steps=("view", "click"), user_col="user_id",
+            ts_col="ts", type_col="event_type", within_us=None,
+        ),
+    ),
+    (
+        "FUNNEL ON ev STEPS 'view', 'buy' USER uid TS at TYPE kind WITHIN "
+        "1000;",
+        ast.Funnel(
+            table="ev", steps=("view", "buy"), user_col="uid", ts_col="at",
+            type_col="kind", within_us=1000,
+        ),
+    ),
+    (
+        "RETENTION ON ev;",
+        ast.Retention(
+            table="ev", user_col="user_id", ts_col="ts",
+            period_us=86400000000, max_offset=None,
+        ),
+    ),
+    (
+        "RETENTION ON ev USER uid TS at PERIOD 3600 MAX OFFSET 7;",
+        ast.Retention(
+            table="ev", user_col="uid", ts_col="at", period_us=3600,
+            max_offset=7,
+        ),
+    ),
+    (
+        "OUTLIERS ON ev;",
+        ast.Outliers(
+            table="ev", group_col="event_type", value_col="value",
+            id_col="event_id", z=3.0, robust=False, k=3.5,
+        ),
+    ),
+    (
+        "OUTLIERS ON ev GROUP g VALUE v ID eid Z 2.5 ROBUST K 4.5;",
+        ast.Outliers(
+            table="ev", group_col="g", value_col="v", id_col="eid", z=2.5,
+            robust=True, k=4.5,
+        ),
+    ),
+    (
+        "CUSUM ON ev SLACK 1 THRESHOLD 20.5;",
+        ast.Cusum(
+            table="ev", slack=1.0, threshold=20.5, key_col="user_id",
+            value_col="value", ts_col="ts", tiebreak_col=None,
+        ),
+    ),
+    (
+        "CUSUM ON ev SLACK 1.5 THRESHOLD 20 KEY k VALUE v TS at TIEBREAK eid;",
+        ast.Cusum(
+            table="ev", slack=1.5, threshold=20.0, key_col="k",
+            value_col="v", ts_col="at", tiebreak_col="eid",
+        ),
+    ),
+    (
+        "MARKOV ON ev;",
+        ast.Markov(
+            table="ev", user_col="user_id", ts_col="ts",
+            type_col="event_type", tiebreak_col="event_id", min_count=1,
+        ),
+    ),
+    (
+        "MARKOV ON ev USER uid TS at TYPE kind TIEBREAK eid MIN 2;",
+        ast.Markov(
+            table="ev", user_col="uid", ts_col="at", type_col="kind",
+            tiebreak_col="eid", min_count=2,
+        ),
+    ),
+    (
+        "SIMILARITY ON pairs;",
+        ast.Similarity(
+            table="pairs", edges=False, src=None, dst=None, min_common=1,
+            max_degree=None, include_adjacent=True,
+        ),
+    ),
+    (
+        "SIMILARITY ON EDGES follows SRC a DST b MIN 2 MAXDEG 50 EXCLUDE "
+        "ADJACENT;",
+        ast.Similarity(
+            table="follows", edges=True, src="a", dst="b", min_common=2,
+            max_degree=50, include_adjacent=False,
+        ),
+    ),
+    (
+        "COOCCURRENCE ON ev;",
+        ast.Cooccurrence(
+            table="ev", user_col="user_id", type_col="event_type",
+            min_users=1, top_n=None, max_types_per_user=None,
+        ),
+    ),
+    (
+        "COOCCURRENCE ON ev USER uid TYPE kind MIN 2 TOP 10 CAP 50;",
+        ast.Cooccurrence(
+            table="ev", user_col="uid", type_col="kind", min_users=2,
+            top_n=10, max_types_per_user=50,
+        ),
+    ),
+    (
+        "WINSORIZE ON ev;",
+        ast.Winsorize(
+            table="ev", group_col="event_type", value_col="value",
+            id_col="event_id", p_lo=0.01, p_hi=0.99,
+        ),
+    ),
+    (
+        "WINSORIZE ON ev GROUP g VALUE v ID eid PLO 0.05 PHI 0.95;",
+        ast.Winsorize(
+            table="ev", group_col="g", value_col="v", id_col="eid",
+            p_lo=0.05, p_hi=0.95,
+        ),
+    ),
+    (
+        "BENFORD ON ev;",
+        ast.Benford(
+            table="ev", group_col="event_type", value_col="value", min_n=100,
+        ),
+    ),
+    (
+        "BENFORD ON ev GROUP g VALUE v MIN 50;",
+        ast.Benford(
+            table="ev", group_col="g", value_col="v", min_n=50,
+        ),
+    ),
+    (
+        "NGRAMS ON ev;",
+        ast.Ngrams(
+            table="ev", n=3, user_col="user_id", ts_col="ts",
+            type_col="event_type", min_count=1, top_n=None,
+            tiebreak_col=None,
+        ),
+    ),
+    (
+        "NGRAMS ON ev N 2 USER uid TS at TYPE kind MIN 3 TOP 10 TIEBREAK eid;",
+        ast.Ngrams(
+            table="ev", n=2, user_col="uid", ts_col="at", type_col="kind",
+            min_count=3, top_n=10, tiebreak_col="eid",
+        ),
+    ),
+    (
+        "CALIBRATION ON preds;",
+        ast.Calibration(
+            table="preds", prob_col="prob", label_col="label", n_bins=10,
+        ),
+    ),
+    (
+        "CALIBRATION ON preds PROB p LABEL y BINS 5;",
+        ast.Calibration(
+            table="preds", prob_col="p", label_col="y", n_bins=5,
+        ),
+    ),
+    (
+        "RRF ON bm WITH ann;",
+        ast.Rrf(
+            table_a="bm", table_b="ann", k=60, top_n=None,
+            query_col="query_id", id_col="doc_id", score_col="score",
+        ),
+    ),
+    (
+        "RRF ON bm WITH ann K 10 TOP 3 QUERY q ID d SCORE s;",
+        ast.Rrf(
+            table_a="bm", table_b="ann", k=10, top_n=3, query_col="q",
+            id_col="d", score_col="s",
+        ),
+    ),
+    (
+        "DRIFT ON cur WITH ref;",
+        ast.Drift(
+            cur="cur", ref="ref", group_col="event_type", value_col="value",
+            lo=0.0, hi=1000.0, n_bins=10, min_n=100, eps=1e-06,
+        ),
+    ),
+    (
+        "DRIFT ON cur WITH ref GROUP g VALUE v LO 1 HI 9.5 BINS 4 MIN 2 EPS "
+        "0.001;",
+        ast.Drift(
+            cur="cur", ref="ref", group_col="g", value_col="v", lo=1.0,
+            hi=9.5, n_bins=4, min_n=2, eps=0.001,
+        ),
+    ),
+    (
+        "TOKENDRIFT ON cur WITH ref;",
+        ast.TokenDrift(
+            cur="cur", ref="ref", text_col="text",
+        ),
+    ),
+    (
+        "TOKENDRIFT ON cur WITH ref TEXT body;",
+        ast.TokenDrift(
+            cur="cur", ref="ref", text_col="body",
+        ),
+    ),
+    (
+        "TREND ON ev EPOCH 0;",
+        ast.Trend(
+            table="ev", epoch_us=0, group_col="event_type",
+            value_col="value", ts_col="ts", min_n=100,
+        ),
+    ),
+    (
+        "TREND ON ev EPOCH 1704067200000000 GROUP g VALUE v TS at MIN 5;",
+        ast.Trend(
+            table="ev", epoch_us=1704067200000000, group_col="g",
+            value_col="v", ts_col="at", min_n=5,
+        ),
+    ),
+    (
+        "GATES ON docs;",
+        ast.Gates(
+            table="docs", group_col="lang", text_col="text",
+            max_bigram_rep=0.5, weights=None, n_buckets=256,
+            min_quality=0.5, bigrams=True,
+        ),
+    ),
+    (
+        "GATES ON docs GROUP src TEXT body MAXREP 0.3 WITH w BUCKETS 64 MIN "
+        "0.7 UNIGRAMS;",
+        ast.Gates(
+            table="docs", group_col="src", text_col="body",
+            max_bigram_rep=0.3, weights="w", n_buckets=64, min_quality=0.7,
+            bigrams=False,
+        ),
+    ),
+    (
+        "REPORT ON docs;",
+        ast.Report(
+            table="docs", group_col="lang", text_col="text",
+            id_col="doc_id", max_bigram_rep=0.5, weights=None,
+            n_buckets=256, min_quality=0.5, bigrams=True, labeled=None,
+            label_col="label", target_precision=None, calibration_bins=10,
+            split_col=None, pairs=None, pair_src="id_a", pair_dst="id_b",
+        ),
+    ),
+    (
+        "REPORT ON docs GROUP src TEXT body ID rid MAXREP 0.3 WITH w BUCKETS "
+        "64 MIN 0.7 UNIGRAMS LABELED lab LABEL y PRECISION 0.8 BINS 20 SPLIT "
+        "part PAIRS dup SRC a DST b;",
+        ast.Report(
+            table="docs", group_col="src", text_col="body", id_col="rid",
+            max_bigram_rep=0.3, weights="w", n_buckets=64, min_quality=0.7,
+            bigrams=False, labeled="lab", label_col="y",
+            target_precision=0.8, calibration_bins=20, split_col="part",
+            pairs="dup", pair_src="a", pair_dst="b",
+        ),
+    ),
+    (
+        "SKEW ON ev KEY k;",
+        ast.Skew(
+            table="ev", key_col="k", top_n=20,
+        ),
+    ),
+    (
+        "SKEW ON ev KEY k TOP 5;",
+        ast.Skew(
+            table="ev", key_col="k", top_n=5,
+        ),
+    ),
+    (
+        "FANOUT ON li WITH ord KEY lk;",
+        ast.Fanout(
+            table_a="li", table_b="ord", key_a="lk", key_b=None, top_n=10,
+        ),
+    ),
+    (
+        "FANOUT ON li WITH ord KEY lk KEYB ok TOP 3;",
+        ast.Fanout(
+            table_a="li", table_b="ord", key_a="lk", key_b="ok", top_n=3,
+        ),
+    ),
+    (
+        "DIFF ON new WITH old;",
+        ast.Diff(
+            new="new", old="old", id_col="doc_id", text_col="text",
+            cols=None, include_unchanged=False, summary=False,
+        ),
+    ),
+    (
+        "DIFF ON new WITH old ID k TEXT body COLS a, b ALL;",
+        ast.Diff(
+            new="new", old="old", id_col="k", text_col="body", cols=("a",
+            "b"), include_unchanged=True, summary=False,
+        ),
+    ),
+    (
+        "DIFF ON new WITH old SUMMARY;",
+        ast.Diff(
+            new="new", old="old", id_col="doc_id", text_col="text",
+            cols=None, include_unchanged=False, summary=True,
+        ),
+    ),
+    (
+        "QUALITY ON docs WITH w;",
+        ast.Quality(
+            table="docs", weights="w", n_buckets=256, id_col="doc_id",
+            text_col="text", bigrams=True, label_col=None, n_bins=10,
+        ),
+    ),
+    (
+        "QUALITY ON docs WITH w BUCKETS 64 ID k TEXT body UNIGRAMS THRESHOLDS"
+        " LABEL y BINS 20;",
+        ast.Quality(
+            table="docs", weights="w", n_buckets=64, id_col="k",
+            text_col="body", bigrams=False, label_col="y", n_bins=20,
+        ),
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "text,want", CLAUSE_CORPUS, ids=[t for t, _ in CLAUSE_CORPUS]
+)
+def test_extension_clause_corpus(text, want):
+    assert parse_statement(text) == want
+
+
+def test_clause_corpus_covers_every_extension_clause():
+    given = {type(w): set() for _, w in CLAUSE_CORPUS}
+    for text, want in CLAUSE_CORPUS:
+        given[type(want)] |= {
+            kw for kw in want.clauses() if f" {kw} " in f" {text[:-1]} "
+        }
+    assert set(given) == set(ast.EXTENSIONS.values())
+    for cls, kws in given.items():
+        assert kws == set(cls.clauses()), cls.KEYWORD
+
+
+@pytest.mark.parametrize("kw", list(ast.EXTENSIONS))
+def test_shell_hint_names_every_clause(kw):
+    from tundradb_spark.ql.shell import COMPLETION_KEYWORDS, hint_for
+
+    hint = hint_for(kw + " ")
+    for clause_kw in ast.EXTENSIONS[kw].clauses():
+        assert clause_kw in hint, (kw, clause_kw, hint)
+    assert kw in COMPLETION_KEYWORDS
+
+
+@pytest.mark.parametrize(
+    "text,clause",
+    [
+        ("WINSORIZE ON ev PLO 0.1 PLO 0.2;", "PLO"),
+        ("REPORT ON docs WITH a MAXREP 0.2 WITH b;", "WITH"),
+        ("OUTLIERS ON ev ROBUST K 4 ROBUST;", "ROBUST"),
+    ],
+)
+def test_repeated_clause_rejected(text, clause):
+    kw = text.split()[0]
+    with pytest.raises(QueryError, match=f"{kw} repeats {clause}$"):
+        parse_statement(text)
+
+
+def test_required_clause_may_follow_optional_ones():
+    assert parse_statement("SKEW ON ev TOP 5 KEY k;") == ast.Skew("ev", "k", 5)
+    with pytest.raises(QueryError, match="SKEW requires KEY$"):
+        parse_statement("SKEW ON ev TOP 5;")

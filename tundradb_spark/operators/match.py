@@ -56,6 +56,7 @@ from tundradb_spark.query import (
     Traverse,
     TraverseType,
 )
+from tundradb_spark.session import materialize
 
 if TYPE_CHECKING:
     from tundradb_spark.database import Database
@@ -468,9 +469,12 @@ class MatchCompiler:
             # columns through `sub`).  This is the NARROW shared subtree —
             # checkpointing the wide result-so-far was measured 2.1x slower
             # in r14 and stays rejected.
-            edge_live = edf.join(
-                child_base.select(_bt(ckey)), _bt(ccol) == _bt(ckey), "semi"
-            ).localCheckpoint(eager=False)
+            edge_live = materialize(
+                edf.join(
+                    child_base.select(_bt(ckey)), _bt(ccol) == _bt(ckey), "semi"
+                ),
+                eager=False,
+            )
             matched = parent.join(
                 edge_live, _bt(pkey) == _bt(pcol), "inner"
             ).join(sub, _bt(ccol) == _bt(ckey), "inner")

@@ -313,34 +313,19 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Cell-partitioned index dirs per (session, sf_dir) — written once, then
-# every q_ann_ivf probe under TUNDRA_ANN_USE_INDEX=1 is pruned file IO
-# (PartitionFilters) instead of a full-corpus re-hash. Temp dirs are
-# reclaimed at interpreter exit (atexit in _ivf_index_dir).
-_IVF_INDEX_CACHE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]"
-) = weakref.WeakKeyDictionary()
-
-
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    cached = _IVF_INDEX_CACHE.setdefault(spark, {})
-    if sf_dir not in cached:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="tundra_ivf_index_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        corpus = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
-        similarity.index_corpus(
-            corpus,
+    return _cached_index_dir(
+        spark,
+        sf_dir,
+        "ivf",
+        lambda path: similarity.index_corpus(
+            _emb(spark, sf_dir).filter(F.col("vec_id") != 0),
             path,
             n_cells=IVF_CELLS,
             seed=IVF_SEED,
             dim=EMBED_DIM,
-        )
-        cached[sf_dir] = path
-    return cached[sf_dir]
+        ),
+    )
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

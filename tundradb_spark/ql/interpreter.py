@@ -8,6 +8,8 @@ one execution path (reference entry points 1 and 2, SURVEY.md §3).
 
 from __future__ import annotations
 
+import importlib
+from dataclasses import fields
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
@@ -156,27 +158,14 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
         db.commit()
         return None
 
-    if isinstance(stmt, ast.Funnel):
-        from tundradb_spark.operators.analytics import funnel
-
-        return funnel(
-            db.get_table(stmt.table),
-            list(stmt.steps),
-            user_col=stmt.user_col,
-            ts_col=stmt.ts_col,
-            type_col=stmt.type_col,
-            within_us=stmt.within_us,
-        )
-
-    if isinstance(stmt, ast.Retention):
-        from tundradb_spark.operators.analytics import cohort_retention
-
-        return cohort_retention(
-            db.get_table(stmt.table),
-            user_col=stmt.user_col,
-            ts_col=stmt.ts_col,
-            period_us=stmt.period_us,
-            max_offset=stmt.max_offset,
+    if isinstance(stmt, ast.Explain):
+        # plan introspection (extension): the compiled MATCH's PHYSICAL
+        # plan, one output row per line so the shell renders it verbatim
+        df = db.query(_build_query(db, stmt.inner))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return db.spark.createDataFrame(
+            [(line,) for line in plan.rstrip("\n").split("\n")],
+            "plan string",
         )
 
     if isinstance(stmt, ast.Outliers):
@@ -185,94 +174,13 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
             value_outliers,
         )
 
+        events = db.get_table(stmt.table)
+        cols = dict(
+            group_col=stmt.group_col, value_col=stmt.value_col, id_col=stmt.id_col
+        )
         if stmt.robust:
-            return robust_outliers(
-                db.get_table(stmt.table),
-                group_col=stmt.group_col,
-                value_col=stmt.value_col,
-                id_col=stmt.id_col,
-                k=stmt.k,
-            )
-        return value_outliers(
-            db.get_table(stmt.table),
-            group_col=stmt.group_col,
-            value_col=stmt.value_col,
-            id_col=stmt.id_col,
-            z_threshold=stmt.z,
-        )
-
-    if isinstance(stmt, ast.Winsorize):
-        from tundradb_spark.operators.analytics import winsorize
-
-        return winsorize(
-            db.get_table(stmt.table),
-            group_col=stmt.group_col,
-            value_col=stmt.value_col,
-            id_col=stmt.id_col,
-            p_lo=stmt.p_lo,
-            p_hi=stmt.p_hi,
-        )
-
-    if isinstance(stmt, ast.Benford):
-        from tundradb_spark.operators.analytics import benford_deviation
-
-        return benford_deviation(
-            db.get_table(stmt.table),
-            group_col=stmt.group_col,
-            value_col=stmt.value_col,
-            min_n=stmt.min_n,
-        )
-
-    if isinstance(stmt, ast.Cooccurrence):
-        from tundradb_spark.operators.analytics import event_cooccurrence
-
-        return event_cooccurrence(
-            db.get_table(stmt.table),
-            user_col=stmt.user_col,
-            type_col=stmt.type_col,
-            min_users=stmt.min_users,
-            top_n=stmt.top_n,
-            max_types_per_user=stmt.max_types_per_user,
-        )
-
-    if isinstance(stmt, ast.Cusum):
-        from tundradb_spark.operators.relational import cusum_alarms
-
-        return cusum_alarms(
-            db.get_table(stmt.table),
-            stmt.key_col,
-            stmt.value_col,
-            slack=stmt.slack,
-            threshold=stmt.threshold,
-            ts_col=stmt.ts_col,
-            tiebreak_col=stmt.tiebreak_col,
-        )
-
-    if isinstance(stmt, ast.Ngrams):
-        from tundradb_spark.operators.analytics import event_ngrams
-
-        return event_ngrams(
-            db.get_table(stmt.table),
-            n=stmt.n,
-            user_col=stmt.user_col,
-            ts_col=stmt.ts_col,
-            type_col=stmt.type_col,
-            min_count=stmt.min_count,
-            top_n=stmt.top_n,
-            tiebreak_col=stmt.tiebreak_col,
-        )
-
-    if isinstance(stmt, ast.Markov):
-        from tundradb_spark.operators.analytics import markov_transitions
-
-        return markov_transitions(
-            db.get_table(stmt.table),
-            user_col=stmt.user_col,
-            ts_col=stmt.ts_col,
-            type_col=stmt.type_col,
-            tiebreak_col=stmt.tiebreak_col,
-            min_count=stmt.min_count,
-        )
+            return robust_outliers(events, k=stmt.k, **cols)
+        return value_outliers(events, z_threshold=stmt.z, **cols)
 
     if isinstance(stmt, ast.Similarity):
         from tundradb_spark.graphs.algorithms import neighborhood_similarity
@@ -294,29 +202,6 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
             include_adjacent=stmt.include_adjacent,
         )
 
-    if isinstance(stmt, ast.Calibration):
-        from tundradb_spark.pipeline.classify import calibration_bins
-
-        return calibration_bins(
-            db.get_table(stmt.table),
-            prob_col=stmt.prob_col,
-            label_col=stmt.label_col,
-            n_bins=stmt.n_bins,
-        )
-
-    if isinstance(stmt, ast.Rrf):
-        from tundradb_spark.pipeline.text import rrf_fuse
-
-        return rrf_fuse(
-            db.get_table(stmt.table_a),
-            db.get_table(stmt.table_b),
-            k=stmt.k,
-            top_n=stmt.top_n,
-            query_id_col=stmt.query_col,
-            id_col=stmt.id_col,
-            score_col=stmt.score_col,
-        )
-
     if isinstance(stmt, ast.Drift):
         from tundradb_spark.operators.analytics import distribution_drift
 
@@ -329,15 +214,6 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
             n_bins=stmt.n_bins,
             min_n=stmt.min_n,
             eps=stmt.eps,
-        )
-
-    if isinstance(stmt, ast.TokenDrift):
-        from tundradb_spark.pipeline.text import token_drift
-
-        return token_drift(
-            db.get_table(stmt.ref),
-            db.get_table(stmt.cur),
-            text_col=stmt.text_col,
         )
 
     if isinstance(stmt, ast.Diff):
@@ -377,18 +253,6 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
             include_unchanged=stmt.include_unchanged,
         )
 
-    if isinstance(stmt, ast.Trend):
-        from tundradb_spark.operators.analytics import value_trend
-
-        return value_trend(
-            db.get_table(stmt.table),
-            group_col=stmt.group_col,
-            value_col=stmt.value_col,
-            ts_col=stmt.ts_col,
-            epoch_us=stmt.epoch_us,
-            min_n=stmt.min_n,
-        )
-
     if isinstance(stmt, ast.Quality):
         from tundradb_spark.pipeline.classify import (
             lr_score,
@@ -425,20 +289,12 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
     if isinstance(stmt, ast.Gates):
         from tundradb_spark.pipeline.recipe import gate_funnel
 
-        weights = None
-        if stmt.weights is not None:
-            weights = [
-                (r["bucket"], r["weight"])
-                for r in db.get_table(stmt.weights)
-                .select("bucket", "weight")
-                .collect()
-            ]
         return gate_funnel(
             db.get_table(stmt.table),
             group_col=stmt.group_col,
             text_col=stmt.text_col,
             max_bigram_rep=stmt.max_bigram_rep,
-            quality_weights=weights,
+            quality_weights=_quality_weights(db, stmt.weights),
             min_quality=stmt.min_quality,
             n_quality_buckets=stmt.n_buckets,
             quality_bigrams=stmt.bigrams,
@@ -447,21 +303,13 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
     if isinstance(stmt, ast.Report):
         from tundradb_spark.pipeline.recipe import curation_report
 
-        weights = None
-        if stmt.weights is not None:
-            weights = [
-                (r["bucket"], r["weight"])
-                for r in db.get_table(stmt.weights)
-                .select("bucket", "weight")
-                .collect()
-            ]
         return curation_report(
             db.get_table(stmt.table),
             text_col=stmt.text_col,
             id_col=stmt.id_col,
             group_col=stmt.group_col,
             max_bigram_rep=stmt.max_bigram_rep,
-            quality_weights=weights,
+            quality_weights=_quality_weights(db, stmt.weights),
             min_quality=stmt.min_quality,
             n_quality_buckets=stmt.n_buckets,
             quality_bigrams=stmt.bigrams,
@@ -483,35 +331,33 @@ def execute_ast(db: "Database", stmt: ast.Statement) -> DataFrame | None:
             pair_dst=stmt.pair_dst,
         )
 
-    if isinstance(stmt, ast.Skew):
-        from tundradb_spark.operators.relational import key_skew
-
-        return key_skew(
-            db.get_table(stmt.table), stmt.key_col, top_n=stmt.top_n
-        )
-
-    if isinstance(stmt, ast.Fanout):
-        from tundradb_spark.operators.relational import join_fanout
-
-        return join_fanout(
-            db.get_table(stmt.table_a),
-            db.get_table(stmt.table_b),
-            stmt.key_a,
-            stmt.key_b,
-            top_n=stmt.top_n,
-        )
-
-    if isinstance(stmt, ast.Explain):
-        # plan introspection (extension): the compiled MATCH's PHYSICAL
-        # plan, one output row per line so the shell renders it verbatim
-        df = db.query(_build_query(db, stmt.inner))
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return db.spark.createDataFrame(
-            [(line,) for line in plan.rstrip("\n").split("\n")],
-            "plan string",
-        )
+    if isinstance(stmt, ast.Extension):
+        return _call_operator(db, stmt)
 
     raise QueryError(f"unhandled statement: {stmt!r}")
+
+
+def _quality_weights(db: "Database", name: str | None) -> list | None:
+    """The ``(bucket, weight)`` rows of weight table ``name``, the form the
+    recipe's learned-quality gate takes."""
+    if name is None:
+        return None
+    rows = db.get_table(name).select("bucket", "weight").collect()
+    return [(r["bucket"], r["weight"]) for r in rows]
+
+
+def _call_operator(db: "Database", stmt: ast.Extension) -> DataFrame:
+    """A one-to-one statement: its tables (read with ``db.get_table``) and
+    clause values go to ``stmt.OPERATOR`` by argument name."""
+    module, _, name = stmt.OPERATOR.rpartition(".")
+    op = getattr(importlib.import_module(f"tundradb_spark.{module}"), name)
+    kwargs = {}
+    for f in fields(stmt):
+        value = getattr(stmt, f.name)
+        if "kw" not in f.metadata:
+            value = db.get_table(value)
+        kwargs[f.metadata.get("arg", f.name)] = value
+    return op(**kwargs)
 
 
 def _execute_update(db: "Database", stmt: ast.Update) -> None:

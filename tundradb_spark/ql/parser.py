@@ -17,11 +17,16 @@ Extensions over the reference grammar (documented, deliberate):
   ``ORDER BY p [ASC|DESC], ...``,
   ``LIMIT n`` — each maps 1:1 onto the engine's Query builder
   (query.py:246-323), so text and fluent queries share one execution path.
+- the analytics statements ``KEYWORD ON table [WITH table] clause ...``
+  (FUNNEL ... QUALITY): one generic production, ``extension_statement``,
+  reads each from its declaration in ql/ast.py; a clause is given at most
+  once, in any order.
 """
 
 from __future__ import annotations
 
 import re
+from dataclasses import MISSING, Field
 from typing import Any
 
 from tundradb_spark.errors import QueryError
@@ -248,48 +253,8 @@ class Parser:
             if not self.at_kw("MATCH"):
                 raise QueryError("TundraQL: EXPLAIN expects a MATCH statement")
             stmt = ast.Explain(self.match_statement())
-        elif kw == "FUNNEL":
-            stmt = self.funnel_statement()
-        elif kw == "RETENTION":
-            stmt = self.retention_statement()
-        elif kw == "OUTLIERS":
-            stmt = self.outliers_statement()
-        elif kw == "CUSUM":
-            stmt = self.cusum_statement()
-        elif kw == "NGRAMS":
-            stmt = self.ngrams_statement()
-        elif kw == "MARKOV":
-            stmt = self.markov_statement()
-        elif kw == "SIMILARITY":
-            stmt = self.similarity_statement()
-        elif kw == "COOCCURRENCE":
-            stmt = self.cooccurrence_statement()
-        elif kw == "WINSORIZE":
-            stmt = self.winsorize_statement()
-        elif kw == "BENFORD":
-            stmt = self.benford_statement()
-        elif kw == "CALIBRATION":
-            stmt = self.calibration_statement()
-        elif kw == "RRF":
-            stmt = self.rrf_statement()
-        elif kw == "DRIFT":
-            stmt = self.drift_statement()
-        elif kw == "TOKENDRIFT":
-            stmt = self.tokendrift_statement()
-        elif kw == "DIFF":
-            stmt = self.diff_statement()
-        elif kw == "SKEW":
-            stmt = self.skew_statement()
-        elif kw == "FANOUT":
-            stmt = self.fanout_statement()
-        elif kw == "TREND":
-            stmt = self.trend_statement()
-        elif kw == "QUALITY":
-            stmt = self.quality_statement()
-        elif kw == "GATES":
-            stmt = self.gates_statement()
-        elif kw == "REPORT":
-            stmt = self.report_statement()
+        elif kw in ast.EXTENSIONS:
+            stmt = self.extension_statement(ast.EXTENSIONS[kw])
         else:
             raise QueryError(f"TundraQL: unknown statement {kw!r}")
         self.accept(";")
@@ -734,8 +699,7 @@ class Parser:
         self.expect(")")
         return ast.Delete(locator=(schema, int(t.text)))
 
-    # ---------------------------------------------------------------- SHOW
-    # -------------------------------------------- FUNNEL / RETENTION
+    # -------------------------------------------------- extension statements
     def _int_clause(self, kw: str) -> int:
         t = self.next()
         if t.kind != "int" or int(t.text) < 0:
@@ -745,47 +709,6 @@ class Parser:
             )
         return int(t.text)
 
-    def funnel_statement(self) -> ast.Funnel:
-        """FUNNEL ON table STEPS 's1', 's2', … [USER col] [TS col]
-        [TYPE col] [WITHIN µs]"""
-        self.expect("FUNNEL")
-        self.expect("ON")
-        table = self.ident()
-        self.expect("STEPS")
-        steps: list[str] = []
-        while True:
-            t = self.peek()
-            if t.kind == "string":
-                steps.append(self.value())
-            else:
-                steps.append(self.ident())
-            if not self.accept(","):
-                break
-        user_col, ts_col, type_col, within = "user_id", "ts", "event_type", None
-        while True:
-            if self.at_kw("USER"):
-                self.next()
-                user_col = self.ident()
-            elif self.at_kw("TS"):
-                self.next()
-                ts_col = self.ident()
-            elif self.at_kw("TYPE"):
-                self.next()
-                type_col = self.ident()
-            elif self.at_kw("WITHIN"):
-                self.next()
-                within = self._int_clause("WITHIN")
-            else:
-                break
-        return ast.Funnel(
-            table=table,
-            steps=tuple(steps),
-            user_col=user_col,
-            ts_col=ts_col,
-            type_col=type_col,
-            within_us=within,
-        )
-
     def _num_clause(self, kw: str) -> float:
         t = self.next()
         if t.kind not in ("int", "float"):
@@ -794,892 +717,61 @@ class Parser:
             )
         return float(t.text)
 
-    def outliers_statement(self) -> ast.Outliers:
-        """OUTLIERS ON table [GROUP col] [VALUE col] [ID col] [Z x]
-        [ROBUST [K x]]"""
-        self.expect("OUTLIERS")
-        self.expect("ON")
-        table = self.ident()
-        group_col, value_col, id_col, z = "event_type", "value", "event_id", 3.0
-        robust, k = False, 3.5
+    def _at_clause(self, kw: str) -> bool:
+        return all(
+            self.peek(i).kind == "ident" and self.peek(i).text == word
+            for i, word in enumerate(kw.split())
+        )
+
+    def _clause_value(self, kw: str, f: Field) -> Any:
+        """The value after clause ``kw``, parsed by ``f``'s type (see
+        ast.clause)."""
+        kind = ast.kind(f)
+        if kind == "bool":
+            return not f.default
+        if kind == "str":
+            return self.ident()
+        if kind == "int":
+            return self._int_clause(kw)
+        if kind == "float":
+            return self._num_clause(kw)
+        items = []  # tuple[str, ...]: names or quoted strings, comma-separated
         while True:
-            if self.at_kw("GROUP"):
-                self.next()
-                group_col = self.ident()
-            elif self.at_kw("VALUE"):
-                self.next()
-                value_col = self.ident()
-            elif self.at_kw("ID"):
-                self.next()
-                id_col = self.ident()
-            elif self.at_kw("Z"):
-                self.next()
-                z = self._num_clause("Z")
-            elif self.at_kw("ROBUST"):
-                self.next()
-                robust = True
-            elif self.at_kw("K"):
-                self.next()
-                k = self._num_clause("K")
-            else:
-                break
-        if not robust and k != 3.5:
-            raise QueryError(
-                "TundraQL: OUTLIERS K requires the ROBUST modifier "
-                "(z-score mode takes Z)"
-            )
-        return ast.Outliers(
-            table=table,
-            group_col=group_col,
-            value_col=value_col,
-            id_col=id_col,
-            z=z,
-            robust=robust,
-            k=k,
-        )
+            string = self.peek().kind == "string"
+            items.append(self.value() if string else self.ident())
+            if not self.accept(","):
+                return tuple(items)
 
-    def cooccurrence_statement(self) -> ast.Cooccurrence:
-        """COOCCURRENCE ON table [USER col] [TYPE col] [MIN m] [TOP n]
-        [CAP c]"""
-        self.expect("COOCCURRENCE")
-        self.expect("ON")
-        table = self.ident()
-        user_col, type_col = "user_id", "event_type"
-        min_users, top_n, cap = 1, None, None
-        while True:
-            if self.at_kw("USER"):
-                self.next()
-                user_col = self.ident()
-            elif self.at_kw("TYPE"):
-                self.next()
-                type_col = self.ident()
-            elif self.at_kw("MIN"):
-                self.next()
-                min_users = self._int_clause("MIN")
-            elif self.at_kw("TOP"):
-                self.next()
-                top_n = self._int_clause("TOP")
-            elif self.at_kw("CAP"):
-                self.next()
-                cap = self._int_clause("CAP")
-            else:
-                break
-        return ast.Cooccurrence(
-            table=table,
-            user_col=user_col,
-            type_col=type_col,
-            min_users=min_users,
-            top_n=top_n,
-            max_types_per_user=cap,
-        )
+    def extension_statement(self, cls: type[ast.Extension]) -> ast.Extension:
+        """``KEYWORD ON table [WITH table] clause ...`` for the extension
+        statement ``cls`` declares (ast.Extension)."""
+        kw = self.next().text
+        clauses = cls.clauses()
+        values: dict[str, Any] = {}
+        seen: set[str] = set()
 
-    def winsorize_statement(self) -> ast.Winsorize:
-        """WINSORIZE ON table [GROUP col] [VALUE col] [ID col] [PLO x]
-        [PHI x]"""
-        self.expect("WINSORIZE")
-        self.expect("ON")
-        table = self.ident()
-        group_col, value_col, id_col = "event_type", "value", "event_id"
-        p_lo, p_hi = 0.01, 0.99
-        while True:
-            if self.at_kw("GROUP"):
-                self.next()
-                group_col = self.ident()
-            elif self.at_kw("VALUE"):
-                self.next()
-                value_col = self.ident()
-            elif self.at_kw("ID"):
-                self.next()
-                id_col = self.ident()
-            elif self.at_kw("PLO"):
-                self.next()
-                p_lo = self._num_clause("PLO")
-            elif self.at_kw("PHI"):
-                self.next()
-                p_hi = self._num_clause("PHI")
-            else:
-                break
-        if not (0.0 <= p_lo <= p_hi <= 1.0):
-            raise QueryError(
-                "TundraQL: WINSORIZE needs 0 <= PLO <= PHI <= 1"
-            )
-        return ast.Winsorize(
-            table=table,
-            group_col=group_col,
-            value_col=value_col,
-            id_col=id_col,
-            p_lo=p_lo,
-            p_hi=p_hi,
-        )
+        def take(ck: str) -> None:
+            if ck in seen:
+                raise QueryError(f"TundraQL: {kw} repeats {ck}")
+            seen.add(ck)
+            self.i += len(ck.split())
+            values[clauses[ck].name] = self._clause_value(ck, clauses[ck])
 
-    def benford_statement(self) -> ast.Benford:
-        """BENFORD ON table [GROUP col] [VALUE col] [MIN n]"""
-        self.expect("BENFORD")
-        self.expect("ON")
-        table = self.ident()
-        group_col, value_col, min_n = "event_type", "value", 100
-        while True:
-            if self.at_kw("GROUP"):
-                self.next()
-                group_col = self.ident()
-            elif self.at_kw("VALUE"):
-                self.next()
-                value_col = self.ident()
-            elif self.at_kw("MIN"):
-                self.next()
-                min_n = self._int_clause("MIN")
-            else:
-                break
-        return ast.Benford(
-            table=table,
-            group_col=group_col,
-            value_col=value_col,
-            min_n=min_n,
-        )
-
-    def calibration_statement(self) -> ast.Calibration:
-        """CALIBRATION ON table [PROB col] [LABEL col] [BINS n]"""
-        self.expect("CALIBRATION")
-        self.expect("ON")
-        table = self.ident()
-        prob_col, label_col, n_bins = "prob", "label", 10
-        while True:
-            if self.at_kw("PROB"):
-                self.next()
-                prob_col = self.ident()
-            elif self.at_kw("LABEL"):
-                self.next()
-                label_col = self.ident()
-            elif self.at_kw("BINS"):
-                self.next()
-                n_bins = self._int_clause("BINS")
-            else:
-                break
-        if n_bins < 1:
-            raise QueryError("TundraQL: CALIBRATION BINS must be >= 1")
-        return ast.Calibration(
-            table=table,
-            prob_col=prob_col,
-            label_col=label_col,
-            n_bins=n_bins,
-        )
-
-    def rrf_statement(self) -> ast.Rrf:
-        """RRF ON table_a WITH table_b [K k] [TOP n] [QUERY col] [ID col]
-        [SCORE col]"""
-        self.expect("RRF")
-        self.expect("ON")
-        table_a = self.ident()
-        self.expect("WITH")
-        table_b = self.ident()
-        k, top_n = 60, None
-        query_col, id_col, score_col = "query_id", "doc_id", "score"
-        while True:
-            if self.at_kw("K"):
-                self.next()
-                k = self._int_clause("K")
-            elif self.at_kw("TOP"):
-                self.next()
-                top_n = self._int_clause("TOP")
-            elif self.at_kw("QUERY"):
-                self.next()
-                query_col = self.ident()
-            elif self.at_kw("ID"):
-                self.next()
-                id_col = self.ident()
-            elif self.at_kw("SCORE"):
-                self.next()
-                score_col = self.ident()
-            else:
-                break
-        if k < 1:
-            raise QueryError("TundraQL: RRF K must be >= 1")
-        if top_n is not None and top_n < 1:
-            raise QueryError("TundraQL: RRF TOP must be >= 1")
-        return ast.Rrf(
-            table_a=table_a,
-            table_b=table_b,
-            k=k,
-            top_n=top_n,
-            query_col=query_col,
-            id_col=id_col,
-            score_col=score_col,
-        )
-
-    def drift_statement(self) -> ast.Drift:
-        """DRIFT ON cur WITH ref [GROUP col] [VALUE col] [LO x] [HI y]
-        [BINS n] [MIN n] [EPS x]"""
-        self.expect("DRIFT")
-        self.expect("ON")
-        cur = self.ident()
-        self.expect("WITH")
-        ref = self.ident()
-        group_col, value_col = "event_type", "value"
-        lo, hi, n_bins, min_n, eps = 0.0, 1000.0, 10, 100, 1e-6
-        while True:
-            if self.at_kw("GROUP"):
-                self.next()
-                group_col = self.ident()
-            elif self.at_kw("VALUE"):
-                self.next()
-                value_col = self.ident()
-            elif self.at_kw("LO"):
-                self.next()
-                lo = self._num_clause("LO")
-            elif self.at_kw("HI"):
-                self.next()
-                hi = self._num_clause("HI")
-            elif self.at_kw("BINS"):
-                self.next()
-                n_bins = self._int_clause("BINS")
-            elif self.at_kw("MIN"):
-                self.next()
-                min_n = self._int_clause("MIN")
-            elif self.at_kw("EPS"):
-                self.next()
-                eps = self._num_clause("EPS")
-            else:
-                break
-        # range/positivity checks live in the operator (shared with the
-        # DataFrame API); fail fast here only on what the grammar owns
-        if n_bins < 1:
-            raise QueryError("TundraQL: DRIFT BINS must be >= 1")
-        if min_n < 1:
-            raise QueryError("TundraQL: DRIFT MIN must be >= 1")
-        return ast.Drift(
-            cur=cur,
-            ref=ref,
-            group_col=group_col,
-            value_col=value_col,
-            lo=lo,
-            hi=hi,
-            n_bins=n_bins,
-            min_n=min_n,
-            eps=eps,
-        )
-
-    def tokendrift_statement(self) -> ast.TokenDrift:
-        """TOKENDRIFT ON cur WITH ref [TEXT col]"""
-        self.expect("TOKENDRIFT")
-        self.expect("ON")
-        cur = self.ident()
-        self.expect("WITH")
-        ref = self.ident()
-        text_col = "text"
-        if self.at_kw("TEXT"):
-            self.next()
-            text_col = self.ident()
-        return ast.TokenDrift(cur=cur, ref=ref, text_col=text_col)
-
-    def diff_statement(self) -> ast.Diff:
-        """DIFF ON new WITH old [ID col] [TEXT col | COLS c1, c2, …]
-        [ALL] [SUMMARY]"""
-        self.expect("DIFF")
-        self.expect("ON")
-        new = self.ident()
-        self.expect("WITH")
-        old = self.ident()
-        id_col, text_col = "doc_id", "text"
-        cols: list[str] | None = None
-        include_unchanged = summary = False
-        while True:
-            if self.at_kw("ID"):
-                self.next()
-                id_col = self.ident()
-            elif self.at_kw("TEXT"):
-                self.next()
-                text_col = self.ident()
-            elif self.at_kw("COLS"):
-                self.next()
-                cols = [self.ident()]
-                while self.peek().text == ",":
-                    self.next()
-                    cols.append(self.ident())
-            elif self.at_kw("ALL"):
-                self.next()
-                include_unchanged = True
-            elif self.at_kw("SUMMARY"):
-                self.next()
-                summary = True
-            else:
-                break
-        if cols is not None and summary:
-            raise QueryError(
-                "TundraQL: DIFF SUMMARY applies to the text-corpus form "
-                "only (COLS diffs have no summary operator)"
-            )
-        return ast.Diff(
-            new=new,
-            old=old,
-            id_col=id_col,
-            text_col=text_col,
-            cols=tuple(cols) if cols is not None else None,
-            include_unchanged=include_unchanged,
-            summary=summary,
-        )
-
-    def trend_statement(self) -> ast.Trend:
-        """TREND ON table EPOCH us [GROUP col] [VALUE col] [TS col]
-        [MIN n]"""
-        self.expect("TREND")
-        self.expect("ON")
-        table = self.ident()
-        epoch_us = None
-        group_col, value_col, ts_col, min_n = (
-            "event_type", "value", "ts", 100,
-        )
-        while True:
-            if self.at_kw("EPOCH"):
-                self.next()
-                epoch_us = self._int_clause("EPOCH")
-            elif self.at_kw("GROUP"):
-                self.next()
-                group_col = self.ident()
-            elif self.at_kw("VALUE"):
-                self.next()
-                value_col = self.ident()
-            elif self.at_kw("TS"):
-                self.next()
-                ts_col = self.ident()
-            elif self.at_kw("MIN"):
-                self.next()
-                min_n = self._int_clause("MIN")
-            else:
-                break
-        if epoch_us is None:
-            raise QueryError(
-                "TundraQL: TREND requires EPOCH <µs> — the time origin "
-                "is a data fact the caller fixes"
-            )
-        if min_n < 1:
-            raise QueryError("TundraQL: TREND MIN must be >= 1")
-        return ast.Trend(
-            table=table,
-            epoch_us=epoch_us,
-            group_col=group_col,
-            value_col=value_col,
-            ts_col=ts_col,
-            min_n=min_n,
-        )
-
-    def quality_statement(self) -> ast.Quality:
-        """QUALITY ON docs WITH weights [BUCKETS n] [ID col] [TEXT col]
-        [UNIGRAMS] [THRESHOLDS LABEL col [BINS n]]"""
-        self.expect("QUALITY")
-        self.expect("ON")
-        table = self.ident()
-        self.expect("WITH")
-        weights = self.ident()
-        n_buckets, id_col, text_col, bigrams = 256, "doc_id", "text", True
-        label_col: str | None = None
-        n_bins, saw_bins = 10, False
-        while True:
-            if self.at_kw("BUCKETS"):
-                self.next()
-                n_buckets = self._int_clause("BUCKETS")
-            elif self.at_kw("ID"):
-                self.next()
-                id_col = self.ident()
-            elif self.at_kw("TEXT"):
-                self.next()
-                text_col = self.ident()
-            elif self.at_kw("UNIGRAMS"):
-                self.next()
-                bigrams = False
-            elif self.at_kw("THRESHOLDS"):
-                self.next()
-                self.expect("LABEL")
-                label_col = self.ident()
-            elif self.at_kw("BINS"):
-                self.next()
-                n_bins = self._int_clause("BINS")
-                saw_bins = True
-            else:
-                break
-        if not 2 <= n_buckets <= 4096:
-            raise QueryError(
-                "TundraQL: QUALITY BUCKETS must be in [2, 4096] (must"
-                " match the weight table's training dimension)"
-            )
-        if saw_bins and label_col is None:
-            raise QueryError(
-                "TundraQL: QUALITY BINS only applies to the THRESHOLDS"
-                " form (THRESHOLDS LABEL col [BINS n])"
-            )
-        if not 1 <= n_bins <= 1000:
-            raise QueryError(
-                "TundraQL: QUALITY BINS must be in [1, 1000]"
-            )
-        return ast.Quality(
-            table=table,
-            weights=weights,
-            n_buckets=n_buckets,
-            id_col=id_col,
-            text_col=text_col,
-            bigrams=bigrams,
-            label_col=label_col,
-            n_bins=n_bins,
-        )
-
-    def gates_statement(self) -> ast.Gates:
-        """GATES ON docs [GROUP col] [TEXT col] [MAXREP x]
-        [WITH weights [BUCKETS n] [MIN q] [UNIGRAMS]]"""
-        self.expect("GATES")
-        self.expect("ON")
-        table = self.ident()
-        group_col, text_col, max_rep = "lang", "text", 0.5
-        weights: str | None = None
-        n_buckets, min_quality, bigrams = 256, 0.5, True
-        saw_quality_clause = False
-        while True:
-            if self.at_kw("GROUP"):
-                self.next()
-                group_col = self.ident()
-            elif self.at_kw("TEXT"):
-                self.next()
-                text_col = self.ident()
-            elif self.at_kw("MAXREP"):
-                self.next()
-                max_rep = self._num_clause("MAXREP")
-            elif self.at("WITH"):
-                self.next()
-                weights = self.ident()
-            elif self.at_kw("BUCKETS"):
-                self.next()
-                n_buckets = self._int_clause("BUCKETS")
-                saw_quality_clause = True
-            elif self.at_kw("MIN"):
-                self.next()
-                min_quality = self._num_clause("MIN")
-                saw_quality_clause = True
-            elif self.at_kw("UNIGRAMS"):
-                self.next()
-                bigrams = False
-                saw_quality_clause = True
-            else:
-                break
-        # presence-tracked, not value-compared: `GATES ON docs MIN 0.5;`
-        # (the forgot-WITH mistake typed with a default value) must fail
-        # exactly like any other quality knob without a weight table
-        if weights is None and saw_quality_clause:
-            raise QueryError(
-                "TundraQL: GATES BUCKETS/MIN/UNIGRAMS only apply to the"
-                " learned-quality gate (WITH weights ...)"
-            )
-        if not 2 <= n_buckets <= 4096:
-            raise QueryError(
-                "TundraQL: GATES BUCKETS must be in [2, 4096] (must"
-                " match the weight table's training dimension)"
-            )
-        if not 0.0 <= max_rep <= 1.0:
-            raise QueryError("TundraQL: GATES MAXREP must be in [0, 1]")
-        return ast.Gates(
-            table=table,
-            group_col=group_col,
-            text_col=text_col,
-            max_bigram_rep=max_rep,
-            weights=weights,
-            n_buckets=n_buckets,
-            min_quality=min_quality,
-            bigrams=bigrams,
-        )
-
-    def report_statement(self) -> ast.Report:
-        """REPORT ON docs [GROUP col] [TEXT col] [ID col] [MAXREP x]
-        [WITH weights [BUCKETS n] [MIN q] [UNIGRAMS]]
-        [LABELED tbl [LABEL col] PRECISION p [BINS n]]
-        [SPLIT col PAIRS tbl [SRC col] [DST col]]"""
-        self.expect("REPORT")
-        self.expect("ON")
-        table = self.ident()
-        group_col, text_col, id_col = "lang", "text", "doc_id"
-        max_rep = 0.5
-        weights: str | None = None
-        n_buckets, min_quality, bigrams = 256, 0.5, True
-        labeled: str | None = None
-        label_col, target, cbins = "label", None, 10
-        split_col: str | None = None
-        pairs: str | None = None
-        pair_src, pair_dst = "id_a", "id_b"
-        saw_quality_clause = False
-        saw_label_clause = False
-        saw_pair_cols = False
-        while True:
-            if self.at_kw("GROUP"):
-                self.next()
-                group_col = self.ident()
-            elif self.at_kw("TEXT"):
-                self.next()
-                text_col = self.ident()
-            elif self.at_kw("ID"):
-                self.next()
-                id_col = self.ident()
-            elif self.at_kw("MAXREP"):
-                self.next()
-                max_rep = self._num_clause("MAXREP")
-            elif self.at("WITH"):
-                self.next()
-                weights = self.ident()
-            elif self.at_kw("BUCKETS"):
-                self.next()
-                n_buckets = self._int_clause("BUCKETS")
-                saw_quality_clause = True
-            elif self.at_kw("MIN"):
-                self.next()
-                min_quality = self._num_clause("MIN")
-                saw_quality_clause = True
-            elif self.at_kw("UNIGRAMS"):
-                self.next()
-                bigrams = False
-                saw_quality_clause = True
-            elif self.at_kw("LABELED"):
-                self.next()
-                labeled = self.ident()
-            elif self.at_kw("LABEL"):
-                self.next()
-                label_col = self.ident()
-                saw_label_clause = True
-            elif self.at_kw("PRECISION"):
-                self.next()
-                target = self._num_clause("PRECISION")
-            elif self.at_kw("BINS"):
-                self.next()
-                cbins = self._int_clause("BINS")
-                saw_label_clause = True
-            elif self.at_kw("SPLIT"):
-                self.next()
-                split_col = self.ident()
-            elif self.at_kw("PAIRS"):
-                self.next()
-                pairs = self.ident()
-            elif self.at_kw("SRC"):
-                self.next()
-                pair_src = self.ident()
-                saw_pair_cols = True
-            elif self.at_kw("DST"):
-                self.next()
-                pair_dst = self.ident()
-                saw_pair_cols = True
-            else:
-                break
-        # the same presence contracts the operator enforces, surfaced at
-        # PARSE time so a typo dies before any table is read
-        if weights is None and saw_quality_clause:
-            raise QueryError(
-                "TundraQL: REPORT BUCKETS/MIN/UNIGRAMS only apply to the"
-                " learned-quality gate (WITH weights ...)"
-            )
-        if labeled is not None and weights is None:
-            raise QueryError(
-                "TundraQL: REPORT LABELED needs the weight table"
-                " (WITH weights ...) the threshold is measured for"
-            )
-        if (labeled is None) != (target is None):
-            raise QueryError(
-                "TundraQL: REPORT LABELED and PRECISION go together"
-                " (a labeled table without a target, or vice versa,"
-                " would silently fall back to the hand-set MIN)"
-            )
-        if labeled is None and saw_label_clause:
-            raise QueryError(
-                "TundraQL: REPORT LABEL/BINS only apply to the measured"
-                " threshold (LABELED tbl ... PRECISION p)"
-            )
-        if pairs is None and saw_pair_cols:
-            raise QueryError(
-                "TundraQL: REPORT SRC/DST only apply to the duplicate-"
-                "pair table (PAIRS tbl)"
-            )
-        if (split_col is None) != (pairs is None):
-            raise QueryError(
-                "TundraQL: REPORT SPLIT and PAIRS go together (the"
-                " leakage section needs both the assignment column and"
-                " the duplicate-pair table)"
-            )
-        if not 2 <= n_buckets <= 4096:
-            raise QueryError(
-                "TundraQL: REPORT BUCKETS must be in [2, 4096] (must"
-                " match the weight table's training dimension)"
-            )
-        if not 0.0 <= max_rep <= 1.0:
-            raise QueryError("TundraQL: REPORT MAXREP must be in [0, 1]")
-        if target is not None and not 0.0 < target <= 1.0:
-            raise QueryError(
-                "TundraQL: REPORT PRECISION must be in (0, 1]"
-            )
-        if not 1 <= cbins <= 100000:
-            raise QueryError("TundraQL: REPORT BINS must be in [1, 1e5]")
-        return ast.Report(
-            table=table,
-            group_col=group_col,
-            text_col=text_col,
-            id_col=id_col,
-            max_bigram_rep=max_rep,
-            weights=weights,
-            n_buckets=n_buckets,
-            min_quality=min_quality,
-            bigrams=bigrams,
-            labeled=labeled,
-            label_col=label_col,
-            target_precision=target,
-            calibration_bins=cbins,
-            split_col=split_col,
-            pairs=pairs,
-            pair_src=pair_src,
-            pair_dst=pair_dst,
-        )
-
-    def skew_statement(self) -> ast.Skew:
-        """SKEW ON table KEY col [TOP n]"""
-        self.expect("SKEW")
-        self.expect("ON")
-        table = self.ident()
-        self.expect("KEY")
-        key_col = self.ident()
-        top_n = 20
-        if self.at_kw("TOP"):
-            self.next()
-            top_n = self._int_clause("TOP")
-        if top_n < 1:
-            raise QueryError("TundraQL: SKEW TOP must be >= 1")
-        return ast.Skew(table=table, key_col=key_col, top_n=top_n)
-
-    def fanout_statement(self) -> ast.Fanout:
-        """FANOUT ON table_a WITH table_b KEY col [KEYB col] [TOP n]"""
-        self.expect("FANOUT")
-        self.expect("ON")
-        table_a = self.ident()
-        self.expect("WITH")
-        table_b = self.ident()
-        self.expect("KEY")
-        key_a = self.ident()
-        key_b, top_n = None, 10
-        while True:
-            if self.at_kw("KEYB"):
-                self.next()
-                key_b = self.ident()
-            elif self.at_kw("TOP"):
-                self.next()
-                top_n = self._int_clause("TOP")
-            else:
-                break
-        if top_n < 1:
-            raise QueryError("TundraQL: FANOUT TOP must be >= 1")
-        return ast.Fanout(
-            table_a=table_a,
-            table_b=table_b,
-            key_a=key_a,
-            key_b=key_b,
-            top_n=top_n,
-        )
-
-    def cusum_statement(self) -> ast.Cusum:
-        """CUSUM ON table SLACK x THRESHOLD y [KEY col] [VALUE col]
-        [TS col] [TIEBREAK col]"""
-        self.expect("CUSUM")
-        self.expect("ON")
-        table = self.ident()
-        slack = threshold = None
-        key_col, value_col, ts_col, tiebreak = "user_id", "value", "ts", None
-        while True:
-            if self.at_kw("SLACK"):
-                self.next()
-                slack = self._num_clause("SLACK")
-            elif self.at_kw("THRESHOLD"):
-                self.next()
-                threshold = self._num_clause("THRESHOLD")
-            elif self.at_kw("KEY"):
-                self.next()
-                key_col = self.ident()
-            elif self.at_kw("VALUE"):
-                self.next()
-                value_col = self.ident()
-            elif self.at_kw("TS"):
-                self.next()
-                ts_col = self.ident()
-            elif self.at_kw("TIEBREAK"):
-                self.next()
-                tiebreak = self.ident()
-            else:
-                break
-        if slack is None or threshold is None:
-            raise QueryError(
-                "TundraQL: CUSUM requires SLACK and THRESHOLD clauses"
-            )
-        return ast.Cusum(
-            table=table,
-            slack=slack,
-            threshold=threshold,
-            key_col=key_col,
-            value_col=value_col,
-            ts_col=ts_col,
-            tiebreak_col=tiebreak,
-        )
-
-    def ngrams_statement(self) -> ast.Ngrams:
-        """NGRAMS ON table [N k] [USER col] [TS col] [TYPE col] [MIN m]
-        [TOP n] [TIEBREAK col]"""
-        self.expect("NGRAMS")
-        self.expect("ON")
-        table = self.ident()
-        n, min_count, top_n = 3, 1, None
-        user_col, ts_col, type_col, tiebreak = (
-            "user_id", "ts", "event_type", None,
-        )
-        while True:
-            if self.at_kw("N"):
-                self.next()
-                n = self._int_clause("N")
-            elif self.at_kw("USER"):
-                self.next()
-                user_col = self.ident()
-            elif self.at_kw("TS"):
-                self.next()
-                ts_col = self.ident()
-            elif self.at_kw("TYPE"):
-                self.next()
-                type_col = self.ident()
-            elif self.at_kw("MIN"):
-                self.next()
-                min_count = self._int_clause("MIN")
-            elif self.at_kw("TOP"):
-                self.next()
-                top_n = self._int_clause("TOP")
-            elif self.at_kw("TIEBREAK"):
-                self.next()
-                tiebreak = self.ident()
-            else:
-                break
-        return ast.Ngrams(
-            table=table,
-            n=n,
-            user_col=user_col,
-            ts_col=ts_col,
-            type_col=type_col,
-            min_count=min_count,
-            top_n=top_n,
-            tiebreak_col=tiebreak,
-        )
-
-    def markov_statement(self) -> ast.Markov:
-        """MARKOV ON table [USER col] [TS col] [TYPE col] [TIEBREAK col]
-        [MIN m]"""
-        self.expect("MARKOV")
-        self.expect("ON")
-        table = self.ident()
-        user_col, ts_col, type_col = "user_id", "ts", "event_type"
-        tiebreak, min_count = "event_id", 1
-        while True:
-            if self.at_kw("USER"):
-                self.next()
-                user_col = self.ident()
-            elif self.at_kw("TS"):
-                self.next()
-                ts_col = self.ident()
-            elif self.at_kw("TYPE"):
-                self.next()
-                type_col = self.ident()
-            elif self.at_kw("TIEBREAK"):
-                self.next()
-                tiebreak = self.ident()
-            elif self.at_kw("MIN"):
-                self.next()
-                min_count = self._int_clause("MIN")
-            else:
-                break
-        return ast.Markov(
-            table=table,
-            user_col=user_col,
-            ts_col=ts_col,
-            type_col=type_col,
-            tiebreak_col=tiebreak,
-            min_count=min_count,
-        )
-
-    def similarity_statement(self) -> ast.Similarity:
-        """SIMILARITY ON [EDGES] name [SRC col] [DST col] [MIN m]
-        [MAXDEG d] [EXCLUDE ADJACENT]"""
-        self.expect("SIMILARITY")
-        self.expect("ON")
-        edges = False
-        if self.at_kw("EDGES"):
-            self.next()
-            edges = True
-        table = self.ident()
-        src = dst = None
-        min_common, max_degree, include_adjacent = 1, None, True
-        while True:
-            if self.at_kw("SRC"):
-                self.next()
-                src = self.ident()
-            elif self.at_kw("DST"):
-                self.next()
-                dst = self.ident()
-            elif self.at_kw("MIN"):
-                self.next()
-                min_common = self._int_clause("MIN")
-                if min_common < 1:
-                    raise QueryError(
-                        "TundraQL: SIMILARITY MIN must be >= 1"
-                    )
-            elif self.at_kw("MAXDEG"):
-                self.next()
-                max_degree = self._int_clause("MAXDEG")
-            elif self.at_kw("EXCLUDE"):
-                self.next()
-                self.expect("ADJACENT")
-                include_adjacent = False
-            else:
-                break
-        return ast.Similarity(
-            table=table,
-            edges=edges,
-            src=src,
-            dst=dst,
-            min_common=min_common,
-            max_degree=max_degree,
-            include_adjacent=include_adjacent,
-        )
-
-    def retention_statement(self) -> ast.Retention:
-        """RETENTION ON table [USER col] [TS col] [PERIOD µs]
-        [MAX OFFSET n]"""
-        self.expect("RETENTION")
-        self.expect("ON")
-        table = self.ident()
-        user_col, ts_col = "user_id", "ts"
-        period_us, max_offset = 86_400_000_000, None
-        while True:
-            if self.at_kw("USER"):
-                self.next()
-                user_col = self.ident()
-            elif self.at_kw("TS"):
-                self.next()
-                ts_col = self.ident()
-            elif self.at_kw("PERIOD"):
-                self.next()
-                period_us = self._int_clause("PERIOD")
-                if period_us < 1:
-                    raise QueryError(
-                        "TundraQL: PERIOD expects a positive integer"
-                    )
-            elif self.at_kw("MAX"):
-                self.next()
-                if not self.at_kw("OFFSET"):
-                    raise QueryError(
-                        "TundraQL: MAX must be followed by OFFSET"
-                    )
-                self.next()
-                max_offset = self._int_clause("MAX OFFSET")
-            else:
-                break
-        return ast.Retention(
-            table=table,
-            user_col=user_col,
-            ts_col=ts_col,
-            period_us=period_us,
-            max_offset=max_offset,
-        )
+        before = cls.BEFORE_TABLE
+        for lead, f in zip(("ON", "WITH"), cls.tables()):
+            self.expect(lead)
+            if lead == "ON" and before and self._at_clause(before):
+                take(before)
+            values[f.name] = self.ident()
+        trailing = [c for c in clauses if c != before]
+        while ck := next((c for c in trailing if self._at_clause(c)), None):
+            take(ck)
+        for ck, f in clauses.items():
+            if f.name not in values and f.default is MISSING:
+                raise QueryError(f"TundraQL: {kw} requires {ck}")
+        stmt = cls(**values)
+        stmt.check(seen)
+        return stmt
 
     def show_statement(self) -> ast.Show:
         self.expect("SHOW")

@@ -24,8 +24,10 @@ import argparse
 import os
 import sys
 import time
+from dataclasses import MISSING
 
 from tundradb_spark.errors import QueryError, SchemaError
+from tundradb_spark.ql import ast
 from tundradb_spark.ql.interpreter import execute_statement
 from tundradb_spark.ql.parser import split_statements
 
@@ -64,20 +66,34 @@ def run_script(db, text: str, echo: bool = False, stop_on_error: bool = False) -
     return failures
 
 
+def _syntax(cls: type[ast.Extension]) -> str:
+    """The hint template of an extension statement, from its declaration:
+    ``ON table [WITH table] CLAUSE value [OPTIONAL value] [FLAG] ...``,
+    each value shown by its field name."""
+    first, *more = cls.tables()
+    lead = f"[{cls.BEFORE_TABLE}] " if cls.BEFORE_TABLE else ""
+    parts = [f"ON {lead}{first.name}", *(f"WITH {f.name}" for f in more)]
+    for kw, f in cls.clauses().items():
+        if kw == cls.BEFORE_TABLE:
+            continue
+        kind = ast.kind(f)
+        text = kw if kind == "bool" else f"{kw} {f.name}"
+        if kind.startswith("tuple"):
+            text += ", ..."
+        parts.append(text if f.default is MISSING else f"[{text}]")
+    return " ".join(parts)
+
+
 #: TundraQL statement keywords offered by tab-completion, mirroring the
-#: reference's linenoise completions (apps/tundra_shell.cpp:1860-1954)
+#: reference's linenoise completions (apps/tundra_shell.cpp:1860-1954);
+#: extension clause keywords are documented by the HINTS templates
+#: instead of polluting the global pool
 COMPLETION_KEYWORDS = [
     "CREATE", "SCHEMA", "EDGE", "NODE", "UNIQUE", "MATCH", "WHERE",
     "SELECT", "UPDATE", "DELETE", "SET", "SHOW", "EDGES", "TYPES",
     "COMMIT", "FROM", "TO", "AS", "AND", "OR", "ORDER", "BY", "LIMIT",
     "INNER", "LEFT", "RIGHT", "FULL", "SEMI", "ANTI", "APPEND",
-    # analytics statements (r9-r10); their clause keywords (STEPS,
-    # WITHIN, PERIOD, MAX OFFSET, SLACK, THRESHOLD, ...) are documented
-    # by the HINTS templates instead of polluting the global pool
-    "FUNNEL", "RETENTION", "OUTLIERS", "CUSUM", "NGRAMS", "MARKOV",
-    "SIMILARITY", "COOCCURRENCE", "WINSORIZE", "BENFORD", "CALIBRATION",
-    "RRF", "DRIFT", "TOKENDRIFT", "DIFF", "SKEW", "FANOUT", "TREND",
-    "QUALITY", "GATES", "REPORT",
+    *ast.EXTENSIONS,
     "ON",
 ]
 
@@ -96,35 +112,9 @@ HINTS = {
     "UPDATE ": "User(0) SET field = value | (u:User) SET u.field = value WHERE ...",
     "SHOW ": "EDGES edge_type | EDGE TYPES",
     "SHOW EDGES ": "edge_type_name",
-    "FUNNEL ": "ON table STEPS 's1', 's2', ... [WITHIN micros]",
-    "FUNNEL ON ": "table STEPS 's1', 's2', ...",
-    "RETENTION ": "ON table [PERIOD micros] [MAX OFFSET n]",
-    "RETENTION ON ": "table [PERIOD micros] [MAX OFFSET n]",
-    "OUTLIERS ": "ON table [GROUP col] [VALUE col] [ID col] [Z x] [ROBUST [K x]]",
-    "CUSUM ": "ON table SLACK x THRESHOLD y [KEY col] [VALUE col] [TS col]",
-    "NGRAMS ": "ON table [N k] [MIN m] [TOP n] [TYPE col]",
-    "MARKOV ": "ON table [USER col] [TS col] [TYPE col] [TIEBREAK col] [MIN m]",
-    "SIMILARITY ": "ON [EDGES] name [SRC col] [DST col] [MIN m] [MAXDEG d] [EXCLUDE ADJACENT]",
-    "COOCCURRENCE ": "ON table [USER col] [TYPE col] [MIN m] [TOP n] [CAP c]",
-    "WINSORIZE ": "ON table [GROUP col] [VALUE col] [ID col] [PLO x] [PHI x]",
-    "BENFORD ": "ON table [GROUP col] [VALUE col] [MIN n]",
-    "CALIBRATION ": "ON table [PROB col] [LABEL col] [BINS n]",
-    "RRF ": "ON table_a WITH table_b [K k] [TOP n] [QUERY col] [ID col] [SCORE col]",
-    "DRIFT ": "ON cur WITH ref [GROUP col] [VALUE col] [LO x] [HI y] [BINS n] [MIN n] [EPS x]",
-    "DIFF ": "ON new WITH old [ID col] [TEXT col | COLS c1, c2, ...] [ALL] [SUMMARY]",
-    "TOKENDRIFT ": "ON cur WITH ref [TEXT col]",
-    "SKEW ": "ON table KEY col [TOP n]",
-    "FANOUT ": "ON table_a WITH table_b KEY col [KEYB col] [TOP n]",
-    "TREND ": "ON table EPOCH micros [GROUP col] [VALUE col] [TS col] [MIN n]",
-    "QUALITY ": "ON docs WITH weights [BUCKETS n] [ID col] [TEXT col]"
-                " [UNIGRAMS] [THRESHOLDS LABEL col [BINS n]]",
-    "GATES ": "ON docs [GROUP col] [TEXT col] [MAXREP x]"
-              " [WITH weights [BUCKETS n] [MIN q] [UNIGRAMS]]",
-    "REPORT ": "ON docs [GROUP col] [TEXT col] [ID col] [MAXREP x]"
-               " [WITH weights [BUCKETS n] [MIN q] [UNIGRAMS]]"
-               " [LABELED tbl [LABEL col] PRECISION p [BINS n]]"
-               " [SPLIT col PAIRS tbl [SRC col] [DST col]]",
 }
+HINTS |= {f"{kw} ": _syntax(cls) for kw, cls in ast.EXTENSIONS.items()}
+HINTS |= {f"{kw} ON ": HINTS[f"{kw} "].removeprefix("ON ") for kw in ast.EXTENSIONS}
 
 
 def hint_for(line: str) -> str | None:
