@@ -51,6 +51,7 @@ from tundradb_spark.pipeline.queries import (
     q_dedup_minhash,
 )
 from tundradb_spark.query import Query, where as W
+from tundradb_spark.session import materialize
 
 
 def _bt(name: str):
@@ -77,7 +78,7 @@ def _spread(
 @contextmanager
 def _tmpdirs(*prefixes: str) -> Iterator[list[str]]:
     """Temp dirs for a streaming query (stage/out/checkpoint), removed on
-    exit — results must be localCheckpoint'ed before leaving the scope."""
+    exit — results must be materialized before leaving the scope."""
     import shutil
     import tempfile
 
@@ -501,8 +502,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sym_edges,
         connected_components,
     )
-    from tundradb_spark.session import materialize
-
     pairs = q_dedup_minhash(spark, sf_dir)
     # r7: symmetrize+dedup+checkpoint the pair graph ONCE — CC and LPA
     # both consume it (presymmetrized=True), saving a full
@@ -808,7 +807,7 @@ def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the temp dirs vanish (the caller's action would
         # otherwise read deleted files)
-        return result.localCheckpoint(eager=True)
+        return materialize(result)
 
 
 def q_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,11 +853,10 @@ def q_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     db.delete_nodes(
         "acct", db.get_table("acct").filter(F.col("bal") < 0.0).select("id")
     )
-    orders = (
+    orders = materialize(  # one scan; reused by register+connect
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .filter(F.col("o_custkey") <= 50)
         .select("o_custkey", "o_orderkey", "o_totalprice")
-        .localCheckpoint(eager=True)  # one scan; reused by register+connect
     )
     db.register_node_table(
         "ordn",
@@ -949,7 +947,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count_distinct("user_id").alias("n_users"),
             )
         )
-        return result.localCheckpoint(eager=True)
+        return materialize(result)
 
 
 def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1056,7 +1054,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("hi_value", F.lit(0.0)).alias("hi_value"),
         )
         # materialize before the staged source vanishes
-        return res.localCheckpoint(eager=True)
+        return materialize(res)
 
 
 def q_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1160,7 +1158,7 @@ def q_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_events"),
             )
         )
-        return res.localCheckpoint(eager=True)
+        return materialize(res)
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1245,7 +1243,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if empty is not None:
             return empty
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
+        return materialize(spark.read.parquet(out_dir))
 
 
 def q_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1283,11 +1281,10 @@ def q_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         db.bulk_insert("acct", cust)  # ids 0..30
         # one pushed-filter scan of orders, materialized once — register,
         # bulk_connect, and both COMMIT serializations reuse the blocks
-        orders = (
+        orders = materialize(
             spark.read.parquet(f"{sf_dir}/orders.parquet")
             .filter(F.col("o_custkey") <= 30)
             .select("o_custkey", "o_orderkey", "o_totalprice")
-            .localCheckpoint(eager=True)
         )
         db.register_node_table(
             "ordn",
@@ -1336,7 +1333,7 @@ def q_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("oid").alias("n_orders"))
         )
         # materialize before the snapshot dir vanishes
-        return res.localCheckpoint(eager=True)
+        return materialize(res)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -3570,9 +3567,9 @@ def q_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # best 2.73 -> ~1.9 s; output tuple-identical (A/B-asserted).
     docs = _spread(spark, sf_dir, "documents", "doc_id")
     qdf = spark.createDataFrame(BM25_QUERY_SET, "query_id long, query string")
-    scored = bm25_scored(
-        docs, qdf, k1=BM25_K1, b=BM25_B
-    ).localCheckpoint(eager=False)
+    scored = materialize(
+        bm25_scored(docs, qdf, k1=BM25_K1, b=BM25_B), eager=False
+    )
     from pyspark.sql import Window
 
     # r14 opt session 5 (guide §2.4, §3.4 "the join you can delete"):
@@ -4305,10 +4302,10 @@ def q_lr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 -> 1 (the checkpointed scan), isolated interleaved best
     # 1.18-2.29 -> 0.56-0.86 s; output tuple- and dtype-identical at
     # all three SFs (A/B-asserted), oracle green.
-    scored = docs.select(
+    scored = materialize(docs.select(
         lr_prob_col(LR_WEIGHTS, n_buckets=LR_BUCKETS).alias("prob"),
         F.expr("cast(lang = 'en' as int)").alias("label"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     return calibration_bins(scored, prob_col="prob", label_col="label",
                             n_bins=10)
 
@@ -4533,14 +4530,14 @@ def q_calibrated_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 opt (guide §2.4/§5): the curve pass and the gate pass both
     # need the SAME inline fold over the corpus — the eager threshold
     # collect forces the curve branch, so without materialization the
-    # md5-per-gram fold runs twice.  One lazy localCheckpoint on the
+    # md5-per-gram fold runs twice.  One lazy checkpoint on the
     # doc-count (prob, lang) projection computes it once; the gate pass
     # reads the checkpointed probabilities, which are the identical
     # values by construction.  Isolated best 2.88 -> 1.18 s.
-    scored = docs.select(
+    scored = materialize(docs.select(
         lr_prob_col(LR_WEIGHTS, n_buckets=LR_BUCKETS).alias("prob"),
         F.col("lang"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     labeled = scored.select(
         "prob", (F.col("lang") == "en").cast("int").alias("label")
     )
@@ -4749,13 +4746,13 @@ def q_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 opt (guide §2.4/§5): distribution_drift bins ref and cur in
     # two separate aggregations, and both sides are filters of this one
     # scored frame — without materialization the inline LR fold runs
-    # twice over the corpus.  Lazy localCheckpoint on the narrow
+    # twice over the corpus.  A lazy checkpoint on the narrow
     # (doc_id, lang, q) projection pays the fold once; checkpointed
     # values are bit-identical.  Isolated best 1.33 -> 1.08 s.
-    scored = docs.select(
+    scored = materialize(docs.select(
         "doc_id", "lang",
         lr_prob_col(LR_WEIGHTS, n_buckets=LR_BUCKETS).alias("q"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     return distribution_drift(
         scored.filter("doc_id % 3 < 2"),
         scored.filter("doc_id % 3 = 2"),
@@ -4939,10 +4936,10 @@ def q_precision_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precision_thresholds routes through calibration_partials, whose
     # [0, 1] domain filter alias-substitutes the md5-gram fold into both
     # filter conjuncts; the lazy checkpoint pays the fold once.
-    scored = docs.select(
+    scored = materialize(docs.select(
         lr_prob_col(LR_WEIGHTS, n_buckets=LR_BUCKETS).alias("prob"),
         (F.col("lang") == "en").cast("int").alias("label"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     return precision_thresholds(scored, "prob", "label", n_bins=GATE_BINS)
 
 

@@ -125,3 +125,41 @@ def test_seated_schema_is_driver_canonicalizable(spark, name):
         "digest/render them to scalars (string or rounded double) before "
         "seating (driver canonicalizer contract)"
     )
+
+
+def _checkpoint_calls() -> tuple[list[str], int]:
+    """``.localCheckpoint(`` / ``.checkpoint(`` calls in the package and
+    the driver entry: those outside ``session.materialize``, and the
+    number inside it."""
+    root = pathlib.Path(entry.__file__).parent
+    files = sorted((root / "tundradb_spark").rglob("*.py"))
+    stray, inside = [], 0
+    for path in files + [root / "__spark_entry__.py"]:
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == root / "tundradb_spark" / "session.py":
+            (fn,) = [
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "materialize"
+            ]
+            allowed = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                if id(node) in allowed:
+                    inside += 1
+                else:
+                    stray.append(f"{path.relative_to(root)}:{node.lineno}")
+    return stray, inside
+
+
+def test_every_checkpoint_goes_through_session_materialize():
+    """One materialization path: the local-vs-reliable and eager-vs-lazy
+    choice is made in ``session.materialize`` alone, so a checkpoint dir
+    set on the cluster reaches every materialized frame."""
+    stray, inside = _checkpoint_calls()
+    assert not stray, stray
+    assert inside == 2  # the reliable and the local branch

@@ -507,6 +507,30 @@ class TestTimeRollupResample:
         with pytest.raises(ValueError):
             resample_ffill(df, 1, "user_id", "value")
 
+    def test_resample_guard_rides_the_bounds_job(self, spark):
+        """The grid-size guard is observed by the job that materializes
+        the bounds frame: building a resample fires 2 jobs (the bounds
+        shuffle and its materialization), where a separate guard count
+        fired 4."""
+        from tundradb_spark.operators.relational import resample_ffill
+
+        rows = [(0, 1_000_000, 1, 3.0), (1, 31_000_000, 1, 9.0),
+                (2, 5_000_000, 2, 1.0)]
+        df = spark.createDataFrame(
+            rows, "event_id long, ts long, user_id long, value double"
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("resample-ffill-build", "count resample build jobs")
+        try:
+            out = resample_ffill(df, 10_000_000, "user_id", "value")
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup("resample-ffill-build")
+        assert len(jobs) == 2, jobs
+        assert sorted(map(tuple, out.collect())) == [
+            (1, 0, 9.0, 2), (2, 0, 1.0, 1)
+        ]
+
     def test_validation(self, spark):
         from tundradb_spark.operators.relational import time_bucket_rollup
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from tundradb_spark.functions.timecols import epoch_micros
+from tundradb_spark.session import materialize
 
 
 def funnel(
@@ -819,7 +820,7 @@ def robust_outliers(
     # med is consumed TWICE (the MAD deviation join and the final
     # score join) and is group-sized — checkpoint lazily so the whole
     # median pipeline (scan + sort window) runs once (guide §5)
-    med = _rank_median(ok, value_col, "__med").localCheckpoint(eager=False)
+    med = materialize(_rank_median(ok, value_col, "__med"), eager=False)
     dev = ok.join(F.broadcast(med.select(group_col, "__med")), group_col).select(
         id_col, group_col, F.abs(v - F.col("__med")).alias("__dev")
     )

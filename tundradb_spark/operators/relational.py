@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from tundradb_spark.errors import QueryError
+from tundradb_spark.session import materialize
 
 
 def _bt(name: str):
@@ -302,20 +303,12 @@ def _align(a: DataFrame, b: DataFrame) -> DataFrame:
     return b.select([_bt(c) for c in a.columns])
 
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
-
-
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
 
 
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(_align(a, b))
-
-
-def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersectAll(_align(a, b))
 
 
 def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -613,9 +606,9 @@ def _resample_grid(
     """Shared bucket/observation/grid machinery for the resamplers:
     returns ``(obs, grid)`` frames; raises when any key's grid would
     exceed 2^22 points (a mis-set step fails loudly instead of exploding
-    rows).  The one-row-per-key bounds frame is localCheckpoint-ed so the
-    guard's count and the grid generation share a single materialization
-    instead of each re-scanning the events input."""
+    rows).  The one-row-per-key bounds frame is materialized once, and
+    the guard's count is observed by that same job, so the guard and the
+    grid generation share one pass over the events input."""
     from tundradb_spark.functions.timecols import epoch_micros
 
     if step_us < 1:
@@ -635,12 +628,11 @@ def _resample_grid(
         F.max_by("__v", F.struct("__us", "__tb")).alias("__last"),
         F.count(F.lit(1)).alias("n_in_bucket"),
     )
-    bounds = base.groupBy("__k").agg(
-        F.min("__b").alias("__lo"), F.max("__b").alias("__hi")
-    ).localCheckpoint(eager=True)
     n_points = F.expr(f"(__hi - __lo) div {step_us} + 1")
-    too_big = bounds.filter(n_points > (1 << 22)).limit(1).count()
-    if too_big:
+    bounds, seen = materialize(base.groupBy("__k").agg(
+        F.min("__b").alias("__lo"), F.max("__b").alias("__hi")
+    ), F.count_if(n_points > (1 << 22)).alias("too_big"))
+    if seen["too_big"]:
         raise ValueError(
             f"resample: step_us={step_us} yields over {1 << 22} grid "
             "points for at least one key — refusing to explode; widen the step"
@@ -1008,13 +1000,13 @@ def downsample_lttb(
     wrank = Window.partitionBy("key").orderBy(
         F.col("ts_us").asc(), F.col("__tb").asc()
     )
-    ranked = base.select(
+    ranked = materialize(base.select(  # ranks reused by three branches
         "key",
         "ts_us",
         "value",
         F.row_number().over(wrank).alias("__r"),
         F.count(F.lit(1)).over(Window.partitionBy("key")).alias("__n"),
-    ).localCheckpoint(eager=True)  # ranks reused by three branches
+    ))
     small = ranked.filter(F.col("__n") <= n_out).select(
         "key", "ts_us", "value"
     )

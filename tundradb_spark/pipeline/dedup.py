@@ -40,6 +40,8 @@ from tundradb_spark.pipeline.hashing import (
     lsh_bands,
     minhash_params,
 )
+# renamed: the pair functions' public ``materialize`` flag shadows it
+from tundradb_spark.session import materialize as materialize_frame
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -251,7 +253,7 @@ def minhash_lsh_pairs(
         # cache — otherwise it lingers in storage memory for the life of the
         # session (round-1 ADVICE); the checkpoint also cuts lineage for the
         # CC loop
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = materialize_frame(pairs)
         sigs.unpersist()
     return pairs
 
@@ -376,7 +378,7 @@ def simhash_pairs(
     )
     if materialize:
         # materialize pairs, then drop the simhash cache (minhash_lsh_pairs)
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = materialize_frame(pairs)
         sh.unpersist()
     return pairs
 
@@ -499,7 +501,7 @@ def ngram_jaccard_pairs(
     if materialize:
         # materialize the (small) pair set, then release the posting cache
         # — semantics as in minhash_lsh_pairs
-        out = out.localCheckpoint(eager=True)
+        out = materialize_frame(out)
         cached.unpersist()
     return out
 
@@ -943,10 +945,9 @@ def incremental_dup_pairs_indexed(
         new_sigs = minhash_signature(
             new_docs, text_col, id_col, num_hashes, shingle_k, seed
         )
-    nb = (
+    nb = materialize_frame(  # signatures computed once, reused
         _banded(new_sigs, id_col, bands, r)
         .withColumn("band_bucket", _band_bucket(n_buckets))
-        .localCheckpoint(eager=True)  # signatures computed once, reused
     )
     probe = (
         nb.select("band_idx", "band_bucket").distinct().collect()
@@ -1051,14 +1052,12 @@ def semantic_dedup(
     # checkpoint each consumer re-runs the n_cells-dot assignment (r8:
     # 3× recompute dominated the sf1 auto-cells probe).  At cluster
     # scale this is the docstring's "persist partitioned by cell"
-    # write-side step; localCheckpoint is its single-job analog.
-    base = assigned.select(
+    # write-side step; one eager checkpoint is its single-job analog.
+    base = materialize_frame(assigned.select(
         id_col,
         "cell",
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "norm", F.sqrt(_dot(F.col("v"), F.col("v")))
-    ).localCheckpoint()
+    ).withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v")))))
     if vectorized:
         import numpy as np
         import pandas as pd
@@ -1328,7 +1327,7 @@ def exact_substring_spans(
     # bytes comparable to what the min_docs groupBy already shuffles
     # for its (dg, doc) distinct partials, paid once to local disk
     # instead of recomputing tokenize+hash over the corpus a second time.
-    grams = grams.localCheckpoint(eager=False)
+    grams = materialize_frame(grams, eager=False)
     dup = (
         grams.groupBy("dg")
         .agg(F.count_distinct(F.col(id_col)).alias("nd"))

@@ -162,11 +162,3 @@ def char_shingles(text: Column, k: int = 5, distinct: bool = True) -> Column:
         1,
     )
     return F.array_distinct(out) if distinct else out
-
-
-def char_shingles_sql(expr: str, k: int = 5) -> str:
-    """DuckDB SQL equivalent of :func:`char_shingles`."""
-    return (
-        f"list_distinct([substr(lower({expr}), i, {k}) "
-        f"for i in generate_series(1, greatest(length({expr}) - {k - 1}, 1))])"
-    )

@@ -33,6 +33,7 @@ from tundradb_spark.pipeline.multimodal import (
     sample_frames,
 )
 from tundradb_spark.pipeline.text import fingerprint_summary
+from tundradb_spark.session import materialize
 
 # shared tuning constants (must match between query and oracle)
 MINHASH_NUM, MINHASH_BANDS, SHINGLE_K = 12, 4, 5
@@ -137,7 +138,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The MinHash pair set is consumed by BOTH q_dedup_minhash and
 # q_dup_clusters (connected components over the same pairs); the generator
-# eagerly materializes it (localCheckpoint — see dedup.minhash_lsh_pairs),
+# eagerly materializes it (session.materialize — see dedup.minhash_lsh_pairs),
 # so memoizing the materialized frame per (session, sf_dir) makes the second
 # consumer free instead of paying the ~full signature+join cost twice
 # (round-2 verdict item 3). Same convention as graphs.tpch._GRAPH_CACHE.
@@ -898,7 +899,7 @@ def q_text_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # structurally identical and Spark's ReuseExchange deduplicates the
     # featurize/bucket-count shuffles inside the union (two independent
     # q_text_dsir* calls would run the whole pipeline twice; an explicit
-    # localCheckpoint was measured SLOWER here — materialization cost
+    # checkpoint was measured SLOWER here — materialization cost
     # exceeds the saved recompute at bench scale)
     full_dsir = q_text_dsir_full(spark, sf_dir)
     dsir = (
@@ -3346,13 +3347,13 @@ def q_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full extra corpus digest pass at 100 TB.  ReuseExchange alone does
     # NOT collapse the shared subtree (measured: column pruning makes
     # the branches' pruned aggregates non-canonical-equal, 1 of 8
-    # exchanges reused), so the span frame is localCheckpoint'd lazily —
+    # exchanges reused), so the span frame is checkpointed lazily —
     # computed once at first materialization, both branches read the
     # checkpointed blocks.  Spans are corpus-SUMMARY sized (one row per
     # merged span, no text), so the checkpoint is small at any scale.
-    spans_raw = exact_substring_spans(
+    spans_raw = materialize(exact_substring_spans(
         _wide_docs(spark, sf_dir), k=SUBSTR_K, min_docs=SUBSTR_MIN_DOCS
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     spans = spans_raw.select(
         F.lit("span").alias("grp"),
         F.col("doc_id").cast("long").alias("k1"),

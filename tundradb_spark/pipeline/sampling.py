@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from tundradb_spark.pipeline.hashing import h32
 from tundradb_spark.pipeline.text import tokens
+from tundradb_spark.session import materialize
 
 
 def sample_hash_col(id_col: str = "doc_id", seed: int = 97) -> Column:
@@ -715,9 +716,9 @@ def split_leakage(
     # (r14 optimization round: q_split_leakage best 1.86 -> 1.42 s at
     # sf0.1, outputs identical; same narrow-projection checkpoint
     # discipline as the shared scoring passes)
-    s = docs.select(
+    s = materialize(docs.select(
         F.col(id_col).alias("__id"), F.col(split_col).alias("__sp")
-    ).filter(F.col("__sp").isNotNull()).localCheckpoint(eager=False)
+    ).filter(F.col("__sp").isNotNull()), eager=False)
     a = s.select(F.col("__id").alias("__ia"), F.col("__sp").alias("split_a"))
     b = s.select(F.col("__id").alias("__ib"), F.col("__sp").alias("split_b"))
     return (

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from tundradb_spark.pipeline.hashing import FP_BASE, FP_MOD
+from tundradb_spark.session import materialize
 
 #: tiny per-language stopword profiles for the n-gram/stopword heuristic
 LANG_PROFILES: dict[str, list[str]] = {
@@ -985,12 +986,12 @@ def bpe_train(
         if _words is not None
         else _bpe_word_types(docs, text_col, max_word_types)
     )
-    state = w.select(
+    state = materialize(w.select(  # word types only — small by construction
         F.concat(
             F.lit(" "), F.array_join(F.split("w", ""), " "), F.lit(" ")
         ).alias("syms"),
         "freq",
-    ).localCheckpoint()  # word types only — small by construction
+    ))
     rules: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         # guard size<2: sequence(0, -1) DESCENDS in Spark instead of
@@ -1020,12 +1021,12 @@ def bpe_train(
             break
         l, r, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         rules.append((rank, l, r, l + r, cnt))
-        state = state.select(
+        state = materialize(state.select(
             F.replace(
                 "syms", F.lit(f" {l} {r} "), F.lit(f" {l}{r} ")
             ).alias("syms"),
             "freq",
-        ).localCheckpoint()
+        ))
     return spark.createDataFrame(
         rules, "rank long, left string, right string, merged string, pair_count long"
     )
@@ -1060,7 +1061,7 @@ def bpe_segment(
         # train from it, then segment the same materialized frame
         # (rules=None through two separate corpus scans was the r7
         # review's double-work finding)
-        w = _bpe_word_types(docs, text_col, max_word_types).localCheckpoint()
+        w = materialize(_bpe_word_types(docs, text_col, max_word_types))
         rules = [
             (r["left"], r["right"])
             for r in bpe_train(docs, n_merges=n_merges, _words=w)
@@ -1919,7 +1920,7 @@ def lm_buckets(
     # checkpoint is doc-count sized (id,
     # group, n_tokens, lm_logprob — no text), i.e. summary-sized at any
     # corpus scale, and lazy: materialized once at first action.
-    labeled = labeled.localCheckpoint(eager=False)
+    labeled = materialize(labeled, eager=False)
     th = (
         labeled.groupBy(group_col)
         .agg(

@@ -136,8 +136,3 @@ def count_exchanges(df: DataFrame, include_spread: bool = False) -> int:
     if not include_spread:
         n -= plan.count("REPARTITION_BY_NUM")
     return n
-
-
-def count_codegen_spans(df: DataFrame) -> int:
-    """Whole-stage-codegen span count (smaller = wider fused pipelines)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", simple_plan(df))))

@@ -8,7 +8,12 @@ parquet filter pushdown on.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+import zipfile
 from contextlib import contextmanager
 from typing import Iterator
 
@@ -24,11 +29,45 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     Only confs that Spark allows to change at runtime belong here; session
     timezone matters for ``unix_micros``/NTZ casts, and ``nanosAsLong``
     mirrors the reference's raw int64-nanos clock representation
-    (include/common/clock.hpp:24-33).
+    (include/common/clock.hpp:24-33).  The package is shipped to the
+    session's Python workers here too, as in :func:`get_spark`.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _ship_package(spark)
     return spark
+
+
+@functools.cache
+def _package_zip() -> str:
+    """This package's ``.py`` files in one zip, written once per process
+    into a temp dir removed at exit."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    out = tempfile.mkdtemp(prefix="tundradb-pyfiles-")
+    atexit.register(shutil.rmtree, out, True)
+    path = os.path.join(out, "tundradb_spark.zip")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for dirpath, _, files in os.walk(pkg):
+            for name in files:
+                if name.endswith(".py"):
+                    full = os.path.join(dirpath, name)
+                    zf.write(full, os.path.relpath(full, os.path.dirname(pkg)))
+    return path
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Put this package on the Python workers' path, once per SparkContext.
+
+    A Python worker (``mapInPandas``, ``applyInPandas``, a UDF) imports
+    the package by name but does not see the driver's ``sys.path``: a
+    driver that found the package through ``sys.path`` from any other
+    working directory would fail in the worker with ``ModuleNotFoundError``.
+    """
+    sc = spark.sparkContext
+    path = _package_zip()
+    name = "/" + os.path.basename(path)
+    if not any(f.endswith(name) for f in sc.listFiles):
+        sc.addPyFile(path)
 
 
 def materialize(
@@ -165,4 +204,6 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark)
+    return spark

@@ -27,13 +27,15 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from tundradb_spark.session import materialize
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
     from tundradb_spark.database import Database
 
 
-#: compact (localCheckpoint) the target table every N micro-batches so plan
+#: compact (materialize) the target table every N micro-batches so plan
 #: depth stays bounded over an unbounded stream (round-1 ADVICE: each batch
 #: layers one union + zipWithIndex conversion on the frame's lineage)
 DEFAULT_COMPACT_EVERY = 16
@@ -756,9 +758,9 @@ def stream_ingest_dedup(
         # sees PREVIOUS batches' signatures).  Pairs come back id_a <
         # id_b, so dropping every id_b member IS "drop any doc matching a
         # lower-id sibling" (greedy, conservative)
-        batch_sigs = minhash_signature(
+        batch_sigs = materialize(minhash_signature(
             survivors, text_col, id_col, num_hashes, shingle_k, seed
-        ).localCheckpoint(eager=True)
+        ))
         near_dups = (
             minhash_lsh_pairs(
                 None,
