@@ -29,7 +29,6 @@ to double for a type-stable comparison.
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
@@ -48,31 +47,16 @@ from tundradb_spark.pipeline.queries import (
     PIPELINE_ORACLES,
     PIPELINE_QUERIES,
     Q_DOC_QUALITY_SQL as _DOC_QUALITY_SQL,
+    _cached_index_dir,
     q_dedup_minhash,
 )
 from tundradb_spark.query import Query, where as W
 from tundradb_spark.session import materialize
+from tundradb_spark.sources import tables
 
 
 def _bt(name: str):
     return F.col("`" + name + "`")
-
-
-def _spread(
-    spark: SparkSession, sf_dir: str, table: str, key: str
-) -> DataFrame:
-    """Read a testdata table and spread an under-split scan across the
-    session's cores (session.spread_scan — the guide's §2.5 unsplittable-
-    input fix; a no-op whenever the file layout already provides enough
-    splits, i.e. on any real at-scale table).  Used by the queries whose
-    first stage does heavy per-row work (text folds, shingle hashing,
-    window sorts): the sf testdata ships ONE row group per file, so the
-    raw scan plans a single partition and that work ran single-task."""
-    from tundradb_spark.session import spread_scan
-
-    return spread_scan(
-        spark.read.parquet(f"{sf_dir}/{table}.parquet"), key
-    )
 
 
 @contextmanager
@@ -541,9 +525,9 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     level 0 the region, level 1 its nations, level 2 their customers."""
     from tundradb_spark.graphs.algorithms import bfs_levels
 
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    reg = spark.read.parquet(f"{sf_dir}/region.parquet")
+    nat = tables.read(spark, sf_dir, "nation")
+    cust = tables.read(spark, sf_dir, "customer")
+    reg = tables.read(spark, sf_dir, "region")
     r2n = nat.select(
         F.concat(F.lit("r"), F.col("n_regionkey")).alias("src"),
         F.concat(F.lit("n"), F.col("n_nationkey")).alias("dst"),
@@ -619,7 +603,7 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.dedup import apply_dedup
 
     pairs = q_dedup_minhash(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
 
     def _summary(kept, tag):
         return kept.groupBy("lang").agg(
@@ -655,8 +639,8 @@ def _triangle_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch and q_clustering: region→nation→customer membership edges plus
     region→customer shortcuts (one triangle per shortcut customer).
     _TRIANGLE_GRAPH_SQL is the oracle-side twin — edit BOTH or neither."""
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
+    nat = tables.read(spark, sf_dir, "nation")
+    cust = tables.read(spark, sf_dir, "customer").filter(
         F.col("c_custkey") < 100
     )
     r2n = nat.select(
@@ -756,14 +740,10 @@ def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale-killer here)."""
     import os
 
-    from tundradb_spark.session import (
-        ensure_runtime_confs,
-        scoped_shuffle_partitions,
-    )
+    from tundradb_spark.session import scoped_shuffle_partitions
     from tundradb_spark.streaming.ops import windowed_event_counts
 
-    ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = tables.schema(spark, sf_dir, "events")
     out_schema = (
         "window_start_us long, event_type string, "
         "n_events long, total_value double"
@@ -773,7 +753,7 @@ def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source would already be a directory of arriving files)
     with _tmpdirs("qsw_src_", "qsw_out_", "qsw_ckpt_") as (stage, out_dir, ckpt):
         os.symlink(
-            os.path.abspath(f"{sf_dir}/events.parquet"), f"{stage}/events.parquet"
+            os.path.abspath(tables.path(sf_dir, "events")), f"{stage}/events.parquet"
         )
         stream = spark.readStream.schema(schema).parquet(stage)
         stream = stream.withColumn("ts_t", event_timestamp(stream, "ts"))
@@ -833,7 +813,7 @@ def q_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
     cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        tables.read(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") <= 50)
         .orderBy("c_custkey")
         .coalesce(1)
@@ -854,7 +834,7 @@ def q_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "acct", db.get_table("acct").filter(F.col("bal") < 0.0).select("id")
     )
     orders = materialize(  # one scan; reused by register+connect
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        tables.read(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") <= 50)
         .select("o_custkey", "o_orderkey", "o_totalprice")
     )
@@ -902,17 +882,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is plain DISTINCT."""
     import os
 
-    from tundradb_spark.session import (
-        ensure_runtime_confs,
-        scoped_shuffle_partitions,
-    )
+    from tundradb_spark.session import scoped_shuffle_partitions
     from tundradb_spark.streaming.ops import streaming_dedup
 
-    ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = tables.schema(spark, sf_dir, "events")
     with _tmpdirs("qsd_src_", "qsd_out_", "qsd_ckpt_") as (stage, out_dir, ckpt):
         os.symlink(
-            os.path.abspath(f"{sf_dir}/events.parquet"), f"{stage}/events.parquet"
+            os.path.abspath(tables.path(sf_dir, "events")), f"{stage}/events.parquet"
         )
         stream = spark.readStream.schema(schema).parquet(stage)
         stream = stream.withColumn(
@@ -964,11 +940,9 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     under test, from being swamped by bulk rows the batch queries already
     cover."""
     from tundradb_spark.database import Database
-    from tundradb_spark.session import ensure_runtime_confs
     from tundradb_spark.streaming.ops import stream_edges, stream_nodes
 
-    ensure_runtime_confs(spark)
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
+    events = tables.read(spark, sf_dir, "events").filter(
         F.col("user_id") < 60
     )
     with _tmpdirs("qsi_src_", "qsi_ck1_", "qsi_ck2_") as (stage, ck1, ck2):
@@ -1075,17 +1049,13 @@ def q_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import time
 
-    from tundradb_spark.session import (
-        ensure_runtime_confs,
-        scoped_shuffle_partitions,
-    )
+    from tundradb_spark.session import scoped_shuffle_partitions
     from tundradb_spark.streaming.ops import sessionize
 
-    ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = tables.schema(spark, sf_dir, "events")
     with _tmpdirs("qss_src_", "qss_out_", "qss_ckpt_") as (stage, out_dir, ckpt):
         os.symlink(
-            os.path.abspath(f"{sf_dir}/events.parquet"), f"{stage}/events.parquet"
+            os.path.abspath(tables.path(sf_dir, "events")), f"{stage}/events.parquet"
         )
         stream = spark.readStream.schema(schema).parquet(stage).filter(
             F.col("user_id") < 60
@@ -1094,7 +1064,7 @@ def q_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts", event_timestamp(stream, "ts")
         ).select("ts", "user_id", "event_type", "value")
         expected = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
+            tables.read(spark, sf_dir, "events")
             .filter(F.col("user_id") < 60)
             .select("user_id")
             .distinct()
@@ -1168,11 +1138,9 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (test_streaming covers that mode). Two events share a session
     iff their gap is under 12 h; output is one row per (user, session) with
     exact first/last event µs, count, and value total."""
-    from tundradb_spark.session import ensure_runtime_confs
     from tundradb_spark.streaming.ops import session_window_agg
 
-    ensure_runtime_confs(spark)
-    ev_src = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev_src = tables.read(spark, sf_dir, "events")
     events = ev_src.withColumn(
         "ts_t", event_timestamp(ev_src, "ts")
     ).select("user_id", "ts_t", "value")
@@ -1188,17 +1156,13 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + band (the operator makes the bound mandatory)."""
     import os
 
-    from tundradb_spark.session import (
-        ensure_runtime_confs,
-        scoped_shuffle_partitions,
-    )
+    from tundradb_spark.session import scoped_shuffle_partitions
     from tundradb_spark.streaming.ops import stream_stream_join
 
-    ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = tables.schema(spark, sf_dir, "events")
     with _tmpdirs("qsj_src_", "qsj_out_", "qsj_ckpt_") as (stage, out_dir, ckpt):
         os.symlink(
-            os.path.abspath(f"{sf_dir}/events.parquet"), f"{stage}/events.parquet"
+            os.path.abspath(tables.path(sf_dir, "events")), f"{stage}/events.parquet"
         )
 
         def _events():
@@ -1270,7 +1234,7 @@ def q_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         db = Database(spark, path=root)
         db.create_schema("acct", {"name": "string", "bal": "double"})
         cust = (
-            spark.read.parquet(f"{sf_dir}/customer.parquet")
+            tables.read(spark, sf_dir, "customer")
             .filter(F.col("c_custkey") <= 30)
             .orderBy("c_custkey")
             .coalesce(1)
@@ -1282,7 +1246,7 @@ def q_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one pushed-filter scan of orders, materialized once — register,
         # bulk_connect, and both COMMIT serializations reuse the blocks
         orders = materialize(
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
+            tables.read(spark, sf_dir, "orders")
             .filter(F.col("o_custkey") <= 30)
             .select("o_custkey", "o_orderkey", "o_totalprice")
         )
@@ -1356,7 +1320,7 @@ def q_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "acct", {"name": "string", "bal": "double", "status": "string"}
     )
     cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        tables.read(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") <= 50)
         .orderBy("c_custkey")
         .coalesce(1)
@@ -1417,15 +1381,6 @@ def q_ql_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# WeakKeyDictionary keyed on the live session (same pattern as
-# pipeline.queries._INDEX_DIR_CACHE): id()-keyed entries could outlive a
-# garbage-collected SparkSession and leak a stale warehouse path into a
-# new session
-_BUCKETED_CACHE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]"
-) = weakref.WeakKeyDictionary()
-
-
 def q_bucketed_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCH over the co-located bucketed layout (sources/bucketed.py):
     customer bucketed by id, IN_NATION by source_id — the adjacency join
@@ -1433,21 +1388,16 @@ def q_bucketed_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_bucketed.py).  Same query and oracle as q_inner_join, so the
     row proves layout-independence of the results; the write happens once
     per session (amortized, exactly like a real deployment's index build)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from tundradb_spark.database import Database
     from tundradb_spark.sources.bucketed import (
         load_graph_bucketed,
         save_graph_bucketed,
     )
 
-    cached = _BUCKETED_CACHE.setdefault(spark, {})
-    if sf_dir not in cached:
+    def build(loc: str) -> None:
         src = Database(spark)
-        cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+        cust = tables.read(spark, sf_dir, "customer")
+        nat = tables.read(spark, sf_dir, "nation")
         src.register_node_table("customer", cust, "c_custkey", resume_counter=False)
         src.register_node_table("nation", nat, "n_nationkey", resume_counter=False)
         src.register_edge_table(
@@ -1459,11 +1409,11 @@ def q_bucketed_match(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0).cast("long").alias("created_ts"),
             ),
         )
-        loc = tempfile.mkdtemp(prefix="tundra_bucketed_")
-        atexit.register(shutil.rmtree, loc, ignore_errors=True)
         save_graph_bucketed(src, f"qbm{abs(id(spark)) % 100000}", loc, n_buckets=8)
-        cached[sf_dir] = loc
-    db = load_graph_bucketed(spark, cached[sf_dir])
+
+    db = load_graph_bucketed(
+        spark, _cached_index_dir(spark, sf_dir, "bucketed", build)
+    )
     q = (
         Query.from_("c:customer")
         .where("c.c_acctbal", ">", 7500.0)
@@ -1575,7 +1525,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     class PPR hit at 6dp."""
     from tundradb_spark.graphs.algorithms import hits
 
-    e = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    e = tables.read(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("source_id"),
         (F.col("c_nationkey") + 1_000_000).alias("target_id"),
     )
@@ -1614,7 +1564,7 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream — integer floor bucketing, decimal-exact sums."""
     from tundradb_spark.operators.relational import time_bucket_rollup
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return time_bucket_rollup(
         ev, ROLLUP_BUCKET_US, ["event_type"], "value"
     ).select(
@@ -1633,7 +1583,7 @@ def q_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     surrounding observations — every filled value oracle-checked."""
     from tundradb_spark.operators.relational import resample_interp
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return resample_interp(
         ev, RESAMPLE_STEP_US, "user_id", "value", tiebreak_col="event_id"
     ).select(
@@ -1650,7 +1600,7 @@ def q_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-timestamp tie so every carried value is engine-exact."""
     from tundradb_spark.operators.relational import resample_ffill
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return resample_ffill(
         ev, RESAMPLE_STEP_US, "user_id", "value", tiebreak_col="event_id"
     ).select(
@@ -2689,7 +2639,7 @@ def q_moving_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     output row per event, every value oracle-checked."""
     from tundradb_spark.operators.relational import moving_aggregate
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return moving_aggregate(
         ev, MOVING_WINDOW_US, "user_id", "value"
     ).select(
@@ -2836,7 +2786,7 @@ def q_time_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked (exact integer-µs spans, decimal-cast accumulation)."""
     from tundradb_spark.operators.relational import time_weighted_avg
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return time_weighted_avg(
         ev, ROLLUP_BUCKET_US, "user_id", "value", tiebreak_col="event_id"
     ).select(
@@ -2888,7 +2838,7 @@ def q_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     every surviving (ts, value) oracle-checked."""
     from tundradb_spark.operators.relational import downsample_lttb
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return downsample_lttb(
         ev, LTTB_N_OUT, "user_id", "value", tiebreak_col="event_id"
     ).select(
@@ -2973,7 +2923,7 @@ def q_typed_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     this row value-checks the engine path against DuckDB's JSON access."""
     from tundradb_spark.database import Database
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = tables.read(spark, sf_dir, "events").select(
         "event_id",
         F.parse_json("props").alias("props"),
         "event_type",
@@ -3010,7 +2960,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one fixed IEEE expression."""
     from tundradb_spark.operators.relational import ewma_filter
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return ewma_filter(
         ev, "user_id", "value", alpha=EWMA_ALPHA, taps=EWMA_TAPS,
         tiebreak_col="event_id",
@@ -3064,7 +3014,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces exactly."""
     from tundradb_spark.operators.analytics import funnel
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return funnel(ev, FUNNEL_STEPS, within_us=FUNNEL_WINDOW_US)
 
 
@@ -3074,7 +3024,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention ratios for the first week."""
     from tundradb_spark.operators.analytics import cohort_retention
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return cohort_retention(
         ev, period_us=RETENTION_PERIOD_US, max_offset=RETENTION_MAX_OFFSET
     )
@@ -3160,7 +3110,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the query terms' posting lists."""
     from tundradb_spark.pipeline.text import bm25_topk
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     qdf = spark.createDataFrame(BM25_QUERY_SET, "query_id long, query string")
     return bm25_topk(docs, qdf, k=BM25_K, k1=BM25_K1, b=BM25_B)
 
@@ -3171,7 +3121,7 @@ def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor; two map-side-combined corpus counts, vocabulary-keyed joins."""
     from tundradb_spark.pipeline.text import pmi_collocations
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     return pmi_collocations(docs, min_count=PMI_MIN_COUNT, top_n=PMI_TOP_N)
 
 
@@ -3181,7 +3131,7 @@ def q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     events scan."""
     from tundradb_spark.operators.analytics import value_outliers
 
-    ev = _spread(spark, sf_dir, "events", "event_id")
+    ev = tables.read(spark, sf_dir, "events", spread_key="event_id")
     return value_outliers(ev, z_threshold=OUTLIER_Z)
 
 
@@ -3276,7 +3226,7 @@ def q_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities."""
     from tundradb_spark.operators.analytics import markov_transitions
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return markov_transitions(ev, min_count=MARKOV_MIN_COUNT)
 
 
@@ -3287,7 +3237,7 @@ def q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     = each user's own mean."""
     from tundradb_spark.operators.relational import cusum_alarms
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return cusum_alarms(
         ev,
         "user_id",
@@ -3335,7 +3285,7 @@ def q_event_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, TakeOrderedAndProject cut."""
     from tundradb_spark.operators.analytics import event_ngrams
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return event_ngrams(
         ev,
         n=NGRAM_N,
@@ -3411,7 +3361,7 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bins rows out."""
     from tundradb_spark.pipeline.classify import calibration_bins
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     scored = docs.select(
         ((F.col("doc_id") % 97) / F.lit(96.0)).alias("p"),
         (F.instr(F.lower("text"), "the") > 0).alias("y"),
@@ -3448,7 +3398,7 @@ def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     glitches surfaced as flag='domain' rows."""
     from tundradb_spark.operators.analytics import robust_outliers
 
-    ev = _spread(spark, sf_dir, "events", "event_id")
+    ev = tables.read(spark, sf_dir, "events", spread_key="event_id")
     return robust_outliers(ev, k=ROBUST_K)
 
 
@@ -3470,7 +3420,7 @@ def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     any-order)."""
     from tundradb_spark.operators.analytics import event_cooccurrence
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return event_cooccurrence(
         ev, min_users=COOC_MIN_USERS, top_n=COOC_TOP
     )
@@ -3501,7 +3451,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass through flagged, never becoming the bound."""
     from tundradb_spark.operators.analytics import winsorize
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return winsorize(ev, p_lo=WINSOR_P[0], p_hi=WINSOR_P[1])
 
 
@@ -3528,7 +3478,7 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitting 11 longs per group."""
     from tundradb_spark.operators.analytics import benford_deviation
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return benford_deviation(ev, min_n=BENFORD_MIN_N)
 
 
@@ -3565,7 +3515,7 @@ def q_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame is checkpointed once (queries x matching docs rows, narrow)
     # and each ranking is a per-query top-k window over it.  Isolated
     # best 2.73 -> ~1.9 s; output tuple-identical (A/B-asserted).
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     qdf = spark.createDataFrame(BM25_QUERY_SET, "query_id long, query string")
     scored = materialize(
         bm25_scored(docs, qdf, k1=BM25_K1, b=BM25_B), eager=False
@@ -3688,7 +3638,7 @@ def q_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     never wobble the totals."""
     from tundradb_spark.operators.analytics import distribution_drift
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = tables.read(spark, sf_dir, "events")
     return distribution_drift(
         ev.filter("event_id % 3 < 2"),
         ev.filter("event_id % 3 = 2"),
@@ -3722,7 +3672,7 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     id hash join, output proportional to the change."""
     from tundradb_spark.pipeline.dedup import corpus_diff
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     old = docs.filter("doc_id % 11 != 0")
     new = docs.filter("doc_id % 13 != 0").select(
         "doc_id",
@@ -3757,7 +3707,7 @@ def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-token decimal(28,18) terms keep the sums partition-order-proof."""
     from tundradb_spark.pipeline.text import token_drift
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     cur = docs.select(
         F.expr(
             "case when doc_id % 7 = 0 then text || ' v2' else text end"
@@ -3787,7 +3737,7 @@ def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy is the only data-sized work."""
     from tundradb_spark.operators.relational import key_skew
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = tables.read(spark, sf_dir, "lineitem")
     return key_skew(li, "l_suppkey", top_n=10)
 
 
@@ -3808,8 +3758,8 @@ def q_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself; est_rows IS the inner-join row count (test-pinned equal)."""
     from tundradb_spark.operators.relational import join_fanout
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = tables.read(spark, sf_dir, "lineitem")
+    od = tables.read(spark, sf_dir, "orders")
     return join_fanout(li, od, "l_orderkey", "o_orderkey", top_n=10)
 
 
@@ -3836,7 +3786,7 @@ def q_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy, per-group constant arithmetic after."""
     from tundradb_spark.operators.analytics import value_trend
 
-    ev = _spread(spark, sf_dir, "events", "event_id")
+    ev = tables.read(spark, sf_dir, "events", spread_key="event_id")
     return value_trend(ev, epoch_us=TREND_EPOCH_US, min_n=100)
 
 
@@ -3859,7 +3809,7 @@ def q_row_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine digest has zero numeric-rendering exposure."""
     from tundradb_spark.pipeline.dedup import row_diff
 
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    od = tables.read(spark, sf_dir, "orders")
     old = od.filter("o_orderkey % 11 != 0")
     new = od.filter("o_orderkey % 13 != 0").selectExpr(
         "o_orderkey",
@@ -3899,7 +3849,7 @@ def q_row_diff_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale 2) towers over TPC-H totalprice magnitudes."""
     from tundradb_spark.pipeline.dedup import row_diff
 
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    od = tables.read(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
         "o_orderdate",
@@ -4249,7 +4199,7 @@ def q_lr_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent as q_lr_calibration."""
     from tundradb_spark.pipeline.classify import lr_score_inline
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     return (
         lr_score_inline(docs, LR_WEIGHTS, n_buckets=LR_BUCKETS)
         .orderBy(F.desc("prob"), F.asc("doc_id"))
@@ -4291,7 +4241,7 @@ def q_lr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         lr_prob_col,
     )
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     # r14 opt session 5 (guide §1.2 "the same expensive expression
     # evaluated more than once"): calibration_bins' domain filter
     # (p >= 0 AND p <= 1) is alias-substituted by predicate pushdown,
@@ -4338,8 +4288,8 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scatter/replicate machinery is invisible."""
     from tundradb_spark.operators.relational import salted_join
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = tables.read(spark, sf_dir, "lineitem")
+    od = tables.read(spark, sf_dir, "orders")
     # r14 opt (guide §6): the default scatter hashes EVERY lineitem
     # column, forcing the scan to read the whole table just for routing;
     # naming two per-row-varying columns the query reads anyway keeps
@@ -4399,7 +4349,7 @@ def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.queries import SPLIT_BP
     from tundradb_spark.pipeline.sampling import leakage_safe_split
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     pairs = q_dedup_minhash(spark, sf_dir)
     return leakage_safe_split(docs, pairs, SPLIT_BP).select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -4463,7 +4413,7 @@ def q_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifiable per group."""
     from tundradb_spark.pipeline.text import lm_buckets
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     return lm_buckets(docs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "lang",
@@ -4526,7 +4476,7 @@ def q_calibrated_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         lr_prob_col,
     )
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     # r14 opt (guide §2.4/§5): the curve pass and the gate pass both
     # need the SAME inline fold over the corpus — the eager threshold
     # collect forces the curve branch, so without materialization the
@@ -4605,7 +4555,7 @@ def q_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-equality pin, end-to-end)."""
     from tundradb_spark.pipeline.recipe import gate_funnel
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     return gate_funnel(
         docs, group_col="lang",
         quality_weights=LR_WEIGHTS, min_quality=0.5,
@@ -4640,7 +4590,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_corpus, split_leakage_summary,
     )
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     assigned = split_corpus(docs, SPLIT_BP)
     pairs = q_dedup_minhash(spark, sf_dir)
     return split_leakage_summary(assigned, pairs)
@@ -4694,7 +4644,7 @@ def q_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         attach_binary, resize_image,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     rz = resize_image(attach_binary(docs), width=16, height=4,
                       codec="fake")
     return rz.select(
@@ -4742,7 +4692,7 @@ def q_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.operators.analytics import distribution_drift
     from tundradb_spark.pipeline.classify import lr_prob_col
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     # r14 opt (guide §2.4/§5): distribution_drift bins ref and cur in
     # two separate aggregations, and both sides are filters of this one
     # scored frame — without materialization the inline LR fold runs
@@ -4826,7 +4776,7 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.dedup import normalized_text
     from tundradb_spark.pipeline.recipe import curation_report
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     h = docs.select(
         "doc_id", F.md5(normalized_text(F.col("text"))).alias("__h")
     )
@@ -4897,7 +4847,7 @@ def q_gate_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     _gate_sql_parts)."""
     from tundradb_spark.pipeline.recipe import gate_reasons
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     return gate_reasons(
         docs.select("doc_id", "text"),
         quality_weights=LR_WEIGHTS, min_quality=0.5,
@@ -4931,7 +4881,7 @@ def q_precision_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         precision_thresholds,
     )
 
-    docs = _spread(spark, sf_dir, "documents", "doc_id")
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     # r14 opt session 5: same 3x-fold pathology as q_lr_calibration —
     # precision_thresholds routes through calibration_partials, whose
     # [0, 1] domain filter alias-substitutes the md5-gram fold into both

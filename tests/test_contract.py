@@ -163,3 +163,36 @@ def test_every_checkpoint_goes_through_session_materialize():
     stray, inside = _checkpoint_calls()
     assert not stray, stray
     assert inside == 2  # the reliable and the local branch
+
+
+def _hand_built_table_paths() -> list[str]:
+    """f-strings that interpolate ``sf_dir`` and end in ``.parquet`` in the
+    package and the driver entry, outside ``sources/tables.py``."""
+    root = pathlib.Path(entry.__file__).parent
+    files = sorted((root / "tundradb_spark").rglob("*.py"))
+    hits = []
+    for path in files + [root / "__spark_entry__.py"]:
+        if path == root / "tundradb_spark" / "sources" / "tables.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.JoinedStr)
+                and any(
+                    isinstance(v, ast.FormattedValue)
+                    and isinstance(v.value, ast.Name)
+                    and v.value.id == "sf_dir"
+                    for v in node.values
+                )
+                and isinstance(node.values[-1], ast.Constant)
+                and node.values[-1].value.endswith(".parquet")
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    return hits
+
+
+def test_every_input_table_is_read_through_sources_tables():
+    """One way to read a table: only ``sources.tables`` knows the
+    ``<sf_dir>/<name>.parquet`` layout, so every read shares its cached
+    schema and the session's runtime confs."""
+    hits = _hand_built_table_paths()
+    assert not hits, hits

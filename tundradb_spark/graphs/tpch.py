@@ -21,28 +21,16 @@ Catalyst prunes the edge scan down to the 2-3 columns used):
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import SparkSession, functions as F
 
 from tundradb_spark.catalog import MAX_TS
 from tundradb_spark.database import Database
-from tundradb_spark.session import ensure_runtime_confs
+from tundradb_spark.session import memo
+from tundradb_spark.sources import tables
 
 #: valid-time at which the synthetic "reprice" update happens (see
 #: load_versioned_orders)
 REPRICE_VT = 1_000
-
-# Read-only Database instances cached per (session, sf_dir): the contract
-# queries never mutate the TPC-H graph, and re-registering 8 node + 5 edge
-# tables per query dominated the round-1 bench floor (~1.5s/query flat).
-# WeakKeyDictionary so a stopped/garbage-collected session drops its cache.
-_GRAPH_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, Database]]" = (
-    weakref.WeakKeyDictionary()
-)
-_VERSIONED_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, Database]]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def load_versioned_orders(spark: SparkSession, sf_dir: str) -> Database:
@@ -61,12 +49,16 @@ def load_versioned_orders(spark: SparkSession, sf_dir: str) -> Database:
     repriced rows. Resolution is ``resolve_as_of``: an interval filter that
     pushes to the scan plus one per-id window pick.
     """
-    ensure_runtime_confs(spark)
-    cached = _VERSIONED_CACHE.setdefault(spark, {})
-    if sf_dir in cached:
-        return cached[sf_dir]
+    return memo(
+        spark,
+        ("tpch.versioned_orders", sf_dir),
+        lambda: _versioned_orders(spark, sf_dir),
+    )
+
+
+def _versioned_orders(spark: SparkSession, sf_dir: str) -> Database:
     db = Database(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = tables.read(spark, sf_dir, "orders")
     max_ts = F.lit(MAX_TS).cast("long")
     zero = F.lit(0).cast("long")
     is_f = F.col("o_orderstatus") == "F"
@@ -99,90 +91,72 @@ def load_versioned_orders(spark: SparkSession, sf_dir: str) -> Database:
     # shared across every later query in the process: a mutation would
     # silently poison them all, so fail loudly instead (round-2 ADVICE)
     db.read_only = True
-    cached[sf_dir] = db
     return db
 
 
 def load_graph(spark: SparkSession, sf_dir: str) -> Database:
-    ensure_runtime_confs(spark)
-    cached = _GRAPH_CACHE.setdefault(spark, {})
-    if sf_dir in cached:
-        return cached[sf_dir]
-    db = Database(spark)
-    read = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
+    """The TPC-H graph over ``sf_dir``, built once per session and shared
+    read-only: the queries never mutate it, and re-registering 8 node and
+    5 edge tables per query dominated the round-1 bench floor."""
+    return memo(spark, ("tpch.graph", sf_dir), lambda: _graph(spark, sf_dir))
 
-    db.register_node_table("customer", read("customer"), "c_custkey", resume_counter=False)
-    db.register_node_table("nation", read("nation"), "n_nationkey", resume_counter=False)
-    db.register_node_table("region", read("region"), "r_regionkey", resume_counter=False)
-    db.register_node_table("supplier", read("supplier"), "s_suppkey", resume_counter=False)
-    db.register_node_table("part", read("part"), "p_partkey", resume_counter=False)
-    db.register_node_table("orders", read("orders"), "o_orderkey", resume_counter=False)
+
+def _graph(spark: SparkSession, sf_dir: str) -> Database:
+    db = Database(spark)
+    t = {
+        name: tables.read(spark, sf_dir, name)
+        for name in (
+            "customer", "nation", "region", "supplier", "part", "orders",
+            "lineitem", "events",
+        )
+    }
+    for name, key in (
+        ("customer", "c_custkey"),
+        ("nation", "n_nationkey"),
+        ("region", "r_regionkey"),
+        ("supplier", "s_suppkey"),
+        ("part", "p_partkey"),
+        ("orders", "o_orderkey"),
+    ):
+        db.register_node_table(name, t[name], key, resume_counter=False)
+    item_id = F.col("l_orderkey") * 16 + F.col("l_linenumber")
     db.register_node_table(
-        "lineitem",
-        read("lineitem").withColumn(
-            "id", F.col("l_orderkey") * 16 + F.col("l_linenumber")
-        ),
-        resume_counter=False,
+        "lineitem", t["lineitem"].withColumn("id", item_id), resume_counter=False
     )
     # events: the reference's MAP column realization (map<string,X> with
     # typed access, FIXTURES.md F6) — props JSON → map<string,long>
     db.register_node_table(
         "events",
-        read("events").withColumn(
+        t["events"].withColumn(
             "props_map", F.from_json("props", "map<string,bigint>")
         ),
         "event_id",
         resume_counter=False,
     )
 
-    cust = read("customer")
-    db.register_edge_table(
-        "IN_NATION",
-        cust.select(
-            F.col("c_custkey").alias("id"),
-            F.col("c_custkey").alias("source_id"),
-            F.col("c_nationkey").alias("target_id"),
-            F.lit(0).cast("long").alias("created_ts"),
-        ),
-    )
-    supp = read("supplier")
-    db.register_edge_table(
-        "SUPP_IN_NATION",
-        supp.select(
-            F.col("s_suppkey").alias("id"),
-            F.col("s_suppkey").alias("source_id"),
-            F.col("s_nationkey").alias("target_id"),
-            F.lit(0).cast("long").alias("created_ts"),
-        ),
-    )
-    nat = read("nation")
-    db.register_edge_table(
-        "IN_REGION",
-        nat.select(
-            F.col("n_nationkey").alias("id"),
-            F.col("n_nationkey").alias("source_id"),
-            F.col("n_regionkey").alias("target_id"),
-            F.lit(0).cast("long").alias("created_ts"),
-        ),
-    )
-    orders = read("orders")
-    db.register_edge_table(
-        "HAS_ORDER",
-        orders.select(
-            F.col("o_orderkey").alias("id"),
-            F.col("o_custkey").alias("source_id"),
-            F.col("o_orderkey").alias("target_id"),
-            F.lit(0).cast("long").alias("created_ts"),
-        ),
-    )
-    li = read("lineitem")
+    created = F.lit(0).cast("long").alias("created_ts")
+    for etype, name, key, source, target in (
+        ("IN_NATION", "customer", "c_custkey", "c_custkey", "c_nationkey"),
+        ("SUPP_IN_NATION", "supplier", "s_suppkey", "s_suppkey", "s_nationkey"),
+        ("IN_REGION", "nation", "n_nationkey", "n_nationkey", "n_regionkey"),
+        ("HAS_ORDER", "orders", "o_orderkey", "o_custkey", "o_orderkey"),
+    ):
+        db.register_edge_table(
+            etype,
+            t[name].select(
+                F.col(key).alias("id"),
+                F.col(source).alias("source_id"),
+                F.col(target).alias("target_id"),
+                created,
+            ),
+        )
     db.register_edge_table(
         "HAS_ITEM",
-        li.select(
-            (F.col("l_orderkey") * 16 + F.col("l_linenumber")).alias("id"),
+        t["lineitem"].select(
+            item_id.alias("id"),
             F.col("l_orderkey").alias("source_id"),
             F.col("l_partkey").alias("target_id"),
-            F.lit(0).cast("long").alias("created_ts"),
+            created,
             "l_suppkey",
             "l_quantity",
             "l_extendedprice",
@@ -192,5 +166,4 @@ def load_graph(spark: SparkSession, sf_dir: str) -> Database:
         ),
     )
     db.read_only = True  # shared cached instance (see load_versioned_orders)
-    cached[sf_dir] = db
     return db

@@ -11,7 +11,6 @@ here and formatted into both sides.
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -33,7 +32,8 @@ from tundradb_spark.pipeline.multimodal import (
     sample_frames,
 )
 from tundradb_spark.pipeline.text import fingerprint_summary
-from tundradb_spark.session import materialize
+from tundradb_spark.session import materialize, memo
+from tundradb_spark.sources import tables
 
 # shared tuning constants (must match between query and oracle)
 MINHASH_NUM, MINHASH_BANDS, SHINGLE_K = 12, 4, 5
@@ -57,38 +57,19 @@ EMBED_DIM = 64
 IVF_CELLS, IVF_PROBE, IVF_SEED = 16, 8, 11
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _wide_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14 opt: the sf testdata ships one row group per file, so the raw
-    # scan plans ONE partition and every per-row text expression above
-    # it (shingles, folds, regexes) ran single-task — spread it across
-    # the session's cores (session.spread_scan; a no-op whenever the
-    # scan is already split, i.e. on any real multi-file table).  Used
-    # ONLY by the queries whose first stage is measured compute-bound
-    # (shingle/minhash and LM-score families: bench −0.1 to −3.0 s
-    # each); the cheap projection/explode queries measured a small LOSS
-    # from the extra exchange and keep the plain scan.
-    from tundradb_spark.session import spread_scan
-
-    return spread_scan(_docs(spark, sf_dir), "doc_id")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread like _wide_docs: per-vector dot/cosine arithmetic is
-    # compute-bound (q_semantic_dedup measured 2.24 -> ~1.0 s)
-    from tundradb_spark.session import spread_scan
-
-    return spread_scan(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id"
-    )
-
-
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    row = _emb(spark, sf_dir).filter(F.col("vec_id") == 0).first()
+    """The ANN rows' query: embedding 0."""
+    row = tables.read(spark, sf_dir, "embeddings", spread_key="vec_id").filter(
+        F.col("vec_id") == 0
+    ).first()
     return [float(x) for x in row["embedding"]]
+
+
+def _ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The vectors the ANN rows search: every embedding but the query."""
+    return tables.read(spark, sf_dir, "embeddings", spread_key="vec_id").filter(
+        F.col("vec_id") != 0
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -106,7 +87,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('strip', doc_id, n_segments, n_removed, NULL, md5(text_clean)) —
     every cleaned document's reconstructed text is value-checked via its
     digest."""
-    groups = dedup.exact_dedup(_docs(spark, sf_dir))
+    groups = dedup.exact_dedup(tables.read(spark, sf_dir, "documents"))
     exact = groups.agg(
         F.count(F.lit(1)).alias("n_groups"),
         F.sum("n_copies").alias("n_docs"),
@@ -121,7 +102,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         _NS().alias("s"),
     )
     stripped = dedup.strip_duplicate_segments(
-        _docs(spark, sf_dir),
+        tables.read(spark, sf_dir, "documents"),
         mode="window",
         window=STRIP_WINDOW,
         min_docs=STRIP_MIN_DOCS,
@@ -136,36 +117,27 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.unionByName(stripped)
 
 
-# The MinHash pair set is consumed by BOTH q_dedup_minhash and
-# q_dup_clusters (connected components over the same pairs); the generator
-# eagerly materializes it (session.materialize — see dedup.minhash_lsh_pairs),
-# so memoizing the materialized frame per (session, sf_dir) makes the second
-# consumer free instead of paying the ~full signature+join cost twice
-# (round-2 verdict item 3). Same convention as graphs.tpch._GRAPH_CACHE.
-# ASSUMES AN IMMUTABLE CORPUS PATH: the memo keys on (session, sf_dir) only
-# — a caller who rewrites documents.parquet in-place would read stale pairs.
-# The driver testdata is read-only, so no mtime key; revisit if the corpus
-# ever becomes mutable.
-_MINHASH_PAIRS_CACHE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]"
-) = weakref.WeakKeyDictionary()
-
-
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cached = _MINHASH_PAIRS_CACHE.setdefault(spark, {})
-    if sf_dir not in cached:
-        cached[sf_dir] = dedup.minhash_lsh_pairs(
-            _docs(spark, sf_dir),
+    """The MinHash pair set, consumed by this row and by q_dup_clusters
+    (connected components over the same pairs).  The generator
+    materializes it eagerly, so keeping the frame per (session, sf_dir)
+    makes the second consumer free instead of paying the full
+    signature+join cost twice."""
+    return memo(
+        spark,
+        ("queries.minhash_pairs", sf_dir),
+        lambda: dedup.minhash_lsh_pairs(
+            tables.read(spark, sf_dir, "documents"),
             num_hashes=MINHASH_NUM,
             bands=MINHASH_BANDS,
             shingle_k=SHINGLE_K,
-        )
-    return cached[sf_dir]
+        ),
+    )
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(
-        _docs(spark, sf_dir),
+        tables.read(spark, sf_dir, "documents"),
         bits=SIMHASH_BITS,
         band_bits=SIMHASH_BAND_BITS,
         max_hamming=SIMHASH_MAX_HAMMING,
@@ -174,7 +146,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(
-        _docs(spark, sf_dir), n=NGRAM_N, threshold=NGRAM_THRESHOLD
+        tables.read(spark, sf_dir, "documents"), n=NGRAM_N, threshold=NGRAM_THRESHOLD
     )
 
 
@@ -184,7 +156,7 @@ def q_dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     f² self-join — the shape that survives template-heavy corpora. The cap
     is deterministic, so the oracle replicates it exactly."""
     return dedup.ngram_jaccard_pairs(
-        _docs(spark, sf_dir),
+        tables.read(spark, sf_dir, "documents"),
         n=NGRAM_N,
         threshold=NGRAM_CAP_THRESHOLD,
         max_df=NGRAM_MAX_DF,
@@ -204,7 +176,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     random projection, every vector's projected coordinates value-checked
     via an order-fixed fold checksum."""
     pairs = dedup.embedding_dup_pairs(
-        _emb(spark, sf_dir),
+        tables.read(spark, sf_dir, "embeddings", spread_key="vec_id"),
         threshold=EMBED_THRESHOLD,
         method="lsh",
         n_planes=EMBED_PLANES,
@@ -217,7 +189,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").cast("double").alias("v"),
     )
     prune = similarity.cluster_prune(
-        _emb(spark, sf_dir),
+        tables.read(spark, sf_dir, "embeddings", spread_key="vec_id"),
         n_cells=IVF_CELLS,
         keep_per_cell=PRUNE_KEEP,
         keep="central",
@@ -230,7 +202,10 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("score").cast("double").alias("v"),
     )
     rp = similarity.random_projection(
-        _emb(spark, sf_dir), out_dim=RP_DIM, seed=RP_SEED, dim=EMBED_DIM
+        tables.read(spark, sf_dir, "embeddings", spread_key="vec_id"),
+        out_dim=RP_DIM,
+        seed=RP_SEED,
+        dim=EMBED_DIM,
     ).select(
         F.lit("rp").alias("grp"),
         F.col("vec_id").cast("long").alias("k1"),
@@ -244,26 +219,20 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _query_vec(spark, sf_dir)
-    corpus = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
+    corpus = _ann_corpus(spark, sf_dir)
     return similarity.cosine_topk(corpus, q, ANN_K)
 
-
-
-_INDEX_DIR_CACHE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], str]]"
-) = weakref.WeakKeyDictionary()
 
 
 def _cached_index_dir(
     spark: SparkSession, sf_dir: str, prefix: str, build
 ) -> str:
-    """Session-scoped build-once temp directory for an on-disk index:
-    one (prefix, sf_dir) slot per SparkSession, built by ``build(path)``
-    on first use, removed at interpreter exit.  Shared by the LSH / PQ /
-    signature index rows so cache/cleanup semantics live in one place."""
-    cached = _INDEX_DIR_CACHE.setdefault(spark, {})
-    key = (prefix, sf_dir)
-    if key not in cached:
+    """Session-scoped build-once temp directory for an on-disk index or
+    layout: one (prefix, sf_dir) slot per session, built by
+    ``build(path)`` on first use, removed at interpreter exit.  Shared by
+    the LSH / PQ / signature index rows and q_bucketed_match."""
+
+    def make() -> str:
         import atexit
         import shutil
         import tempfile
@@ -271,8 +240,9 @@ def _cached_index_dir(
         path = tempfile.mkdtemp(prefix=f"tundra_{prefix}_index_")
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         build(path)
-        cached[key] = path
-    return cached[key]
+        return path
+
+    return memo(spark, ("queries.index_dir", prefix, sf_dir), make)
 
 
 def _lsh_index_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -281,7 +251,7 @@ def _lsh_index_dir(spark: SparkSession, sf_dir: str) -> str:
         sf_dir,
         "lsh",
         lambda path: similarity.index_corpus_lsh(
-            _emb(spark, sf_dir).filter(F.col("vec_id") != 0),
+            _ann_corpus(spark, sf_dir),
             path,
             n_planes=EMBED_PLANES,
             band_bits=EMBED_BAND_BITS,
@@ -307,7 +277,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_planes=EMBED_PLANES, band_bits=EMBED_BAND_BITS,
             probe_hamming=LSH_PROBE_HAMMING,
         )
-    corpus = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
+    corpus = _ann_corpus(spark, sf_dir)
     return similarity.lsh_ann_topk(
         corpus, q, ANN_K, n_planes=EMBED_PLANES, band_bits=EMBED_BAND_BITS,
         probe_hamming=LSH_PROBE_HAMMING,
@@ -320,7 +290,7 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
         sf_dir,
         "ivf",
         lambda path: similarity.index_corpus(
-            _emb(spark, sf_dir).filter(F.col("vec_id") != 0),
+            _ann_corpus(spark, sf_dir),
             path,
             n_cells=IVF_CELLS,
             seed=IVF_SEED,
@@ -348,7 +318,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_probe=IVF_PROBE,
             seed=IVF_SEED,
         )
-    corpus = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
+    corpus = _ann_corpus(spark, sf_dir)
     return similarity.ivf_ann_topk(
         corpus, q, ANN_K, n_cells=IVF_CELLS, n_probe=IVF_PROBE, seed=IVF_SEED
     )
@@ -367,7 +337,7 @@ def _pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
         sf_dir,
         "pq",
         lambda path: similarity.index_corpus_pq(
-            _emb(spark, sf_dir).filter(F.col("vec_id") != 0),
+            _ann_corpus(spark, sf_dir),
             path,
             m=PQ_M,
             n_codes=PQ_CODES,
@@ -392,7 +362,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, _pq_index_dir(spark, sf_dir), q, ANN_K,
             refine=PQ_REFINE, m=PQ_M, n_codes=PQ_CODES, seed=PQ_SEED,
         )
-    corpus = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
+    corpus = _ann_corpus(spark, sf_dir)
     return similarity.pq_ann_topk(
         corpus, q, ANN_K, refine=PQ_REFINE, m=PQ_M, n_codes=PQ_CODES,
         seed=PQ_SEED,
@@ -411,7 +381,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs.  The partial-probe trained path (n_probe < n_cells) and training
     determinism stay pinned in tests/test_pipeline.py."""
     q = _query_vec(spark, sf_dir)
-    corpus = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
+    corpus = _ann_corpus(spark, sf_dir)
     cents = similarity.ivf_train(
         corpus, n_cells=IVF_CELLS, iters=2, dim=EMBED_DIM, seed=IVF_SEED
     )
@@ -421,7 +391,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.token_stats(_docs(spark, sf_dir))
+    return text.token_stats(tables.read(spark, sf_dir, "documents"))
 
 
 #: min_stop_hits=1 for the driver corpus: its synthetic vocabulary contains
@@ -435,7 +405,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('score'|'gopher', doc_id, n, v1..v5, flags) — gopher's six rule
     booleans and ``keep`` are packed into the ``flags`` bitmask so every
     per-rule decision is value-checked."""
-    score = text.quality_scores(_docs(spark, sf_dir)).select(
+    score = text.quality_scores(tables.read(spark, sf_dir, "documents")).select(
         F.lit("score").alias("grp"),
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n_tokens").cast("long").alias("n"),
@@ -445,7 +415,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ND().alias("v4"), _ND().alias("v5"), _NL().alias("flags"),
     )
     g = text.gopher_rules(
-        _docs(spark, sf_dir), min_stop_hits=GOPHER_MIN_STOPS
+        tables.read(spark, sf_dir, "documents"), min_stop_hits=GOPHER_MIN_STOPS
     )
     bits = (
         F.col("r_words").cast("long")
@@ -471,11 +441,11 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.lang_confusion(_docs(spark, sf_dir))
+    return text.lang_confusion(tables.read(spark, sf_dir, "documents"))
 
 
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fingerprint_summary(_docs(spark, sf_dir))
+    return fingerprint_summary(tables.read(spark, sf_dir, "documents"))
 
 
 CHUNK_TOKENS, CHUNK_OVERLAP = 32, 8
@@ -504,7 +474,9 @@ def q_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     chunks = chunk_docs(
-        _docs(spark, sf_dir), chunk_tokens=CHUNK_TOKENS, overlap=CHUNK_OVERLAP
+        tables.read(spark, sf_dir, "documents"),
+        chunk_tokens=CHUNK_TOKENS,
+        overlap=CHUNK_OVERLAP,
     )
     chunk_rows = chunks.select(
         F.lit("chunk").alias("grp"),
@@ -538,7 +510,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from tundradb_spark.pipeline.text import tokens as _tok
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     kept = stratified_sample(
         docs, SAMPLE_BP_BY, seed=SAMPLE_SEED, default_bp=SAMPLE_DEFAULT_BP
     )
@@ -600,7 +572,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regex+bigram gates are the heavy per-row work, so spread them (at
     # deployment scale the input is already many files and this is a no-op
     # decision)
-    docs = _docs(spark, sf_dir).repartition(
+    docs = tables.read(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
     chunks = prepare_corpus(
@@ -622,7 +594,7 @@ def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit runs.  Counts aggregate per market segment; documents.text is
     verified pattern-free in the same result (zero matches is itself the
     assertion — the sweep must not false-positive on clean prose)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = tables.read(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("doc_id"),
         F.col("c_name").alias("text"),
         "c_mktsegment",
@@ -640,7 +612,7 @@ def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("id_tag").alias("n_id_tags"),
         )
     )
-    docs_clean = text.pii_scan(_docs(spark, sf_dir)).agg(
+    docs_clean = text.pii_scan(tables.read(spark, sf_dir, "documents")).agg(
         F.lit("documents").alias("c_mktsegment"),
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("any_pii").cast("long")).alias("n_digit_runs"),
@@ -687,7 +659,7 @@ def q_text_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """20 least-fluent docs under the corpus's own unigram LM
     (lm_logprob asc, doc_id asc — total order for a deterministic LIMIT)."""
     return (
-        text.lm_scores(_wide_docs(spark, sf_dir))
+        text.lm_scores(tables.read(spark, sf_dir, "documents", spread_key="doc_id"))
         .orderBy(F.asc("lm_logprob"), F.asc("doc_id"))
         .limit(20)
     )
@@ -697,14 +669,16 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 most phrase-repetitive docs (bigram_rep desc, doc_id asc —
     a total order, so LIMIT is deterministic for the oracle)."""
     return (
-        text.repetition_scores(_wide_docs(spark, sf_dir))
+        text.repetition_scores(
+            tables.read(spark, sf_dir, "documents", spread_key="doc_id")
+        )
         .orderBy(F.desc("bigram_rep"), F.asc("doc_id"))
         .limit(20)
     )
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return blob_meta_summary(_docs(spark, sf_dir))
+    return blob_meta_summary(tables.read(spark, sf_dir, "documents"))
 
 
 FRAME_BYTES, FRAME_EVERY_N = 64, 4
@@ -716,7 +690,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary stays JVM-side; the oracle replicates on VARCHAR (testdata is
     all-ASCII, so byte windows == char windows and digests agree)."""
     frames = sample_frames(
-        attach_binary(_docs(spark, sf_dir)),
+        attach_binary(tables.read(spark, sf_dir, "documents")),
         frame_bytes=FRAME_BYTES,
         every_n=FRAME_EVERY_N,
     )
@@ -732,7 +706,9 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no image libs in this environment; the REAL codec shares schema,
     batching, and partitioning), aggregated so the oracle re-derives
     width/height from payload bytes."""
-    meta = decode_image(attach_binary(_docs(spark, sf_dir)), codec="fake")
+    meta = decode_image(
+        attach_binary(tables.read(spark, sf_dir, "documents")), codec="fake"
+    )
     return meta.groupBy("mode").agg(
         F.count(F.lit(1)).alias("n_imgs"),
         F.sum("width").alias("total_width"),
@@ -749,7 +725,7 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     most widely duplicated 8-token spans across the corpus (n_docs desc,
     n_occurrences desc, digest asc — a total order for the LIMIT)."""
     spans = dedup.duplicate_spans(
-        _docs(spark, sf_dir), k=SPAN_K, min_docs=SPAN_MIN_DOCS
+        tables.read(spark, sf_dir, "documents"), k=SPAN_K, min_docs=SPAN_MIN_DOCS
     )
     return spans.orderBy(
         F.desc("n_docs"), F.desc("n_occurrences"), F.asc("span_digest")
@@ -767,7 +743,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT is deterministic for the oracle)."""
     from tundradb_spark.pipeline.decontaminate import contamination_scores
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
     corpus = docs.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
     return (
@@ -832,7 +808,7 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         _NL().alias("m3"), _ND().alias("v"),
     )
     winnow = text.winnow_fingerprints(
-        _docs(spark, sf_dir), k=WINNOW_K, window=WINNOW_W
+        tables.read(spark, sf_dir, "documents"), k=WINNOW_K, window=WINNOW_W
     ).select(
         F.lit("winnow").alias("grp"),
         F.col("doc_id").cast("string").alias("key"),
@@ -855,7 +831,7 @@ def q_text_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (weight desc, doc_id asc) so LIMIT is deterministic."""
     from tundradb_spark.pipeline.importance import dsir_weights
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     target = docs.filter(F.col("doc_id") % DSIR_TARGET_MOD == 0)
     raw = docs.filter(F.col("doc_id") % DSIR_TARGET_MOD != 0)
     return (
@@ -870,7 +846,7 @@ def q_text_dsir_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch draws from the full distribution, not the top-20)."""
     from tundradb_spark.pipeline.importance import dsir_weights
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     target = docs.filter(F.col("doc_id") % DSIR_TARGET_MOD == 0)
     raw = docs.filter(F.col("doc_id") % DSIR_TARGET_MOD != 0)
     return dsir_weights(raw, target, n_buckets=DSIR_BUCKETS)
@@ -970,7 +946,9 @@ def _sig_index_dir(spark: SparkSession, sf_dir: str) -> str:
         sf_dir,
         "sig",
         lambda path: dedup.write_signature_index(
-            _docs(spark, sf_dir).filter(F.col("doc_id") % INC_NEW_MOD != 0),
+            tables.read(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % INC_NEW_MOD != 0
+            ),
             path,
         ),
     )
@@ -984,7 +962,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe prunes index FILES (plan-pinned in tests/test_plans.py).
     Every (new, corpus) candidate pair value-checked; result identical to
     the non-indexed incremental_dup_pairs (equivalence test-pinned)."""
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % INC_NEW_MOD == 0)
     return dedup.incremental_dup_pairs_indexed(
         spark, new, _sig_index_dir(spark, sf_dir)
@@ -1000,7 +978,7 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked against the bit-interleave oracle."""
     from tundradb_spark.sources.zorder import with_zorder
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = tables.read(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
     )
     return with_zorder(cust, ["c_custkey", "c_acctbal"], bits=ZORDER_BITS).select(
@@ -1042,7 +1020,7 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-5 TF-IDF keywords (text.tfidf_topk_terms) — the
     corpus-catalog keyword extraction signal; decimal-exact ranking so the
     kept (doc, term) set matches the oracle bit-for-bit."""
-    return text.tfidf_topk_terms(_docs(spark, sf_dir), k=TFIDF_K)
+    return text.tfidf_topk_terms(tables.read(spark, sf_dir, "documents"), k=TFIDF_K)
 
 
 LM2_LAM = 0.7
@@ -1056,7 +1034,9 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group at any corpus size; bit-exact against sketches.hll_sql."""
     from tundradb_spark.pipeline.sketches import hll_distinct
 
-    return hll_distinct(_docs(spark, sf_dir), "doc_id", "source", p=HLL_P)
+    return hll_distinct(
+        tables.read(spark, sf_dir, "documents"), "doc_id", "source", p=HLL_P
+    )
 
 
 def q_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1067,9 +1047,9 @@ def q_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the result equals the plain IN-subquery oracle exactly."""
     from tundradb_spark.pipeline.sketches import bloom_semi_join
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = tables.read(spark, sf_dir, "orders")
     keys = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        tables.read(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > BLOOM_BAL)
         .select(F.col("c_custkey").alias("o_custkey"))
     )
@@ -1115,7 +1095,9 @@ def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.text import build_vocab
 
     return build_vocab(
-        _docs(spark, sf_dir), min_df=VOCAB_MIN_DF, max_vocab=VOCAB_MAX
+        tables.read(spark, sf_dir, "documents"),
+        min_df=VOCAB_MIN_DF,
+        max_vocab=VOCAB_MAX,
     )
 
 
@@ -1130,7 +1112,7 @@ def q_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns in any seated query's schema."""
     from tundradb_spark.pipeline.text import build_vocab, encode_tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     vocab = build_vocab(docs, min_df=VOCAB_MIN_DF, max_vocab=VOCAB_MAX)
     return encode_tokens(docs, vocab).select(
         "doc_id",
@@ -1153,7 +1135,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.sampling import weighted_sample_topk
 
     return weighted_sample_topk(
-        _docs(spark, sf_dir), "n_chars", WSAMPLE_K, seed=WSAMPLE_SEED
+        tables.read(spark, sf_dir, "documents"), "n_chars", WSAMPLE_K, seed=WSAMPLE_SEED
     ).select(
         "doc_id", F.col("weight").cast("double").alias("weight"), "priority"
     )
@@ -1170,7 +1152,7 @@ def q_hll_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     ra = hll_registers(
         docs.filter(F.col("doc_id") < HLLX_SPLIT_HI), "doc_id", "source"
     )
@@ -1190,7 +1172,7 @@ def q_cm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact against sketches.cm_sql."""
     from tundradb_spark.pipeline.sketches import cm_build, cm_estimate
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = tables.read(spark, sf_dir, "orders")
     sketch = cm_build(orders, "o_custkey", d=CM_D, w=CM_W)
     keys = orders.select("o_custkey").distinct().filter(F.col("o_custkey") < 60)
     return cm_estimate(sketch, keys, "o_custkey", d=CM_D, w=CM_W)
@@ -1201,7 +1183,7 @@ def q_text_lm2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text.lm_scores_bigram) — ordered lm2_logprob asc, doc_id asc (total
     order, deterministic LIMIT)."""
     return (
-        text.lm_scores_bigram(_docs(spark, sf_dir), lam=LM2_LAM)
+        text.lm_scores_bigram(tables.read(spark, sf_dir, "documents"), lam=LM2_LAM)
         .orderBy(F.asc("lm2_logprob"), F.asc("doc_id"))
         .limit(20)
     )
@@ -2694,7 +2676,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one operator with no oracle row at all)."""
     from tundradb_spark.pipeline.recipe import corpus_report
 
-    return corpus_report(_docs(spark, sf_dir))
+    return corpus_report(tables.read(spark, sf_dir, "documents"))
 
 
 # composition oracle: same tokenization (_TOKS), normalized-md5 dup flag
@@ -2767,7 +2749,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     web corpus mixture; every surviving row value-checked."""
     from tundradb_spark.pipeline.sampling import cap_per_key
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     return cap_per_key(
         docs,
         ["source"],
@@ -2806,7 +2788,7 @@ def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 refine=100: trained 0.5 vs seeded 0.3)."""
     from tundradb_spark.pipeline.similarity import pq_ann_topk, pq_train
 
-    corpus = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
+    corpus = _ann_corpus(spark, sf_dir)
     books = pq_train(
         corpus, m=PQ_M, n_codes=PQ_CODES, iters=2, seed=PQ_SEED,
         dim=EMBED_DIM,
@@ -2842,7 +2824,7 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked here."""
     from tundradb_spark.pipeline.similarity import ivf_ann_topk_batch
 
-    emb = _emb(spark, sf_dir)
+    emb = tables.read(spark, sf_dir, "embeddings", spread_key="vec_id")
     corpus = emb.filter(F.col("vec_id") >= ANN_BATCH_CORPUS_MIN)
     queries = emb.filter(F.col("vec_id") < ANN_BATCH_NQ).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2905,7 +2887,7 @@ def q_ann_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked here."""
     from tundradb_spark.pipeline.similarity import lsh_ann_topk_batch
 
-    emb = _emb(spark, sf_dir)
+    emb = tables.read(spark, sf_dir, "embeddings", spread_key="vec_id")
     corpus = emb.filter(F.col("vec_id") >= ANN_BATCH_CORPUS_MIN)
     queries = emb.filter(F.col("vec_id") < LSH_BATCH_NQ).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2974,7 +2956,7 @@ def q_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — the no-leakage split a training pipeline runs last."""
     from tundradb_spark.pipeline.sampling import split_corpus
 
-    return split_corpus(_docs(spark, sf_dir), SPLIT_BP).select(
+    return split_corpus(tables.read(spark, sf_dir, "documents"), SPLIT_BP).select(
         F.col("doc_id").cast("long").alias("doc_id"), "split"
     )
 
@@ -3015,7 +2997,7 @@ def q_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.text import bpe_train
 
     return bpe_train(
-        _docs(spark, sf_dir),
+        tables.read(spark, sf_dir, "documents"),
         n_merges=BPE_MERGES,
         max_word_types=BPE_WORD_TYPES,
     ).select(
@@ -3100,7 +3082,7 @@ def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.text import bpe_segment
 
     return bpe_segment(
-        _docs(spark, sf_dir),
+        tables.read(spark, sf_dir, "documents"),
         n_merges=BPE_MERGES,
         max_word_types=BPE_WORD_TYPES,
     ).select(
@@ -3137,7 +3119,9 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed-offset chunking's digests all shift after one edit)."""
     from tundradb_spark.pipeline.sampling import cdc_chunks
 
-    return cdc_chunks(_docs(spark, sf_dir), k=CDC_K, boundary_bits=CDC_BITS)
+    return cdc_chunks(
+        tables.read(spark, sf_dir, "documents"), k=CDC_K, boundary_bits=CDC_BITS
+    )
 
 
 def _cdc_oracle_sql() -> str:
@@ -3189,7 +3173,7 @@ def q_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.sampling import temperature_mixture
 
     return temperature_mixture(
-        _docs(spark, sf_dir),
+        tables.read(spark, sf_dir, "documents"),
         alpha=TEMP_ALPHA,
         total_tokens=TEMP_TOKENS,
         stratum_col="source",
@@ -3246,7 +3230,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.dedup import semantic_dedup
 
     return semantic_dedup(
-        _emb(spark, sf_dir),
+        tables.read(spark, sf_dir, "embeddings", spread_key="vec_id"),
         threshold=SEM_THRESHOLD,
         n_cells=IVF_CELLS,
         seed=IVF_SEED,
@@ -3297,7 +3281,7 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.dedup import fuzzy_string_pairs
 
     parts = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        tables.read(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < FUZZY_KEYS)
         .select(F.col("p_partkey").alias("id"), "p_name")
     )
@@ -3352,7 +3336,9 @@ def q_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed blocks.  Spans are corpus-SUMMARY sized (one row per
     # merged span, no text), so the checkpoint is small at any scale.
     spans_raw = materialize(exact_substring_spans(
-        _wide_docs(spark, sf_dir), k=SUBSTR_K, min_docs=SUBSTR_MIN_DOCS
+        tables.read(spark, sf_dir, "documents", spread_key="doc_id"),
+        k=SUBSTR_K,
+        min_docs=SUBSTR_MIN_DOCS,
     ), eager=False)
     spans = spans_raw.select(
         F.lit("span").alias("grp"),
@@ -3363,7 +3349,7 @@ def q_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         _NS().alias("s"),
     )
     stripped = strip_duplicate_spans(
-        _wide_docs(spark, sf_dir),
+        tables.read(spark, sf_dir, "documents", spread_key="doc_id"),
         k=SUBSTR_K,
         min_docs=SUBSTR_MIN_DOCS,
         spans=spans_raw,
@@ -3459,7 +3445,7 @@ def q_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix against the training labels."""
     from tundradb_spark.pipeline.classify import nb_score, nb_train
 
-    docs = _docs(spark, sf_dir)
+    docs = tables.read(spark, sf_dir, "documents")
     terms, labels = nb_train(docs, label_col="lang")
     pred = nb_score(docs, terms, labels)
     pred_rows = pred.select(
@@ -3582,7 +3568,7 @@ def q_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tundradb_spark.pipeline.dedup import soft_dedup_weights
 
     return soft_dedup_weights(
-        _docs(spark, sf_dir), k=SUBSTR_K, min_docs=SUBSTR_MIN_DOCS
+        tables.read(spark, sf_dir, "documents"), k=SUBSTR_K, min_docs=SUBSTR_MIN_DOCS
     )
 
 
@@ -3672,7 +3658,7 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_dhash,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     corpus = docs.select("doc_id", "text").unionAll(
         docs.select(
             (F.col("doc_id") + _PHASH_EDIT_OFFSET).alias("doc_id"),
@@ -3717,7 +3703,7 @@ def q_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_fingerprint,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     return audio_fingerprint(
         attach_binary(docs.select("doc_id", "text")), codec="fake"
     )
@@ -3758,7 +3744,7 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall_gauge` (same plan; this query runs it in FULL mode — the
     deterministic ``sample_fraction`` mode is the corpus-scale path,
     unit-pinned in tests/test_pipeline.py::test_recall_gauge_sampled_mode_equals_full_on_subset)."""
-    docs = _wide_docs(spark, sf_dir).select(
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
     corpus = docs.unionAll(
@@ -3840,7 +3826,7 @@ def q_dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     is thinned by the deterministic 50% hash-coin before every stage.
     Recall stays structurally 1.0 (surviving exact dups still share all
     shingles); the pair populations shrink ~fraction²."""
-    docs = _wide_docs(spark, sf_dir).select(
+    docs = tables.read(spark, sf_dir, "documents", spread_key="doc_id").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
     corpus = docs.unionAll(
@@ -3885,7 +3871,7 @@ def q_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         scene_changes,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = tables.read(spark, sf_dir, "documents")
     return scene_changes(
         attach_binary(docs.select("doc_id", "text")),
         frame_bytes=SCENE_FRAME_BYTES,
@@ -3919,7 +3905,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded window, build_vocab's exact rank order."""
     from tundradb_spark.pipeline.text import vocab_coverage
 
-    return vocab_coverage(_docs(spark, sf_dir), sizes=COVERAGE_SIZES)
+    return vocab_coverage(tables.read(spark, sf_dir, "documents"), sizes=COVERAGE_SIZES)
 
 
 def _vocab_coverage_sql() -> str:

@@ -115,24 +115,20 @@ def assert_broadcast(df: DataFrame, at_least: int = 1) -> None:
         )
 
 
-def count_exchanges(df: DataFrame, include_spread: bool = False) -> int:
+def count_exchanges(df: DataFrame) -> int:
     """Number of DATA-DEPENDENT shuffle exchanges (excluding broadcast
     exchanges) — the scale-critical metric: every one is a full network
     repartition of its input at 100 TB.
 
-    ``include_spread=False`` (default) does not count exchanges whose
-    origin is an EXPLICIT ``repartition(n, key)`` (``REPARTITION_BY_NUM``
-    in the plan) — in this codebase those come only from
-    ``session.spread_scan``, the r14 unsplittable-input fix, which is a
-    no-op on any real at-scale file layout (the scan then provides the
-    splits and the exchange disappears from the plan).  The exchanges the
-    pins exist to catch — joins, aggregations, windows, ``distinct`` —
-    are planner-inserted (``ENSURE_REQUIREMENTS``) and are always
-    counted."""
+    Exchanges whose origin is an EXPLICIT ``repartition(n, ...)``
+    (``REPARTITION_BY_NUM`` in the plan) are not counted.  Their source
+    is the spread that ``sources.tables.read(..., spread_key=...)`` adds
+    when a scan under-splits, which disappears on any real at-scale file
+    layout.  The exchanges the pins exist to catch — joins,
+    aggregations, windows, ``distinct`` — are planner-inserted
+    (``ENSURE_REQUIREMENTS``) and are always counted."""
     plan = formatted_plan(df)
     # "Exchange" section headers look like "(n) Exchange"; broadcast ones are
     # "(n) BroadcastExchange"
     n = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    if not include_spread:
-        n -= plan.count("REPARTITION_BY_NUM")
-    return n
+    return n - plan.count("REPARTITION_BY_NUM")

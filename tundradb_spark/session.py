@@ -13,9 +13,10 @@ import functools
 import os
 import shutil
 import tempfile
+import weakref
 import zipfile
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Callable, Hashable, Iterator, TypeVar
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
@@ -70,6 +71,28 @@ def _ship_package(spark: SparkSession) -> None:
         sc.addPyFile(path)
 
 
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+_T = TypeVar("_T")
+
+
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], _T]) -> _T:
+    """``build()`` once per (session, ``key``), its value reused after.
+
+    The per-session memo for what is derived from an immutable input
+    (the rule is stated in ``sources.tables``): table schemas, the TPC-H
+    databases, materialized pair sets and index dirs.  ``key`` is a tag
+    tuple, e.g. ``("tables.schema", path)``.  Keyed weakly on the
+    session; a value that refers back to it (a ``Database``, a
+    ``DataFrame``) keeps a stopped session alive with its entries.
+    """
+    cached = _MEMO.setdefault(spark, {})
+    if key not in cached:
+        cached[key] = build()
+    return cached[key]
+
+
 def materialize(
     df: DataFrame, *observed: Column, eager: bool = True
 ) -> DataFrame | tuple[DataFrame, dict]:
@@ -104,40 +127,6 @@ def materialize(
     if obs is None:
         return out
     return out, obs.get
-
-
-def spread_scan(df, key: str, parts: int | None = None):
-    """Spread an under-split file scan across the session's cores.
-
-    This is the optimization guide's §2.5 "input skew" case — one huge
-    unsplittable file: a parquet file with a single row group plans as a
-    SINGLE scan partition no matter how many cores the session has, so
-    every per-row expression downstream (LR folds, shingle hashing, PII
-    regexes) runs on one task while the rest of the cluster idles, and
-    the map side of the first shuffle is serialized through one task too.
-
-    Scale-adaptive by construction, not a local[32] tuning: when the
-    scan already plans at least the session's default parallelism in
-    splits — the normal state for any real multi-file/multi-row-group
-    table, and always the state at 100 TB — this returns ``df``
-    UNCHANGED (zero plan impact, no exchange).  Only a genuinely
-    under-split input pays one hash repartition on ``key``, whose cost
-    (one small exchange) buys full-width execution of everything above
-    it.  ``key`` should be the table's unique id so the hash spreads
-    evenly (guide §2.5's 20-100x distinct-values rule) and so an
-    id-keyed join downstream can reuse the partitioning; hash
-    repartition is chosen over round-robin because round-robin pays a
-    local binary sort of the full rows first (SPARK-23207) — measured
-    0.50 vs 0.40 s on the r14 gate-funnel probe.
-    """
-    spark = df.sparkSession
-    if parts is None:
-        parts = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= parts:
-        return df
-    from pyspark.sql import functions as F
-
-    return df.repartition(parts, F.col(key))
 
 
 @contextmanager
