@@ -500,13 +500,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synchronized LPA, graphs.algorithms.label_propagation)
     from tundradb_spark.graphs.algorithms import label_propagation
 
-    # r7 (r6 verdict item 5 MEASURED AND DECLINED): stop_when_stable=True
-    # is a net LOSS here — this pair graph does not stabilize within the
-    # iters=3 cap, so every round's change check (join + limit(1) count
-    # action) is pure overhead: 6.7s vs 5.3s best-of-3 at sf0.1.  The
-    # early-exit pays off only when the cap comfortably exceeds the
-    # convergence round; at a tight oracle-pinned cap the fixed-rounds
-    # mode is the fast path.
     lpa = label_propagation(
         edges, "u", "v", iters=_LPA_ITERS, presymmetrized=True
     ).select(

@@ -196,3 +196,39 @@ def test_every_input_table_is_read_through_sources_tables():
     schema and the session's runtime confs."""
     hits = _hand_built_table_paths()
     assert not hits, hits
+
+
+def _streaming_sink_calls() -> dict[str, list[str]]:
+    """The top-level functions of ``streaming/ops.py`` that call
+    ``.foreachBatch(`` or ``.isEmpty(``, or hold the
+    ``"partitionOverwriteMode"`` literal, one entry per occurrence."""
+    root = pathlib.Path(entry.__file__).parent
+    tree = ast.parse((root / "tundradb_spark/streaming/ops.py").read_text())
+    found = {"foreachBatch": [], "isEmpty": [], "partitionOverwriteMode": []}
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("foreachBatch", "isEmpty")
+            ):
+                found[node.func.attr].append(fn.name)
+            elif (
+                isinstance(node, ast.Constant)
+                and node.value == "partitionOverwriteMode"
+            ):
+                found[node.value].append(fn.name)
+    return found
+
+
+def test_streaming_state_tables_have_one_writer():
+    """One way to write a streaming state table: every ``foreachBatch``
+    operator starts through ``_foreach_batch``, which skips empty
+    micro-batches, and every per-epoch write goes through
+    ``_write_epoch``, which holds the replay rule (dynamic partition
+    overwrite on ``epoch``)."""
+    assert _streaming_sink_calls() == {
+        "foreachBatch": ["_foreach_batch"],
+        "isEmpty": ["_foreach_batch"],
+        "partitionOverwriteMode": ["_write_epoch"],
+    }

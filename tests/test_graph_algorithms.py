@@ -470,12 +470,11 @@ class TestConvergenceEarlyExit:
     def test_lpa_stops_when_stable(self, spark):
         from tundradb_spark.graphs.algorithms import label_propagation
 
-        # K4 stabilizes by round 2; a 50-round cap with stop_when_stable
-        # must return the same labels as the plain 3-round run
+        # K4 stabilizes by round 2; six rounds must return the same
+        # labels as the plain 3-round run
         edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        stable = sorted(map(tuple, label_propagation(
-            df, iters=50, stop_when_stable=True).collect()))
+        stable = sorted(map(tuple, label_propagation(df, iters=6).collect()))
         fixed = sorted(map(tuple, label_propagation(df, iters=3).collect()))
         assert stable == fixed
 
@@ -540,6 +539,26 @@ class TestJobsPerRound:
         # one broadcast of the smaller join side, one shuffle map stage for
         # the destination groupBy, one final stage that also observes Σrecv
         assert three - two <= 3, (two, three)
+
+    def test_hits_round_observes_its_totals(self, spark):
+        from pyspark.sql import functions as F
+
+        from tundradb_spark.graphs.algorithms import hits
+
+        # the PageRank test's graph: a 30-cycle plus edges into the sink 30
+        ring = spark.range(30).select(
+            F.col("id").alias("source_id"), ((F.col("id") + 1) % 30).alias("target_id")
+        )
+        sink = spark.range(0, 30, 3).select(
+            F.col("id").alias("source_id"), F.lit(30).cast("long").alias("target_id")
+        )
+        e = ring.union(sink)
+        hits(e, iters=2).collect()  # warm-up: codegen
+        two = _jobs_in(spark, "hits-iters-2", lambda: hits(e, iters=2).collect())
+        three = _jobs_in(spark, "hits-iters-3", lambda: hits(e, iters=3).collect())
+        # two half-steps per round, each one materialization whose job
+        # also observes the normalizing total: no cross-joined aggregate
+        assert three - two <= 10, (two, three)
 
     def test_cc_round_fires_no_separate_convergence_job(self, spark, monkeypatch):
         from tundradb_spark.graphs import algorithms

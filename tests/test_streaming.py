@@ -734,7 +734,7 @@ class TestCompactStreamIndex:
         finally:
             q.stop()
         before = read_hll_distinct(spark, regs, "g", p=9).first()["est_distinct"]
-        compact_stream_index(spark, regs, partition_col=None)
+        compact_stream_index(spark, regs)
         after = read_hll_distinct(spark, regs, "g", p=9).first()["est_distinct"]
         assert after == before
 
@@ -1063,9 +1063,7 @@ class TestCompactSignatureIndex:
             map(tuple, incremental_dup_pairs_indexed(spark, probe, sig).collect())
         )
         assert before  # the near-dup of doc 0 must be found
-        n = compact_stream_index(
-            spark, sig, layout=["epoch", "band_idx", "band_bucket"]
-        )
+        n = compact_stream_index(spark, sig)
         assert n > 0
         # single folded epoch, same probe result
         epochs = {

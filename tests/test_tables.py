@@ -61,3 +61,23 @@ def test_spread_read_repartitions_exactly_when_the_scan_under_splits(
     df = tables.read(spark, sf_dir, "documents", spread_key="doc_id")
     assert ("REPARTITION_BY_NUM" in audit.formatted_plan(df)) == under
     assert sorted(df.collect()) == sorted(raw.collect())
+
+
+def test_a_memo_value_that_holds_its_session_lets_it_be_collected(spark):
+    """Memo entries live on the session: a value that refers back to it
+    (a ``Database``, a ``DataFrame``) forms a cycle the collector frees,
+    instead of pinning the session for the rest of the process."""
+    import gc
+    import weakref
+
+    from tundradb_spark.session import memo
+
+    other = spark.newSession()
+    memo(other, ("test.holds_session",), lambda: [other])
+    ref = weakref.ref(other)
+    del other
+    # pyspark pins the most recently constructed session through its
+    # RDD.toDF patch; constructing one more releases the one above
+    spark.newSession()
+    gc.collect()
+    assert ref() is None

@@ -15,8 +15,7 @@ container dependency) with the standard scale disciplines:
   compute it;
 - a round's convergence value (changed labels, frontier size, dangling
   mass, improved distances, surviving edges) is an aggregate OBSERVED by
-  that same job, never a second action.  Label propagation's optional
-  stability check is the one exception: it still joins and counts.
+  that same job, never a second action.
 
 ``connected_components`` composes with the dedup operators: the duplicate
 PAIRS from minhash/simhash/embedding LSH become duplicate CLUSTERS (pick
@@ -683,7 +682,6 @@ def label_propagation(
     src: str = "id_a",
     dst: str = "id_b",
     iters: int = 3,
-    stop_when_stable: bool = False,
     presymmetrized: bool = False,
 ) -> DataFrame:
     """SYNCHRONIZED label-propagation communities (Raghavan et al. 2007,
@@ -702,18 +700,9 @@ def label_propagation(
     all hash-partitioned on the vertex key; frames checkpointed so round
     k never replays earlier rounds.  Returns ``(vertex, label)``.
 
-    ``stop_when_stable``: early exit when a round changes NO label
-    (``iters`` becomes the cap; the check is one anti-join ``limit(1)``
-    count per round).  Off by default — the oracle-pinned mode runs
-    exactly ``iters`` rounds.  r7: checks that can never save work are
-    skipped — after the FINAL round (nothing left to exit early from)
-    and after round 1 (in a symmetrized pair graph every vertex has a
-    neighbor and adopts the neighborhood min ≠ its own fresh id, so
-    round 1 always changes labels).  Each remaining check is a count
-    ACTION: worth it only when the cap comfortably exceeds the expected
-    convergence round, a pure loss at a tight cap (measured 6.7s vs
-    5.3s at iters=3 on the sf0.1 LSH pair graph — which is why
-    q_dup_clusters does not use it).
+    Always runs exactly ``iters`` rounds: synchronous LPA can oscillate
+    between two labelings and never stabilize, so a stop test would cost
+    a job per round without a bound on the rounds it saves.
 
     ``presymmetrized``: see :func:`connected_components` — skip the
     symmetrize-distinct pass when the caller already materialized it.
@@ -734,7 +723,7 @@ def label_propagation(
         e.select(F.col("u").alias("vertex")).distinct(), eager=False
     )
     labels = verts.withColumn("label", F.col("vertex"))
-    for it in range(iters):
+    for _ in range(iters):
         counts = (
             e.join(labels.withColumnRenamed("vertex", "u"), "u")
             .groupBy(F.col("v").alias("vertex"), "label")
@@ -743,24 +732,12 @@ def label_propagation(
         w = Window.partitionBy("vertex").orderBy(
             F.desc("cnt"), F.asc("label")
         )
-        prev = labels
         labels = materialize(
             counts.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select("vertex", "label"),
             eager=False,
         )
-        if stop_when_stable and 0 < it < iters - 1:
-            changed = (
-                labels.join(
-                    prev.withColumnRenamed("label", "__old"), "vertex", "inner"
-                )
-                .filter(F.col("label") != F.col("__old"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                break
     return labels
 
 
@@ -775,11 +752,11 @@ def hits(
 
     Normalization: each half-step rescales its vector to SUM to |V|
     (instead of the classic L2) — same fixed point direction, but the
-    rescale is a single distributed sum carried as a lazy 1-row aggregate
-    crossJoined into the half-step's plan, and the linear scale keeps a
-    SQL oracle exact after rounding.  Per iteration: two equi-joins + two
-    destination groupBys, checkpointed.  Returns
-    ``(vertex, hub, authority)``; sinks hold hub 0, sources authority 0.
+    total is one sum OBSERVED by the job that materializes the half-step,
+    and the linear scale keeps a SQL oracle exact after rounding.  Per
+    iteration: two equi-joins + two destination groupBys, each half-step
+    one materialization.  Returns ``(vertex, hub, authority)``; sinks hold
+    hub 0, sources authority 0.
     """
     # loop-invariant edge list materialized once per fit (see pagerank)
     e = materialize(
@@ -793,43 +770,30 @@ def hits(
         F.count(F.lit(1)).alias("n"),
     )
     n = stats["n"]
+
+    def half_step(prev: DataFrame, key: str, to: str, name: str) -> DataFrame:
+        # Σ of prev's score along each vertex's edges from the ``key``
+        # end, 0.0 for a vertex with none; rescaled by the observed total
+        raw, stats = materialize(
+            verts.join(
+                e.join(prev.withColumnRenamed("vertex", key), key)
+                .groupBy(F.col(to).alias("vertex"))
+                .agg(F.sum(prev.columns[1]).alias("raw")),
+                "vertex",
+                "left",
+            ).select("vertex", F.coalesce("raw", F.lit(0.0)).alias("raw")),
+            F.sum("raw").alias("tot"),
+        )
+        return raw.select(
+            "vertex",
+            (F.col("raw") * F.lit(float(n)) / F.lit(stats["tot"])).alias(name),
+        )
+
     hubs = verts.withColumn("hub", F.lit(1.0))
     auths = verts.withColumn("authority", F.lit(1.0))
     for _ in range(iters):
-        a_raw = (
-            e.join(hubs.withColumnRenamed("vertex", "u"), "u")
-            .groupBy(F.col("v").alias("vertex"))
-            .agg(F.sum("hub").alias("raw"))
-        )
-        a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        auths = materialize(
-            verts.join(a_raw, "vertex", "left")
-            .crossJoin(a_tot)
-            .select(
-                "vertex",
-                (
-                    F.coalesce("raw", F.lit(0.0)) * F.lit(float(n)) / F.col("tot")
-                ).alias("authority"),
-            ),
-            eager=False,
-        )
-        h_raw = (
-            e.join(auths.withColumnRenamed("vertex", "v"), "v")
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(F.sum("authority").alias("raw"))
-        )
-        h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        hubs = materialize(
-            verts.join(h_raw, "vertex", "left")
-            .crossJoin(h_tot)
-            .select(
-                "vertex",
-                (
-                    F.coalesce("raw", F.lit(0.0)) * F.lit(float(n)) / F.col("tot")
-                ).alias("hub"),
-            ),
-            eager=False,
-        )
+        auths = half_step(hubs, "u", "v", "authority")
+        hubs = half_step(auths, "v", "u", "hub")
     return hubs.join(auths, "vertex")
 
 

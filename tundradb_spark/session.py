@@ -13,7 +13,6 @@ import functools
 import os
 import shutil
 import tempfile
-import weakref
 import zipfile
 from contextlib import contextmanager
 from typing import Callable, Hashable, Iterator, TypeVar
@@ -71,9 +70,6 @@ def _ship_package(spark: SparkSession) -> None:
         sc.addPyFile(path)
 
 
-_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 _T = TypeVar("_T")
 
 
@@ -83,11 +79,12 @@ def memo(spark: SparkSession, key: Hashable, build: Callable[[], _T]) -> _T:
     The per-session memo for what is derived from an immutable input
     (the rule is stated in ``sources.tables``): table schemas, the TPC-H
     databases, materialized pair sets and index dirs.  ``key`` is a tag
-    tuple, e.g. ``("tables.schema", path)``.  Keyed weakly on the
-    session; a value that refers back to it (a ``Database``, a
-    ``DataFrame``) keeps a stopped session alive with its entries.
+    tuple, e.g. ``("tables.schema", path)``.  The entries live on the
+    session object itself, so they go with it; a value that refers back
+    to the session (a ``Database``, a ``DataFrame``) only forms a cycle
+    that the garbage collector frees.
     """
-    cached = _MEMO.setdefault(spark, {})
+    cached = vars(spark).setdefault("_tundradb_memo", {})
     if key not in cached:
         cached[key] = build()
     return cached[key]

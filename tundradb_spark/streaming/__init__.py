@@ -90,8 +90,9 @@ continuously-ingesting graph/analytics deployment needs:
   OLS trend (slope/intercept/r² of a metric over time) with O(groups)
   exact-decimal moment state per epoch (sum-merge + the batch
   operator's shared closed form == value_trend exactly)
-- :func:`compact_stream_index` — atomic per-epoch → single-epoch fold
-  for any of the streaming index/sketch tables
+- :func:`compact_stream_index` — per-epoch → single-epoch fold for any
+  of the streaming index/sketch tables; the partition layout is read
+  from the table's own directories
 - :func:`calibrated_gate_threshold` — the streaming gate's measured
   knob (r14): read the live calibration table and pick with the batch
   selection rule; ``stream_gate_corpus`` accepts

@@ -6,11 +6,15 @@ bound state, windows aggregate with partial (map-side) combine, and the one
 genuinely custom stateful operator (sessionization) uses
 ``applyInPandasWithState`` with an explicit timeout — the Spark-native way
 to express reference-less semantics.
+
+Every ``foreachBatch`` operator starts through :func:`_foreach_batch`, and
+every per-epoch state table is written by :func:`_write_epoch`, whose
+docstring states the replay rule they all rely on.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING, Any
 
 import pandas as pd
@@ -40,6 +44,54 @@ if TYPE_CHECKING:  # pragma: no cover
 #: layers one union + zipWithIndex conversion on the frame's lineage)
 DEFAULT_COMPACT_EVERY = 16
 
+#: the partition column of every per-epoch state table, and the epoch that
+#: :func:`compact_stream_index` folds a table's rows into
+_EPOCH = "epoch"
+_COMPACTED_EPOCH = -1
+
+
+def _foreach_batch(
+    stream: DataFrame,
+    checkpoint: str,
+    name: str,
+    sink: Callable[[DataFrame, int], None],
+) -> "StreamingQuery":
+    """Start ``stream`` as query ``name`` that calls ``sink(batch, epoch)``
+    for each non-empty micro-batch, with its progress in ``checkpoint``."""
+
+    def _nonempty(batch: DataFrame, epoch: int) -> None:
+        if not batch.isEmpty():
+            sink(batch, epoch)
+
+    return (
+        stream.writeStream.foreachBatch(_nonempty)
+        .option("checkpointLocation", checkpoint)
+        .queryName(name)
+        .start()
+    )
+
+
+def _write_epoch(
+    df: DataFrame, epoch: int, path: str, parts: tuple[str, ...] = (_EPOCH,)
+) -> None:
+    """Write micro-batch ``epoch``'s rows into the state table at ``path``,
+    partitioned by ``parts`` (which include ``epoch``): the one writer of
+    every streaming state table.
+
+    ``foreachBatch`` is at-least-once: after a failure Spark runs an epoch
+    again from its checkpointed offsets and recomputes the same rows.  Each
+    row is stamped with its epoch and written with dynamic partition
+    overwrite, so a replay replaces its own ``epoch=E`` partitions instead
+    of appending to them, and the table holds one copy of each epoch.
+    Readers merge all epochs (max, sum or distinct per table)."""
+    (
+        df.withColumn(_EPOCH, F.lit(epoch))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*parts)
+        .parquet(path)
+    )
+
 
 def stream_nodes(
     db: "Database",
@@ -58,18 +110,11 @@ def stream_nodes(
     ``Database.compact`` so planning cost stays O(1) per batch."""
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         db.bulk_insert(schema, batch)
         if compact_every and (epoch + 1) % compact_every == 0:
             db.compact(node=schema)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or f"nodes-{schema}")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or f"nodes-{schema}", _sink)
 
 
 def stream_edges(
@@ -85,18 +130,11 @@ def stream_edges(
     with the same periodic lineage compaction as :func:`stream_nodes`."""
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         db.bulk_connect(etype, batch)
         if compact_every and (epoch + 1) % compact_every == 0:
             db.compact(edge=etype)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or f"edges-{etype}")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or f"edges-{etype}", _sink)
 
 
 def windowed_event_counts(
@@ -321,43 +359,23 @@ def stream_index_vectors(
     re-clustered.  ``dim`` is required here (a streaming frame cannot be
     probed for it).
 
-    Exactly-once index contents under micro-batch retries: each row is
-    stamped with its epoch and written with DYNAMIC partition overwrite on
-    ``(cell, epoch)`` — a replayed epoch (foreachBatch is at-least-once)
-    recomputes the same rows from the checkpointed offsets and overwrites
-    its own ``epoch=E`` partitions instead of appending duplicates, so a
-    partial write never double-counts a vector.  Probes filter on ``cell``
-    only, so the extra ``epoch`` partition level changes neither results
-    nor cell-level file pruning.
-
-    At scale add periodic per-cell compaction (many small per-epoch files →
-    rewrite a cell dir when its file count passes a threshold) — the same
-    maintenance any LSM-ish index needs; omitted here for brevity.
+    The table is partitioned ``(cell, epoch)`` (:func:`_write_epoch`), so
+    a replayed epoch never double-counts a vector.  Probes filter on
+    ``cell`` only, so the extra ``epoch`` partition level changes neither
+    results nor cell-level file pruning.  Many small per-epoch files fold
+    into one file set per cell with :func:`compact_stream_index`.
     """
     if dim is None:
         raise ValueError("stream_index_vectors requires dim= (no probing a stream)")
     from tundradb_spark.pipeline.similarity import ivf_assign
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         assigned = ivf_assign(
             batch, n_cells, vec_col, id_col, seed, dim=dim
         )
-        (
-            assigned.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "epoch")
-            .parquet(path)
-        )
+        _write_epoch(assigned, epoch, path, ("cell", _EPOCH))
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "vector-index")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "vector-index", _sink)
 
 
 def stream_stream_join(
@@ -639,11 +657,8 @@ def stream_ingest_dedup(
     text hash, min-id wins) AND near (same MinHash banding as the corpus
     probe: any doc band-matching a lower-id batch sibling is dropped;
     greedy rather than connected-components, so a chain A~B~C keeps only
-    A — the conservative direction for a dedup gate).  Replay safety:
-    both writes stamp
-    the epoch and use DYNAMIC partition overwrite on ``epoch`` — a
-    replayed micro-batch overwrites its own partitions instead of
-    duplicating rows (the ``stream_index_vectors`` discipline).
+    A — the conservative direction for a dedup gate).  Both tables are
+    written per epoch by :func:`_write_epoch`.
 
     The first batch sees no signature table and admits everything — the
     bootstrap every incremental index shares.
@@ -651,6 +666,7 @@ def stream_ingest_dedup(
     from pyspark.sql import Window
 
     from tundradb_spark.pipeline.dedup import (
+        banded_signatures,
         incremental_dup_pairs_indexed,
         minhash_lsh_pairs,
         minhash_signature,
@@ -658,8 +674,6 @@ def stream_ingest_dedup(
     )
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         # replay hygiene (docstring above): drop any partial epoch=E
         # signature leaves from a failed attempt BEFORE the probe, via
@@ -780,37 +794,19 @@ def stream_ingest_dedup(
             F.col(id_col).cast("long") == F.col("__dup").cast("long"),
             "left_anti",
         )
-        stamped = survivors.withColumn("epoch", F.lit(epoch))
-        (
-            stamped.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(out_path)
-        )
+        _write_epoch(survivors, epoch, out_path)
         kept_ids = survivors.select(
             F.col(id_col).cast("long").alias(id_col)
         )
-        from tundradb_spark.pipeline.dedup import banded_signatures
-
         sigs = banded_signatures(
             batch_sigs.join(kept_ids, id_col, "left_semi"),
             id_col,
             num_hashes,
             bands,
-        ).withColumn("epoch", F.lit(epoch))
-        (
-            sigs.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "band_idx", "band_bucket")
-            .parquet(sig_path)
         )
+        _write_epoch(sigs, epoch, sig_path, (_EPOCH, "band_idx", "band_bucket"))
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "ingest-dedup")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "ingest-dedup", _sink)
 
 
 def stream_hll_registers(
@@ -833,10 +829,7 @@ def stream_hll_registers(
     with one ``max(m_reg)`` per (group, bucket) —
     :func:`read_hll_distinct` — which is EXACTLY the union semantics of
     the sketch, so the merged estimate equals the batch sketch of all rows
-    seen.  Idempotent under micro-batch replay: dynamic partition
-    overwrite on ``epoch`` (the stream_index_vectors discipline) makes a
-    retried epoch overwrite itself instead of double-writing (harmless for
-    max-merge, but keeps storage exactly-once).
+    seen.
 
     At scale, compact occasionally by rewriting the max-merged registers
     as a single epoch and dropping the rest — the register table is tiny
@@ -845,23 +838,10 @@ def stream_hll_registers(
     from tundradb_spark.pipeline.sketches import hll_registers
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         regs = hll_registers(batch, key_col, group_col, p)
-        (
-            regs.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(regs, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "hll-registers")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "hll-registers", _sink)
 
 
 def read_hll_distinct(spark, path: str, group_col: str, p: int = 9) -> DataFrame:
@@ -896,30 +876,14 @@ def stream_cm_counts(
 
     Counters are additive, so each micro-batch is sketched independently
     into its own ``epoch=E`` partition and a reader sums cells across
-    epochs (:func:`read_cm_estimate`) — sketch union by addition.
-    Idempotent under replay via dynamic partition overwrite on ``epoch``
-    (required here: double-writing an epoch WOULD double its counts,
-    unlike the max-merged HLL registers)."""
+    epochs (:func:`read_cm_estimate`) — sketch union by addition."""
     from tundradb_spark.pipeline.sketches import cm_build
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         sk = cm_build(batch, key_col, d, w, seed)
-        (
-            sk.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(sk, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "cm-counts")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "cm-counts", _sink)
 
 
 def read_cm_estimate(
@@ -945,21 +909,23 @@ def read_cm_estimate(
     return cm_estimate(merged, keys, key_col, d, w, seed)
 
 
-def compact_stream_index(
-    spark,
-    path: str,
-    partition_col: str | None = "cell",
-    epoch_col: str = "epoch",
-    target_epoch: int = -1,
-    layout: list[str] | None = None,
-) -> int:
+def compact_stream_index(spark, path: str) -> int:
     """Compact a :func:`stream_index_vectors` (or any per-epoch sketch)
-    directory: fold every ``epoch=E`` partition into one
-    ``epoch=target_epoch`` layout per ``partition_col`` value — the LSM
+    directory: fold every ``epoch=E`` partition into one ``epoch=-1``
+    partition per value of the other partition columns — the LSM
     maintenance step the streaming writers' docstrings point at.  Many
-    small per-epoch files become one coalesced file set per partition,
-    restoring scan efficiency after long streams; probes are unaffected
-    (they filter on ``partition_col`` only).
+    small per-epoch files become one coalesced file set per partition
+    (one file for an epoch-only table), restoring scan efficiency after
+    long streams; every row is preserved verbatim, so probes and the
+    readers' max/sum merges are unaffected.  For the sketches a further
+    SEMANTIC compaction (pre-merging registers) is just the reader's
+    aggregation written back, left to the caller.
+
+    The partition order is read from the table's own ``k=v`` directory
+    chain (``cell/epoch`` for the vector index, ``epoch/band_idx/
+    band_bucket`` for the signature table) and kept: a different order
+    would break Spark's partition discovery when a resumed sink appends
+    its next epoch.
 
     Maintenance window required: the compacted data is fully staged in a
     sibling temp dir first (no partial data is ever visible under
@@ -971,41 +937,29 @@ def compact_stream_index(
     any file-level compaction without a table format needs); a sink
     writing during the swap would also land in the doomed old dir.
 
-    Pass ``partition_col=None`` for epoch-only layouts
-    (stream_hll_registers / stream_cm_counts); every row is preserved
-    verbatim, so the readers' max/sum merges are unaffected — for the
-    sketches a further SEMANTIC compaction (pre-merging registers) is
-    just the reader's aggregation written back, left to the caller.
-
-    ``layout``: the FULL partition-column order (including ``epoch_col``)
-    for tables whose directory order differs from the default
-    ``(partition_col, epoch)`` — e.g. the r6 banded signature table is
-    ``["epoch", "band_idx", "band_bucket"]`` (epoch leads for dynamic
-    overwrite); the compacted tree MUST keep the same order or Spark's
-    partition discovery breaks when the still-running sink appends its
-    next epoch.
-
     Returns the number of rows compacted.
     """
     import os
     import shutil
 
-    df = spark.read.parquet(path)
-    cols = [c for c in df.columns if c != epoch_col]
-    tmp = path.rstrip("/") + ".compacting"
-    if layout is not None:
-        if epoch_col not in layout:
-            raise ValueError(f"layout must include {epoch_col!r}: {layout}")
-        parts = list(layout)
-        cluster = [c for c in layout if c != epoch_col]
-    else:
-        parts = ([partition_col] if partition_col else []) + [epoch_col]
-        cluster = [partition_col] if partition_col else []
-    out = df.select(*cols).withColumn(epoch_col, F.lit(target_epoch))
+    parts, d = [], path
+    while subdirs := sorted(
+        n for n in os.listdir(d)
+        if "=" in n and os.path.isdir(os.path.join(d, n))
+    ):
+        parts.append(subdirs[0].split("=", 1)[0])
+        d = os.path.join(d, subdirs[0])
+    cluster = [c for c in parts if c != _EPOCH]
+    out = (
+        spark.read.parquet(path)
+        .drop(_EPOCH)
+        .withColumn(_EPOCH, F.lit(_COMPACTED_EPOCH))
+    )
     if cluster:
         out = out.repartition(*[F.col(c) for c in cluster])
     else:
         out = out.coalesce(1)
+    tmp = path.rstrip("/") + ".compacting"
     out.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
     n = spark.read.parquet(tmp).count()
     old = path.rstrip("/") + ".old"
@@ -1035,16 +989,13 @@ def stream_histogram_bins(
     out-of-range values clamp to the edge bins, so the stream never
     drops rows — a drifting distribution shows up as edge-bin mass, the
     operational signal to re-bin.  Counters are additive: per-epoch
-    partitions with dynamic overwrite (replay-safe), reader sums —
-    identical to the Count-Min discipline.
+    partitions, reader sums — identical to the Count-Min discipline.
     """
     from tundradb_spark.operators.relational import histogram_bin_col
 
     mn, mx = float(bounds[0]), float(bounds[1])
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         binned = (
             batch.select(
                 F.col(group_col),
@@ -1053,20 +1004,9 @@ def stream_histogram_bins(
             .groupBy(group_col, "__bin")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        (
-            binned.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(binned, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "histogram-bins")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "histogram-bins", _sink)
 
 
 def read_histogram_quantiles(
@@ -1119,7 +1059,7 @@ def stream_heavy_keys(
 
     Each micro-batch writes (a) its CM cells and (b) the keys whose
     WITHIN-BATCH count reaches ``batch_threshold`` — both into ``epoch=E``
-    partitions with dynamic overwrite (replay-safe).  Pigeonhole
+    partitions.  Pigeonhole
     guarantee: a key with total count ≥ ``batch_threshold × n_epochs``
     must reach the threshold in at least one epoch, so every sufficiently
     heavy key IS a candidate; :func:`read_heavy_hitters` then ranks the
@@ -1130,33 +1070,15 @@ def stream_heavy_keys(
     from tundradb_spark.pipeline.sketches import cm_build
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            cm_build(batch, key_col, d, w, seed)
-            .withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(cm_path)
-        )
-        (
+        _write_epoch(cm_build(batch, key_col, d, w, seed), epoch, cm_path)
+        cands = (
             batch.groupBy(key_col)
             .agg(F.count(F.lit(1)).alias("batch_count"))
             .filter(F.col("batch_count") >= batch_threshold)
-            .withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(cand_path)
         )
+        _write_epoch(cands, epoch, cand_path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "heavy-keys")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "heavy-keys", _sink)
 
 
 def read_heavy_hitters(
@@ -1197,33 +1119,17 @@ def stream_weighted_sample(
     (seed, id, weight), every member of the GLOBAL top-k is necessarily
     in its own batch's top-k — so :func:`read_weighted_sample`'s merge
     (top-k of the union of per-epoch top-ks) equals the batch operator
-    over all arrived rows EXACTLY, not approximately.  Replay-safe via
-    dynamic epoch overwrite (re-deriving a batch's top-k is
-    deterministic).
+    over all arrived rows EXACTLY, not approximately.
     """
     from tundradb_spark.pipeline.sampling import weighted_sample_topk
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         top = weighted_sample_topk(
             batch, weight_col, k, id_col, seed, keep_raw=True
         )
-        (
-            top.withColumn("writer_k", F.lit(k))
-            .withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(top.withColumn("writer_k", F.lit(k)), epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "weighted-sample")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "weighted-sample", _sink)
 
 
 def read_weighted_sample(
@@ -1431,10 +1337,9 @@ def stream_funnel_events(
       entry-type occurrences a repeated step would need; the batch
       funnel has no such restriction.
 
-    Each micro-batch writes its reduction to an ``epoch=E`` partition
-    (dynamic partition overwrite — idempotent under replay, the
-    stream_index_vectors discipline); :func:`read_funnel` merges by
-    simply running the batch operator over the union.
+    Each micro-batch writes its reduction to an ``epoch=E`` partition;
+    :func:`read_funnel` merges by simply running the batch operator over
+    the union.
 
     At 100 TB: the sink is one type-filtered scan + one per-user
     min-aggregate per batch (map-side combined) + one window-pruned
@@ -1456,8 +1361,6 @@ def stream_funnel_events(
         )
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         from tundradb_spark.functions.timecols import epoch_micros as _us
 
         ev = batch.select(
@@ -1485,20 +1388,9 @@ def stream_funnel_events(
                 .drop("t_max")
             )
         out = entry.unionByName(later.select("u", "t_us", "et"))
-        (
-            out.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(out, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "funnel-events")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "funnel-events", _sink)
 
 
 def read_funnel(
@@ -1537,16 +1429,12 @@ def stream_cohort_periods(
     batch operator's one corpus-sized intermediate, it is union-mergeable
     (distinct-of-unions == union-of-distincts), and it is bounded by
     ``users x periods`` — not raw event volume.  Each micro-batch writes
-    its own distinct pairs to an ``epoch=E`` partition (dynamic partition
-    overwrite — idempotent under replay; duplicate pairs across epochs
-    are removed again at read time, so even cross-epoch duplication is
-    harmless)."""
+    its own distinct pairs to an ``epoch=E`` partition; duplicate pairs
+    across epochs are removed again at read time."""
     if period_us < 1:
         raise ValueError(f"period_us must be >= 1, got {period_us}")
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         from tundradb_spark.functions.timecols import epoch_micros as _us
 
         pairs = (
@@ -1557,20 +1445,9 @@ def stream_cohort_periods(
             .select("u", F.expr(f"t_us div {period_us}").alias("p"))
             .distinct()
         )
-        (
-            pairs.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(pairs, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "cohort-periods")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "cohort-periods", _sink)
 
 
 def read_cohort_retention(
@@ -1941,9 +1818,7 @@ def stream_outlier_moments(
     BIT-EXACTLY — :func:`read_outliers` merges them and flags with the
     very same expressions as the batch operator, so stream-maintained
     flagging == ``value_outliers(all_rows)`` (test-pinned, including
-    metric-domain glitch rows split across epochs).  Idempotent under
-    micro-batch replay via dynamic partition overwrite on ``epoch``
-    (required: double-writing an epoch would double its sums).
+    metric-domain glitch rows split across epochs).
 
     At scale the moment table is ``groups × epochs`` rows regardless of
     stream volume; fold occasionally with :func:`compact_stream_index`.
@@ -1954,24 +1829,11 @@ def stream_outlier_moments(
     )
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         ev = _metric_tagged(batch, group_col, value_col, id_col)
         moments = outlier_moments(ev, group_col, value_col)
-        (
-            moments.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(moments, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "outlier-moments")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "outlier-moments", _sink)
 
 
 def read_outliers(
@@ -2034,13 +1896,10 @@ def stream_cooccurrence_pairs(
     That pair set is the batch operator's one corpus-sized intermediate,
     union-mergeable, and bounded by ``users × type-universe`` — not raw
     event volume.  Each micro-batch writes its own distinct pairs to an
-    ``epoch=E`` partition (dynamic partition overwrite — idempotent
-    under replay; cross-epoch duplicate pairs are removed again by the
-    reader's own distinct, so they are harmless)."""
+    ``epoch=E`` partition; cross-epoch duplicate pairs are removed
+    again by the reader's own distinct."""
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         pairs = (
             batch.select(
                 F.col(user_col).cast("long").alias("u"),
@@ -2049,20 +1908,9 @@ def stream_cooccurrence_pairs(
             .filter(F.col("u").isNotNull() & F.col("et").isNotNull())
             .distinct()
         )
-        (
-            pairs.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(pairs, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "cooccurrence-pairs")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "cooccurrence-pairs", _sink)
 
 
 def read_cooccurrence(
@@ -2108,8 +1956,7 @@ def stream_benford_counts(
     (``benford_score`` — shared verbatim, not copied) to the merged
     counts: stream-maintained conformance == ``benford_deviation(
     all_rows)`` (test-pinned, including groups that reach ``min_n``
-    only across epochs).  Idempotent under replay via dynamic partition
-    overwrite on ``epoch`` (double-writing would double counts).
+    only across epochs).
 
     State per epoch is ``groups × 11`` longs regardless of stream
     volume; fold occasionally with :func:`compact_stream_index`.
@@ -2117,23 +1964,10 @@ def stream_benford_counts(
     from tundradb_spark.operators.analytics import benford_counts
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         counts = benford_counts(batch, group_col, value_col)
-        (
-            counts.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(counts, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "benford-counts")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "benford-counts", _sink)
 
 
 def read_benford(
@@ -2183,8 +2017,7 @@ def stream_calibration_bins(
     verbatim), so stream-maintained reliability bins ==
     ``calibration_bins(all_rows)`` (test-pinned, including bins whose
     rows straddle epochs and the documented exclusions: NULL labels,
-    probabilities outside [0, 1]).  Idempotent under micro-batch replay
-    via dynamic partition overwrite on ``epoch``.
+    probabilities outside [0, 1]).
 
     At scale the partial table is ``n_bins × epochs`` rows regardless
     of stream volume; fold occasionally with
@@ -2193,29 +2026,17 @@ def stream_calibration_bins(
     from tundradb_spark.pipeline.classify import calibration_partials
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         partials = calibration_partials(
             batch, prob_col, label_col, n_bins
         )
-        (
-            # n_bins rides every state row (r13): the readers rescale
-            # bin -> threshold by THEIR n_bins, so a reader/writer
-            # mismatch must be detectable in either direction
-            partials.withColumn("n_bins", F.lit(int(n_bins)))
-            .withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
+        # n_bins rides every state row (r13): the readers rescale
+        # bin -> threshold by THEIR n_bins, so a reader/writer
+        # mismatch must be detectable in either direction
+        _write_epoch(
+            partials.withColumn("n_bins", F.lit(int(n_bins))), epoch, path
         )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "calibration-bins")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "calibration-bins", _sink)
 
 
 def stream_gate_funnel(
@@ -2247,8 +2068,7 @@ def stream_gate_funnel(
     ``(gate, group) → (n_docs, n_tokens)``, append under an ``epoch``
     partition.  Both partials are exact longs, so epoch sums merged by
     :func:`read_gate_funnel` equal the single-pass batch funnel
-    BIT-EXACTLY (test-pinned).  Idempotent under micro-batch replay via
-    dynamic partition overwrite on ``epoch``; state is
+    BIT-EXACTLY (test-pinned).  State is
     ``gates × groups × epochs`` rows regardless of stream volume (fold
     with :func:`compact_stream_index` when epochs pile up).
 
@@ -2287,8 +2107,6 @@ def stream_gate_funnel(
     )
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         threshold = _resolve_gate_threshold(
             batch.sparkSession,
             min_quality,
@@ -2308,21 +2126,11 @@ def stream_gate_funnel(
             if quality_weights is not None
             else F.lit(None).cast("double")
         )
-        (
-            partials.withColumn("picked_min_quality", picked)
-            .withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
+        _write_epoch(
+            partials.withColumn("picked_min_quality", picked), epoch, path
         )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "gate-funnel")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "gate-funnel", _sink)
 
 
 def read_gate_funnel(spark, path: str, group_col: str = "lang") -> DataFrame:
@@ -2630,8 +2438,7 @@ def stream_token_counts(
     curve half (``vocab_coverage_curve`` — shared verbatim) to the
     merged counts: stream-maintained coverage ==
     ``vocab_coverage(all_docs)`` (test-pinned, including types whose
-    counts straddle epochs).  Idempotent under replay via dynamic
-    partition overwrite on ``epoch``.
+    counts straddle epochs).
 
     State per epoch is that epoch's type universe — vocabulary-bounded,
     not corpus-bounded; fold occasionally with
@@ -2640,23 +2447,10 @@ def stream_token_counts(
     from tundradb_spark.pipeline.text import token_counts
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         counts = token_counts(batch, text_col)
-        (
-            counts.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(counts, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "token-counts")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "token-counts", _sink)
 
 
 def read_vocab_coverage(spark, path: str, sizes: list[int]) -> DataFrame:
@@ -2702,8 +2496,7 @@ def stream_drift_bins(
     — shared verbatim, not copied) to the merged counts:
     stream-maintained drift == ``distribution_drift(ref, all_rows)``
     (test-pinned, including groups that reach ``min_n`` only across
-    epochs and the ``excluded`` domain-count visibility).  Idempotent
-    under replay via dynamic partition overwrite on ``epoch``.
+    epochs and the ``excluded`` domain-count visibility).
 
     State per epoch is ``groups × (n_bins + 1)`` longs regardless of
     stream volume; fold occasionally with :func:`compact_stream_index`.
@@ -2711,25 +2504,12 @@ def stream_drift_bins(
     from tundradb_spark.operators.analytics import drift_bin_counts
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         counts = drift_bin_counts(
             batch, group_col, value_col, bounds, n_bins
         )
-        (
-            counts.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(counts, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "drift-bins")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "drift-bins", _sink)
 
 
 def read_drift(
@@ -2818,31 +2598,17 @@ def stream_trend_moments(
     including groups that cross ``min_n`` only across epochs and the
     excluded-count visibility).  ``epoch_us`` is the same data-fact
     time origin the batch operator takes — fixed once for the stream's
-    lifetime.  Idempotent under micro-batch replay via dynamic
-    partition overwrite on ``epoch``.
+    lifetime.
     """
     from tundradb_spark.operators.analytics import trend_moments
 
     def _sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         moments = trend_moments(
             batch, group_col, value_col, ts_col, epoch_us
         )
-        (
-            moments.withColumn("epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(path)
-        )
+        _write_epoch(moments, epoch, path)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name or "trend-moments")
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, query_name or "trend-moments", _sink)
 
 
 def read_trend(
