@@ -1,7 +1,7 @@
-"""The two cluster settings the engine promises to honor: a reliable
-checkpoint dir reaches every materialized frame, and the package reaches
+"""The cluster settings the engine promises to honor: a reliable
+checkpoint dir reaches every materialized frame, the package reaches
 the Python workers without any help from the working directory or
-``PYTHONPATH``."""
+``PYTHONPATH``, and the session keeps its plan working set compiled."""
 
 _SCRIPT = r"""
 import json, os, sys
@@ -98,3 +98,24 @@ def test_reliable_checkpoint_dir_and_python_workers_outside_the_repo(tmp_path):
         assert reliable[name] == plain[name], name
     assert got["written"] > 0  # reliable checkpoints were written
     assert got["shipped"] == 1
+
+
+def test_a_working_set_larger_than_sparks_default_codegen_cache_compiles_once(spark):
+    """120 distinct plans, more than Spark's default codegen cache of 100
+    classes, prepared twice: the second pass compiles nothing, because
+    ``get_spark`` sizes the cache to the engine's working set.  The
+    literal is inlined into the generated Java, so each ``i`` is its own
+    class.  ``execute()`` builds the plan's RDD, which compiles its
+    whole-stage class on the driver without running a job."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    shapes = [f"id * {i}" for i in range(120)]
+
+    def prepare_all():
+        for expr in shapes:
+            spark.range(10).selectExpr(expr)._jdf.queryExecution().executedPlan().execute()
+
+    prepare_all()
+    first = compiles.getCount()
+    prepare_all()
+    assert compiles.getCount() == first

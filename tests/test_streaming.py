@@ -738,6 +738,27 @@ class TestCompactStreamIndex:
         after = read_hll_distinct(spark, regs, "g", p=9).first()["est_distinct"]
         assert after == before
 
+    def test_compacts_a_file_uri(self, spark, tmp_path):
+        """The table is listed and swapped through the Hadoop FileSystem,
+        so any scheme the epoch writer accepts compacts too."""
+        from tundradb_spark.streaming import compact_stream_index
+        from tundradb_spark.streaming.ops import _write_epoch
+
+        uri = (tmp_path / "uri_table").as_uri()
+        assert uri.startswith("file:///")
+        for epoch in range(3):
+            _write_epoch(
+                spark.range(epoch * 4, epoch * 4 + 4).withColumn("cell", F.col("id") % 2),
+                epoch, uri, parts=("cell", "epoch"),
+            )
+        assert compact_stream_index(spark, uri) == 12
+        got = spark.read.parquet(uri)
+        assert sorted(r.id for r in got.collect()) == list(range(12))
+        assert {r.epoch for r in got.select("epoch").collect()} == {-1}
+        assert sorted(p.name for p in tmp_path.iterdir()) == ["uri_table"]
+        assert sorted(p.name for p in (tmp_path / "uri_table").iterdir()
+                      if "=" in p.name) == ["cell=0", "cell=1"]
+
 
 class TestStreamHistogram:
     def test_stream_merge_equals_batch_histogram(self, spark, tmp_path):

@@ -68,7 +68,7 @@ def _bt(name: str) -> Column:
 
 
 def _prefix(df: DataFrame, alias: str) -> DataFrame:
-    return df.select([F.col("`" + c + "`").alias(f"{alias}.{c}") for c in df.columns])
+    return df.toDF(*[f"{alias}.{c}" for c in df.columns])
 
 
 def _dtypes(df: DataFrame) -> dict:

@@ -184,6 +184,12 @@ def get_spark(
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
+        # Spark keeps 100 compiled classes per JVM by default, fewer than
+        # one graphbench match_read cycle plans (about 250), so repeated
+        # plans (graph rounds, MATCH templates) recompiled in Janino and
+        # the JIT compiled every fresh class again.  Only byte-identical
+        # generated code is shared; a static conf, so set at build time.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -927,6 +927,10 @@ def compact_stream_index(spark, path: str) -> int:
     would break Spark's partition discovery when a resumed sink appends
     its next epoch.
 
+    ``path`` is any path the stream writers accept (a plain local path,
+    ``file://``, ``hdfs://``, ``s3a://``): the table is listed, renamed
+    and deleted through its Hadoop ``FileSystem``.
+
     Maintenance window required: the compacted data is fully staged in a
     sibling temp dir first (no partial data is ever visible under
     ``path``), but the swap itself is two renames + a delete, NOT one
@@ -939,16 +943,16 @@ def compact_stream_index(spark, path: str) -> int:
 
     Returns the number of rows compacted.
     """
-    import os
-    import shutil
-
-    parts, d = [], path
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    root = HPath(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    parts, d = [], root
     while subdirs := sorted(
-        n for n in os.listdir(d)
-        if "=" in n and os.path.isdir(os.path.join(d, n))
+        n for st in fs.listStatus(d)
+        if st.isDirectory() and "=" in (n := st.getPath().getName())
     ):
         parts.append(subdirs[0].split("=", 1)[0])
-        d = os.path.join(d, subdirs[0])
+        d = HPath(d, subdirs[0])
     cluster = [c for c in parts if c != _EPOCH]
     out = (
         spark.read.parquet(path)
@@ -962,11 +966,12 @@ def compact_stream_index(spark, path: str) -> int:
     tmp = path.rstrip("/") + ".compacting"
     out.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
     n = spark.read.parquet(tmp).count()
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    old = HPath(path.rstrip("/") + ".old")
+    fs.delete(old, True)
+    for src, dst in ((root, old), (HPath(tmp), root)):
+        if not fs.rename(src, dst):
+            raise OSError(f"compact_stream_index: could not rename {src} to {dst}")
+    fs.delete(old, True)
     return n
 
 
