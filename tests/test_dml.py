@@ -359,6 +359,39 @@ def test_connect_committed_ids_is_two_jobs(spark):
     assert rows_set(db.get_edge_table("K"), "source_id", "target_id") == {(0, 4)}
 
 
+@pytest.mark.parametrize("at", ["", " AS OF 1006"])
+def test_point_match_on_engine_chains_is_one_windowless_job(spark, at):
+    # the Database wrote the chain, so its valid intervals are disjoint and
+    # the interval filter alone leaves one version per id: no per-id window
+    db = _committed_people(_vdb(spark))
+    db.update_by_id("P", 2, {"age": 99})
+    text = f"MATCH (p:P){at} WHERE p.id = 2 SELECT p.id, p.age;"
+    df, jobs = _jobs(spark, lambda: db.sql(text))
+    rows, run = _jobs(spark, df.collect)
+    assert [tuple(r) for r in rows] == [(2, 99 if not at else 22)]
+    assert jobs + run == 1, (jobs, run)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "Exchange" not in plan, plan
+
+
+def test_point_connects_keep_the_edge_frame_bounded(spark, tmp_path):
+    db = Database(spark, path=str(tmp_path / "db"), versioning=True)
+    _committed_people(db)
+    db.bulk_connect("K", spark.createDataFrame(
+        [(0, 1), (1, 2)], "source_id long, target_id long"
+    ))
+    db.commit()
+    for i in range(20):
+        db.connect("K", ("P", i % 6), ("P", (i + 1) % 6))
+        db.get_edge_table("K")  # flushes the pending edge
+    sc = spark.sparkContext
+    cap = max(sc.defaultParallelism, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert db._edge("K").frame.rdd.getNumPartitions() <= cap
+    _, jobs = _jobs(spark, db.commit)
+    assert jobs == 1, jobs
+    assert db.get_edge_table("K").count() == 22
+
+
 def test_compact_is_eager(spark):
     db = Database(spark)
     db.register_node_table("R", spark.range(0, 200).withColumn("v", F.col("id") * 2))

@@ -5,6 +5,7 @@ docs/README_temporal_versioning.md:78-100 visibility rules."""
 
 import pytest
 
+from tundradb_spark.catalog import MAX_TS
 from tundradb_spark.database import Database
 from tundradb_spark.query import Query
 from tundradb_spark.temporal import MockClock
@@ -328,3 +329,96 @@ class TestVersionStorageLayout:
             .first()[0]
         )
         assert per_id == 1, f"some id's chain spans {per_id} files"
+
+
+def test_tx_only_read_of_engine_chain_picks_newest(tdb):
+    # a tx-time-only read leaves the valid axis "always visible": every
+    # version of the chain passes the filter, and the window picks one
+    db = tdb
+    db.create_schema("User", {"name": "string", "age": "long"})
+    db.create_node("User", name="alice", age=25)
+    db.update_by_id("User", 0, {"age": 30})
+    t_mid = db.clock_handle.advance(10)
+    db.update_by_id("User", 0, {"age": 35})
+    t_now = db.clock_handle.advance(10)
+    for tt, age in ((t_mid, 30), (t_now, 35)):
+        df = db.query(Query.from_("u:User").as_of_tx_time(tt))
+        assert [tuple(r) for r in df.select("`u.age`").collect()] == [(age,)]
+
+
+def test_backward_clock_keeps_valid_intervals_disjoint(tdb):
+    db, clock = tdb, tdb.clock_handle
+    db.create_schema("User", {"name": "string", "age": "long"})
+    db.create_node("User", name="a", age=1)  # @1001
+    db.create_node("User", name="b", age=2)  # @1002
+    clock.set(2000)
+    db.update_by_id("User", 0, {"age": 10})  # @2001
+    db.update_by_id("User", 1, {"age": 20})  # @2002
+    clock.set(1500)
+    db.update_by_id("User", 0, {"age": 30})  # clock says 1501
+    db.delete_node("User", 1)  # clock says 1502
+    rows = db.get_table_versions("User").collect()
+    assert all(r["valid_from"] <= r["valid_to"] for r in rows), rows
+    edges = {b for r in rows for b in (r["valid_from"], r["valid_to"])}
+    for vt in {e + d for e in edges for d in (-1, 0, 1)}:
+        for i in (0, 1):
+            live = [r for r in rows
+                    if r["id"] == i and r["valid_from"] <= vt < r["valid_to"]]
+            assert len(live) <= 1, (vt, live)
+    at = db.query(Query.from_("u:User").as_of_valid_time(1600))
+    assert rows_set(at, "u.id", "u.age") == {(0, 1), (1, 2)}
+    assert rows_set(db.get_table("User"), "id", "age") == {(0, 30)}
+
+
+def _history(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "id long, name string, valid_from long, valid_to long, tx_from long, "
+        "tx_to long, version_id long",
+    )
+
+
+@pytest.mark.parametrize("versioning", [False, True])
+def test_pre_versioned_history_survives_commit(spark, tmp_path, versioning):
+    # one id with versions a @[0,100) and b @[100,MAX): COMMIT writes every
+    # version and restore keeps the table versioned, even in a Database
+    # whose own tables are unversioned
+    path = str(tmp_path / "db")
+    db = Database(spark, path=path, versioning=versioning)
+    db.register_node_table("H", _history(spark, [
+        (0, "a", 0, 100, 0, MAX_TS, 0),
+        (0, "b", 100, MAX_TS, 0, MAX_TS, 1),
+    ]), pre_versioned=True)
+
+    def names(d, vt):
+        q = Query.from_("h:H").as_of_valid_time(vt)
+        return [r[0] for r in d.query(q).select("`h.name`").collect()]
+
+    assert names(db, 50) == ["a"]
+    db.commit()
+    assert names(Database(spark, path=path, versioning=versioning), 50) == ["a"]
+
+
+def test_overlapping_external_chain_reads_newest(spark, tmp_path):
+    # chains the Database did not write may overlap: v1 opens at 50 while
+    # v0 stays open, so both pass the interval filter and only the window
+    # makes each read return the newest version
+    path = str(tmp_path / "db")
+    db = Database(spark, path=path, versioning=True)
+    db.register_node_table("H", _history(spark, [
+        (0, "a", 0, MAX_TS, 0, MAX_TS, 0),
+        (0, "b", 50, MAX_TS, 0, MAX_TS, 1),
+        (1, "c", 0, MAX_TS, 0, MAX_TS, 0),
+    ]), pre_versioned=True)
+
+    def reads(d):
+        now = d.query(Query.from_("h:H"))
+        mid = d.query(Query.from_("h:H").as_of_valid_time(60))
+        old = d.query(Query.from_("h:H").as_of_valid_time(10))
+        return [sorted(tuple(r) for r in q.select("`h.id`", "`h.name`").collect())
+                for q in (now, mid, old)]
+
+    want = [[(0, "b"), (1, "c")], [(0, "b"), (1, "c")], [(0, "a"), (1, "c")]]
+    assert reads(db) == want
+    db.commit()
+    assert reads(Database(spark, path=path, versioning=True)) == want

@@ -57,6 +57,9 @@ class _Table:
     #: probe behind the point-selector fast path
     pending_ids: set[int] = field(default_factory=set)
     versioned: bool = False  # node tables only; edges stay unversioned
+    #: version chains this Database did not write (``pre_versioned``), whose
+    #: valid intervals may overlap: AS-OF reads keep the newest-version pick
+    external_chains: bool = False
     #: mutated since the last COMMIT/restore — the reference's dirty-shard
     #: tracking (src/storage/snapshot_manager.cpp: only dirty shards are
     #: rewritten per commit); clean tables re-point at the previous
@@ -135,12 +138,19 @@ class Database:
         return self.spark.createDataFrame([], self._physical_struct(t))
 
     def _materialize(self, t: _Table) -> DataFrame:
+        """The table's frame with its pending rows folded in.  The fold is
+        a lazy ``_checkpoint``, like every other mutation, so a run of
+        point writes and reads keeps one bounded frame instead of growing
+        a union branch (and its partitions) per flush."""
         if t.pending:
             struct = self._physical_struct(t)
             names = [f.name for f in struct.fields]
             rows = [Row(**{n: r.get(n) for n in names}) for r in t.pending]
             fresh = self.spark.createDataFrame(rows, struct)
-            t.frame = fresh if t.frame is None else t.frame.unionByName(fresh)
+            t.frame = (
+                fresh if t.frame is None
+                else _checkpoint(t.frame.unionByName(fresh))
+            )
             t.pending = []
             t.pending_ids.clear()
         return t.frame if t.frame is not None else self._empty(t)
@@ -164,11 +174,22 @@ class Database:
         tx_time: int | None = None,
     ) -> DataFrame:
         """Node table scan (reference Database::get_table,
-        src/main/database.cpp:153-172), honoring the temporal context."""
+        src/main/database.cpp:153-172), honoring the temporal context.
+
+        A versioned table resolves through ``temporal.resolve_as_of``.  The
+        chains this Database writes (create, update, delete, bulk insert,
+        registration without ``pre_versioned``) keep each id's valid
+        intervals disjoint, so a current read or one pinning
+        ``valid_time`` is the interval filter alone, with no per-id window;
+        a registered frame with duplicate ids therefore reads back every
+        row, as an unversioned table does.  Tx-time-only reads and
+        ``pre_versioned`` tables keep the newest-version window."""
         t = self._node(name)
         df = self._materialize(t)
         if t.versioned:
-            df = resolve_as_of(df, valid_time, tx_time)
+            df = resolve_as_of(
+                df, valid_time, tx_time, disjoint=not t.external_chains
+            )
         return df
 
     def get_table_versions(self, name: str) -> DataFrame:
@@ -285,7 +306,9 @@ class Database:
         ``pre_versioned=True`` accepts a frame that already carries the
         bitemporal version columns (valid_from/valid_to/tx_from/tx_to/
         version_id) — e.g. a version-history parquet written by a prior
-        commit; ``get_table`` then resolves AS-OF reads against it.
+        commit; ``get_table`` then resolves AS-OF reads against it, keeping
+        the newest-version pick because chains the Database did not write
+        may overlap.
         """
         self._writable()
         if name in self.catalog.node_schemas:
@@ -318,7 +341,10 @@ class Database:
             frame = stamp_initial_version(df, self.clock())
         else:
             frame = df
-        self._nodes[name] = _Table(struct=struct, frame=frame, versioned=versioned)
+        self._nodes[name] = _Table(
+            struct=struct, frame=frame, versioned=versioned,
+            external_chains=pre_versioned,
+        )
         return n_rows
 
     def register_edge_table(
@@ -578,16 +604,20 @@ class Database:
             return 0
         # reference closes ONLY valid_to on update (node_arena.cpp:272);
         # tx_to mutation is reserved for belief retraction
-        # (docs/README_temporal_versioning.md §3)
+        # (docs/README_temporal_versioning.md §3).  The head closes where
+        # the next version opens, never before the head opened, so the
+        # chain's valid intervals stay disjoint under any clock
+        # (temporal module docstring)
+        at = F.greatest(F.lit(ts).cast("long"), F.col("valid_from"))
         closed = marked.withColumn(
             "valid_to",
-            F.when(F.col("__head"), F.lit(ts)).otherwise(F.col("valid_to")),
+            F.when(F.col("__head"), at).otherwise(F.col("valid_to")),
         ).drop("__uid", "__head")
         fresh = marked.filter(F.col("__head"))
         for name, col in new_vals.items():
             fresh = fresh.withColumn(name, col)
         fresh = (
-            fresh.withColumn("valid_from", F.lit(ts).cast("long"))
+            fresh.withColumn("valid_from", at)
             .withColumn("valid_to", F.lit(MAX_TS).cast("long"))
             .withColumn("tx_from", F.lit(ts).cast("long"))
             .withColumn("tx_to", F.lit(MAX_TS).cast("long"))
@@ -727,10 +757,12 @@ class Database:
         if seen["n"] == 0:  # no-op: don't dirty the table (incremental COMMIT)
             return 0
         if self.versioning:
-            # logical delete = close the head's valid interval; past AS-OF
-            # reads keep seeing it (tx_to stays open — see update semantics)
+            # logical delete = close the head's valid interval, no earlier
+            # than it opened; past AS-OF reads keep seeing it (tx_to stays
+            # open — see update semantics)
+            at = F.greatest(F.lit(ts).cast("long"), F.col("valid_from"))
             t.frame = marked.withColumn(
-                "valid_to", F.when(head, F.lit(ts)).otherwise(F.col("valid_to"))
+                "valid_to", F.when(head, at).otherwise(F.col("valid_to"))
             ).drop("__did")
         else:
             t.frame = marked.filter(~head).drop("__did")

@@ -61,21 +61,27 @@ def commit_snapshot(db: "Database") -> str:
         return rel if rel.startswith("snapshots/") else f"snapshots/{prev}/{rel}"
 
     node_paths: dict[str, str] = {}
+    #: each versioned table's chain writer, "engine" or "external"
+    #: (``pre_versioned``): restore needs both to read AS OF correctly
+    chains: dict[str, str] = {}
     writes: list[tuple] = []  # (df, root-relative path) for dirty tables
     for name in db.catalog.node_schemas:
         t = db._nodes[name]
+        if t.versioned:
+            chains[name] = "external" if t.external_chains else "engine"
         carry = None if t.dirty else _prev_rel("nodes", name)
         if carry is not None:
             node_paths[name] = carry
             continue
-        df = db.get_table_versions(name) if db.versioning else db.get_table(name)
-        if db.versioning and getattr(db, "version_storage", "full") == "delta":
+        if not t.versioned:
+            df = db.get_table(name)
+        elif getattr(db, "version_storage", "full") == "delta":
             # sparse COW layout: store only the fields each version changed
             # (+ field mask) — temporal.deltify_versions; restore inverts it
             from tundradb_spark.temporal import deltify_versions
 
-            df = deltify_versions(df)
-        elif db.versioning:
+            df = deltify_versions(db.get_table_versions(name))
+        else:
             # full-row chains are written CLUSTERED by id: in-memory
             # version tables are union-appends (arrival order), and a
             # scattered chain defeats parquet's dictionary/RLE folding of
@@ -85,8 +91,10 @@ def commit_snapshot(db: "Database") -> str:
             # (README "Version storage" table).  One shuffle per dirty
             # versioned table buys delta-grade storage with full-row
             # read speed.
-            df = df.repartition(F.col("id")).sortWithinPartitions(
-                "id", "version_id"
+            df = (
+                db.get_table_versions(name)
+                .repartition(F.col("id"))
+                .sortWithinPartitions("id", "version_id")
             )
         rel = f"snapshots/{snap_id}/nodes/{name}"
         writes.append((df, rel))
@@ -130,6 +138,7 @@ def commit_snapshot(db: "Database") -> str:
         "version_storage": getattr(db, "version_storage", "full"),
         "catalog": db.catalog.to_manifest(),
         "nodes": node_paths,
+        "chains": chains,
         "edges": edge_paths,
     }
     os.makedirs(snap_dir, exist_ok=True)
@@ -247,17 +256,25 @@ def try_restore(db: "Database") -> bool:
     # it back); db.version_storage keeps the caller's choice for future
     # commits — the two may differ, e.g. migrating full -> delta
     snap_storage = manifest.get("version_storage", "full")
+    # a manifest without "chains" predates per-table markers: its tables
+    # follow the Database's flag, and their chains count as external, the
+    # reading that is right for any chain
+    chains = manifest.get("chains")
+    if chains is None:
+        chains = {n: "external" for n in manifest["nodes"] if db.versioning}
     db._nodes = {}
     db._edges = {}
     for name, rel in manifest["nodes"].items():
         schema = db.catalog.get_node_schema(name)
         df = db.spark.read.parquet(_resolve(rel))
-        if db.versioning and snap_storage == "delta":
+        versioned = name in chains
+        if versioned and snap_storage == "delta":
             from tundradb_spark.temporal import undeltify_versions
 
             df = undeltify_versions(df)
         db._nodes[name] = _Table(
-            struct=schema.struct, frame=df, versioned=db.versioning, dirty=False
+            struct=schema.struct, frame=df, versioned=versioned,
+            external_chains=chains.get(name) == "external", dirty=False,
         )
     for etype, rel in manifest["edges"].items():
         es = db.catalog.get_or_create_edge_schema(etype)

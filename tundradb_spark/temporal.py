@@ -9,9 +9,22 @@ chain of versions stamped ``valid_from/valid_to`` (application time) and
 among visible versions the newest wins. ``MAX_TS`` marks an open interval
 ("now"), matching the reference's UINT64_MAX sentinel.
 
-Spark realization: versions are plain rows; AS-OF is an interval filter plus
-a per-id newest-version pick. The filter pushes down to the Parquet scan; the
-pick is one window (or a groupBy-max semi-join at extreme scale).
+Spark realization: versions are plain rows; AS-OF is an interval filter plus,
+where more than one version of an id can pass it, a per-id newest-version
+pick. The filter pushes down to the Parquet scan; the pick is one window,
+which costs a hash exchange and a sort.
+
+The pick is skipped for chains whose valid intervals are disjoint per id.
+The ``Database`` keeps that invariant for every chain it writes, as the
+reference's writers do (node_arena.cpp:272): an update closes the head's
+``valid_to`` and opens the next version's ``valid_from`` at the same
+instant, and a delete closes the head, each stamped
+``greatest(now, head.valid_from)`` so a clock that steps backwards cannot
+open a version inside an older one. Then a current read (open intervals
+only) or one that pins the valid time sees at most one version per id, and
+the interval filter alone is the answer. A tx-time-only read leaves the
+valid axis "always visible", so it still needs the window, and so does a
+table registered ``pre_versioned``, whose chains the Database did not write.
 """
 
 from __future__ import annotations
@@ -64,8 +77,13 @@ def resolve_as_of(
     tx_time: int | None = None,
     id_col: str = "id",
     keep_version_cols: bool = False,
+    disjoint: bool = False,
 ) -> DataFrame:
     """Pick each id's newest version visible at (valid_time, tx_time).
+
+    ``disjoint=True`` declares that each id's valid intervals never
+    overlap (a chain the Database wrote; see the module docstring): a read
+    that is current or pins ``valid_time`` then skips the window.
 
     ``None`` means "now": per the reference's find_visible_version
     (include/query/temporal_context.hpp:112-141), a UINT64_MAX axis is
@@ -87,13 +105,14 @@ def resolve_as_of(
     if vt is None and tt is None:
         cond = is_current()
 
-    visible = df.filter(cond)
-    w = Window.partitionBy(id_col).orderBy(F.col("version_id").desc())
-    out = (
-        visible.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    out = df.filter(cond)
+    if not disjoint or (vt is None and tt is not None):
+        w = Window.partitionBy(id_col).orderBy(F.col("version_id").desc())
+        out = (
+            out.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
     if not keep_version_cols:
         out = out.drop(*VERSION_COLS)
     return out
